@@ -223,8 +223,12 @@ def blocklist_flags(
     urls-distinct subtree on the two join sides and BROADCAST the
     survivor set (corpus-sized at crawl scale: a plan that cannot run at
     100 TB; the blocklist side is the only thing that may broadcast).
-    Exactly the rows of the old form: one row per distinct url,
-    ``blocked`` boolean, never NULL.
+    One row per distinct url, a NULL url included as one row;
+    ``blocked`` is a boolean, never NULL, and is True exactly when
+    :func:`blocklist_filter` with the same arguments drops the url.  For
+    a NULL url that means: blocked iff ``patterns`` is non-empty (the
+    filter's ``~rlike`` gate drops a NULL predicate), never by a domain
+    (its host is NULL, which the anti-joins keep).
     """
     urls = pages.select(url_col).distinct()
     u = F.col(url_col)

@@ -159,10 +159,13 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", n: int = 3,
-                      n_hashes: int = 16, bands: int = 4) -> DataFrame:
-    """Candidate near-dup pairs (doc_a < doc_b) sharing ≥1 LSH band bucket.
+def _lsh_pairs_frame(docs: DataFrame, id_col: str, text_col: str, n: int,
+                     n_hashes: int, bands: int) -> DataFrame:
+    """(doc_a, doc_b) candidate pairs without the presentation sort — the
+    shared core of :func:`minhash_lsh_pairs` and
+    :func:`near_dedup_keep_list` (components need no pair order, and a
+    sort there survives into the component edge plan as a range-sample
+    job plus a shuffle).
 
     The signature frame is materialized once (``localCheckpoint``) before
     the band self-join: a self-join's two sides cannot share a plan
@@ -204,8 +207,19 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
         .filter(F.col("a.doc") < F.col("b.doc"))
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
-        .orderBy("doc_a", "doc_b")
     )
+
+
+def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
+                      text_col: str = "text", n: int = 3,
+                      n_hashes: int = 16, bands: int = 4) -> DataFrame:
+    """Candidate near-dup pairs (doc_a < doc_b) sharing ≥1 LSH band bucket,
+    ordered by (doc_a, doc_b) for presentation only — see
+    :func:`_lsh_pairs_frame` for the physical shape.
+    """
+    return _lsh_pairs_frame(
+        docs, id_col, text_col, n, n_hashes, bands
+    ).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -476,11 +490,16 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     output, which depends only on gram-string equality — so the
     engine-portable md5 contract does not apply and the JVM-native
     ``xxhash64`` is used (r7: ~2× cheaper than the md5→conv chain on
-    this pass; the DuckDB oracle twin keeps its own md5 internally and
-    the outputs agree because both hashes are collision-free on real
-    corpora — a 64-bit birthday collision needs ~10^9 distinct grams
-    in one corpus to reach even ~1e-2, and a collision only matters at
-    all when it fakes a cross-document gram).  The token array is
+    this pass; the DuckDB oracle twin keeps its own md5 internally).
+    The two agree only while xxhash64 is collision-free, which is a
+    property of the distinct-gram count n, not of "real corpora": the
+    expected number of colliding gram pairs is ~n²/2^65 — ~3e-4 at
+    n = 10^8 (the oracle-checked tables are far below that), ~0.03 at
+    10^9, ~3 at 10^10, and 10^4–10^6 at the 10^12–10^13 distinct grams
+    of a 100 TB corpus.  A collision matters only when it fakes a
+    cross-document gram (two grams whose merged document count reaches
+    ``min_docs``), so at that scale a few spans are false positives
+    and the output is no longer exactly the oracle's.  The token array is
     projected into its own column first so the split runs once per row
     instead of once per mention in the k-gram zip_with chain.
     """
@@ -495,10 +514,11 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     # materialize the slim triples once: the df-election and the probe
     # side both consume positions, and without the cut the tokenize +
     # shingle + hash pass ran TWICE (r7 A/B at sf1.0: 3.4 s → 2.3 s, and
-    # every reps-pair improved).  The checkpoint is (doc, pos, h) ints —
-    # ~2% of corpus text bytes, the same bounded-intermediate posture as
-    # dsir's gram stream; recomputing would re-read and re-tokenize the
-    # full text instead.
+    # every reps-pair improved).  The checkpoint is one (doc, pos, h) row
+    # per token position — ~3-4× the corpus text bytes (a few-byte token
+    # becomes a 20+-byte row), not a small fraction of it — and, being a
+    # ``localCheckpoint``, it has no lineage: losing an executor that
+    # holds a block fails the job instead of recomputing the block.
     positions = toks.select(
         "doc", F.posexplode(hashes).alias("pos", "h")
     ).localCheckpoint(eager=True)
@@ -599,18 +619,28 @@ def excise_spans(docs: DataFrame, spans: DataFrame,
 #
 #   label(v) ← min(label(v), min over neighbors u of label(u))
 #
-# Each round is one 8-byte-key shuffle (join + groupBy min); labels only
-# ever decrease, so "no row's label changed" is the fixpoint, detected by
-# a short-circuit changed-row count that works for any orderable id type
-# (bigint OR string). Rounds needed = graph diameter. For near-dup graphs that is tiny (a dup
-# cluster's pairs all share LSH buckets, so clusters are dense and
-# shallow — diameter 2-4 in practice), which makes propagation CHEAPER
-# than the O(log²n)-round star-contraction algorithms (Kiveris et al.,
-# "Connected Components in MapReduce and Beyond") for this workload; for
-# arbitrary long-chain graphs prefer that alternation instead.
-# ``localCheckpoint`` cuts the lineage each round so the plan does not
-# grow exponentially with iterations (the classic iterative-DataFrame
-# trap).
+# The symmetric edge list is not deduplicated: min is insensitive to
+# repeated offers, and the candidate operators already emit distinct
+# pairs, so a distinct would be a shuffle that removes nothing.  The
+# first round is folded into the initial labels: one groupBy(src) over
+# the edge list gives label(v) = least(v, min neighbor).
+# Every later round is ONE join and ONE aggregation: the neighbors'
+# offers (edges ⋈ labels) unioned with each vertex's own label, grouped
+# by doc — min(offer) is the new label and the own row's value rides in
+# the same group as the previous label.  Labels only ever decrease, so
+# "no row's label changed" is the fixpoint; the changed-row count is an
+# ``observe`` on the aggregation, read off the ``localCheckpoint`` action
+# that materializes the round (no separate count job), and it works for
+# any orderable id type (bigint OR string).  Rounds needed = graph
+# diameter, minus the folded one, plus one confirming round.  For
+# near-dup graphs that is tiny (a dup cluster's pairs all share LSH
+# buckets, so clusters are dense and shallow — diameter 2-4 in
+# practice), which makes propagation CHEAPER than the O(log²n)-round
+# star-contraction algorithms (Kiveris et al., "Connected Components in
+# MapReduce and Beyond") for this workload; for arbitrary long-chain
+# graphs prefer that alternation instead.  ``localCheckpoint`` cuts the
+# lineage each round so the plan does not grow exponentially with
+# iterations (the classic iterative-DataFrame trap).
 
 
 def connected_components(pairs: DataFrame, a_col: str = "doc_a",
@@ -618,6 +648,11 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                          max_iter: int = 25) -> DataFrame:
     """(doc, component) for every vertex in ``pairs``; component = the
     smallest doc id transitively connected to it.
+
+    The first propagation round is folded into the initial labels; each
+    of the at most ``max_iter`` further rounds is one join plus one
+    aggregation, and its changed-label count is observed inside the
+    action that materializes it.  Pair order is irrelevant.
 
     Raises RuntimeError if ``max_iter`` rounds don't converge (a
     diameter-25 dup graph means the candidate generator is broken).
@@ -627,48 +662,46 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
         .union(
             pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
         )
-        .distinct()
         .localCheckpoint(eager=True)
     )
     labels = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .select("doc", F.col("doc").alias("component"))
-        .localCheckpoint(eager=True)
+        edges.groupBy("src")
+        .agg(F.min("dst").alias("nbr_min"))
+        .select(
+            F.col("src").alias("doc"),
+            F.least("src", "nbr_min").alias("component"),
+        )
     )
-    # Fixpoint test = COUNT of rows whose label changed this round — type
-    # agnostic (string/bigint/any orderable id; a numeric label-sum
-    # accumulator silently returns NULL==NULL on string ids and would
-    # exit after one round), exact (no overflow aliasing), and cheap: the
-    # filter runs over the already-materialized localCheckpoint, and
-    # ``limit(1)`` short-circuits the scan the moment one changed row is
-    # seen, so converged rounds pay a scan and progressing rounds pay
-    # almost nothing.
     for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["src"] == labels["doc"])
-            .groupBy(F.col("dst").alias("doc"))
-            .agg(F.min("component").alias("nbr_min"))
+        offers = edges.join(labels, edges["src"] == labels["doc"]).select(
+            F.col("dst").alias("doc"), "component", F.lit(False).alias("own")
         )
         stepped = (
-            labels.join(neighbor_min, "doc", "left")
-            .select(
-                "doc",
-                F.col("component").alias("prev_component"),
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_min"), F.col("component")),
-                ).alias("component"),
+            offers.unionByName(labels.withColumn("own", F.lit(True)))
+            .groupBy("doc")
+            .agg(
+                F.min("component").alias("component"),
+                F.max(F.when(F.col("own"), F.col("component"))).alias(
+                    "prev_component"
+                ),
             )
-            .localCheckpoint(eager=True)
         )
-        labels = stepped.select("doc", "component")
-        changed = (
-            stepped.filter(F.col("component") != F.col("prev_component"))
-            .limit(1)
-            .count()
-        )
-        if changed == 0:
+        # the observed node sits on the aggregation's output, in the
+        # checkpoint's result stage: a retried task's update counts once.
+        # The metric is read from the QueryExecution the checkpoint ran,
+        # not through an ``Observation`` object: registering one leaves
+        # an unserializable ObservationManager on the session, after
+        # which any Spark ML model holding a training summary fails to
+        # ship in a task closure.
+        step = stepped.observe(
+            "changed",
+            F.count_if(F.col("component") != F.col("prev_component")).alias(
+                "n"
+            ),
+        ).select("doc", "component")
+        labels = step.localCheckpoint(eager=True)
+        metrics = step._jdf.queryExecution().observedMetrics()
+        if metrics.apply("changed").getLong(0) == 0:
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
@@ -687,9 +720,13 @@ def near_dedup_keep_list(docs: DataFrame, id_col: str = "doc_id",
     near-duplicate never enter the pair graph and are implicitly kept —
     at scale this matters: the component computation runs on the pair
     graph (tiny: only near-dup docs), never the full corpus.
+
+    Components read the unsorted pair core (pair order is presentation
+    only); the one sort is the keep-list's own ``orderBy``.
     """
-    pairs = minhash_lsh_pairs(docs, id_col, text_col, n, n_hashes, bands)
-    comp = connected_components(pairs)
+    comp = connected_components(
+        _lsh_pairs_frame(docs, id_col, text_col, n, n_hashes, bands)
+    )
     return comp.select(
         F.col("doc").alias(id_col),
         "component",

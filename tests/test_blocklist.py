@@ -77,6 +77,62 @@ def test_blocklist_flags_agree_with_filter(spark):
     assert all(isinstance(b, bool) for b in flags.values())
 
 
+def test_blocklist_flags_property_null_urls_and_empty_lists(spark):
+    """Property: ``blocked`` is exactly "blocklist_filter drops this url",
+    over random urls that include NULL and unparseable ones, under absent,
+    empty and non-empty blocklists and pattern lists.  One row per
+    distinct url (NULL included), never a NULL flag; a NULL url is
+    blocked iff any pattern is given (the filter's ~rlike gate drops
+    NULL) and never by a domain."""
+    import itertools
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    label = st.sampled_from(["a", "ads", "example", "com", "net"])
+    host = st.lists(label, min_size=1, max_size=4).map(".".join)
+    url = st.one_of(
+        st.none(),
+        st.just("not a url"),
+        st.tuples(host, st.sampled_from(["", "c/", "x"])).map(
+            lambda hp: f"https://{hp[0]}/{hp[1]}"
+        ),
+    )
+    urls: list = []
+
+    @settings(max_examples=60, deadline=None)
+    @given(st.lists(url, min_size=1, max_size=6))
+    def collect(drawn):
+        urls.extend(drawn)
+
+    collect()
+    # the flag is per-row, so every drawn url shares one job pair per
+    # (blocklist, patterns) configuration
+    pages = spark.createDataFrame([(u,) for u in urls], "url string")
+    domain_lists = (None, [], ["ads.example", "net"])
+    pattern_lists = ([], ["/c/", r"^https://a\."])
+    for bl, pats in itertools.product(domain_lists, pattern_lists):
+        bl_df = None if bl is None else spark.createDataFrame(
+            [(d,) for d in bl], "domain string"
+        )
+        flags = blocklist_flags(
+            pages, bl_df, patterns=pats, max_labels=4
+        ).collect()
+        survivors = {
+            r["url"]
+            for r in blocklist_filter(
+                pages, bl_df, patterns=pats, max_labels=4
+            ).collect()
+        }
+        assert len(flags) == len(set(urls)), (bl, pats)
+        assert {r["url"] for r in flags} == set(urls), (bl, pats)
+        for r in flags:
+            assert isinstance(r["blocked"], bool), (bl, pats, r)
+            assert r["blocked"] is (r["url"] not in survivors), (bl, pats, r)
+            if r["url"] is None:
+                assert r["blocked"] is bool(pats), (bl, pats)
+
+
 def test_blocklist_filter_plan_broadcast_anti_no_page_shuffle(spark):
     """100 TB posture pin: every domain probe is a broadcast hash LEFT
     ANTI join; the pages side (which carries text) crosses NO shuffle

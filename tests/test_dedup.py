@@ -146,6 +146,84 @@ def test_connected_components_matches_union_find(spark):
     assert got == _uf_components(pairs)
 
 
+def test_connected_components_job_budget(spark):
+    """Each round is one join + one aggregation whose changed-label count
+    is observed inside the checkpoint action that materializes it, and
+    the first round is folded into the initial labels.  Measured on this
+    fixture (chain 1-5, triangle, star, pair; 4 rounds): 23 jobs per
+    call; the join + aggregate + join round with a separate count action
+    ran 50.  AQE submits each query stage as its own job, so the count
+    is of jobs, not rounds."""
+    from gemini_ocr_batch_spark.operators.dedup import connected_components
+
+    pairs = [(1, 2), (2, 3), (3, 4), (4, 5),
+             (10, 11), (11, 12), (10, 12),
+             (20, 21), (20, 22), (20, 23),
+             (30, 31)]
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    sc = spark.sparkContext
+    group = "test_connected_components_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        got = {
+            r["doc"]: r["component"]
+            for r in connected_components(df).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == _uf_components(pairs)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 23
+
+
+def test_connected_components_max_iter_bounds_rounds(spark):
+    """``max_iter`` bounds the propagation rounds after the folded first
+    one: a 12-vertex chain (diameter 11) cannot settle in 3, while a
+    single pair is settled by its initial labels and only needs the one
+    confirming round."""
+    from gemini_ocr_batch_spark.operators.dedup import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        connected_components(chain, max_iter=3)
+    pair = spark.createDataFrame([(7, 3)], "doc_a long, doc_b long")
+    got = {
+        r["doc"]: r["component"]
+        for r in connected_components(pair, max_iter=1).collect()
+    }
+    assert got == {3: 3, 7: 3}
+
+
+def test_connected_components_empty_pairs(spark):
+    """No pairs: the observed changed-count of an empty round must still
+    arrive (a missing one would block), and the result is empty."""
+    from gemini_ocr_batch_spark.operators.dedup import connected_components
+
+    empty = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert connected_components(empty).collect() == []
+
+
+def test_connected_components_leave_session_usable_for_ml(spark):
+    """Regression: reading the round's changed-count through a
+    ``pyspark.sql.Observation`` left an unserializable ObservationManager
+    on the session, and every later Spark ML model holding a training
+    summary then failed to serialize in ``transform``."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import Vectors
+
+    from gemini_ocr_batch_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
+    assert len(connected_components(pairs).collect()) == 3
+    train = spark.createDataFrame(
+        [(float(i % 2), Vectors.dense([float(i % 2), 1.0])) for i in range(8)],
+        ["label", "features"],
+    )
+    model = LogisticRegression(maxIter=5).fit(train)
+    assert len(model.transform(train).collect()) == 8
+
+
 def test_connected_components_string_ids(spark):
     """Regression (r4 ADVICE): string doc ids. The old decimal-sum
     fixpoint cast string ids to NULL, so the sum was None every round and
