@@ -317,6 +317,18 @@ class ParquetCheckpointStore:
         # would OOM the driver
         return pages.join(done, on=KEY, how="left_anti")
 
+    def open_attempts(self, spark: SparkSession) -> DataFrame | None:
+        """(url, warc_ts, attempts) of the keys a crashed or budget-cut
+        run left open (status neither success nor dead); None for a fresh
+        store, so the caller plans no join against an empty relation (the
+        same short-circuit as ``pending``)."""
+        manifest = self._manifest()
+        if manifest is None or not manifest["buckets"]:
+            return None
+        return self._read_buckets(spark, manifest).filter(
+            ~F.col("status").isin(STATUS_SUCCESS, STATUS_DEAD)
+        ).select(*KEY, "attempts")
+
     def _merge_bucketed(self, delta: DataFrame, combine) -> None:
         """Shared bucket-pruned MERGE skeleton.
 
@@ -732,6 +744,11 @@ class IcebergCheckpointStore:
             F.col("status").isin(STATUS_SUCCESS, STATUS_DEAD)
         ).select(*KEY)
         return pages.join(done, on=KEY, how="left_anti")
+
+    def open_attempts(self, spark: SparkSession | None = None) -> DataFrame:
+        return self.read().filter(
+            ~F.col("status").isin(STATUS_SUCCESS, STATUS_DEAD)
+        ).select(*KEY, "attempts")
 
     def merge_results(self, extracted: DataFrame) -> None:
         extracted.select("url", "warc_ts", "error_type").createOrReplaceTempView(

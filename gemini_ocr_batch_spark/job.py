@@ -1,25 +1,30 @@
-"""The end-to-end extraction job with retry/dead-letter loop.
+"""The end-to-end extraction job with retry/dead-letter.
 
 The reference's whole orchestration (reference: src/flow.py:423-498 wave
 loop + scan + submit + poll + process) collapses into ONE DataFrame DAG per
-pass, re-run at most ``max_retries`` times by a driver loop (SURVEY.md
-§3.4: with a pure extractor, wave execution degenerates to the retry loop):
+call (SURVEY.md §3.4: with a pure extractor, wave execution degenerates to
+the retry loop, and the retry loop runs inside the kernel's tasks):
 
-    pages ⟕̸ checkpoint → salt-by-size repartition → mapInPandas(extract)
-          → ONE bulk write, hive-partitioned by (run_id, pass_num, is_ok)
-          → checkpoint MERGE + lineage + failure log from column-pruned
-            reads of that same parquet
+    pages ⟕̸ checkpoint [⟕ open keys' prior attempts → attempt budget]
+          → salt-by-size repartition (only for a coarse source)
+          → mapInArrow(extract, re-extracting a failed row in the same task
+            while its budget lasts; one row per attempt)
+          → ONE bulk write, hive-partitioned by (attempt, is_ok)
+          → per attempt k, in order: lineage, promote to pass_num=base+k,
+            checkpoint MERGE, failure log — from column-pruned reads of
+            that same parquet
 
 Physical design (why one write): the kernel output is written exactly once
-to ``extracted_all/run_id=R/pass_num=N/is_ok=…``. Everything downstream —
-the success view, the failure log, the per-partition lineage rows, the
-checkpoint delta — is a *metadata-cheap* read of that parquet (partition
-pruning on is_ok, column pruning to the few small columns each consumer
-needs). No ``persist()``: caching the bulk map output scales badly (block-
-manager contention locally; impossible at 10^12 rows on a cluster), while
-re-reading pruned columns from parquet is nearly free. The kernel job
-itself doubles as the frontier-emptiness probe: an empty pass writes zero
-rows and the loop exits — no separate anti-join pre-scan.
+and each attempt dir is promoted to ``extracted_all/run_id=R/pass_num=N/
+is_ok=…``, one pass dir per attempt.
+Everything downstream — the success view, the failure log, the
+per-partition lineage rows, the checkpoint delta — is a *metadata-cheap*
+read of that parquet (partition pruning on is_ok, column pruning to the
+few small columns each consumer needs). No ``persist()``: caching the bulk
+map output scales badly (block-manager contention locally; impossible at
+10^12 rows on a cluster), while re-reading pruned columns from parquet is
+nearly free. An empty frontier writes no attempt dir and promotes nothing
+— no separate anti-join pre-scan.
 
 Idempotence: rerunning the job is a no-op once every key is success/dead —
 the anti-join (checkpoint.pending) returns an empty frontier, exactly like
@@ -42,7 +47,7 @@ from gemini_ocr_batch_spark.checkpoint import (
     ParquetCheckpointStore,
 )
 from gemini_ocr_batch_spark.lineage import lineage_rows, lineage_rows_local
-from gemini_ocr_batch_spark.operators.extract import extract_pages
+from gemini_ocr_batch_spark.operators.extract import extract_attempts
 from gemini_ocr_batch_spark.schemas import (
     EXTRACTED_SCHEMA,
     EXTRACTED_USER_COLUMNS,
@@ -241,13 +246,17 @@ def run_extraction_job(
 ) -> JobResult:
     """Run extraction to completion (every key success or dead).
 
+    A key gets at most ``max_retries`` attempts, all inside the one kernel
+    job; attempt k of this call lands in pass dir ``base_pass + k``.
+
     Layout under ``out_dir``:
-      extracted_all/  — ALL kernel output, written once per pass, under
+      extracted_all/  — ALL kernel output, one pass dir per attempt, under
                         run_id=R/pass_num=N/is_ok=… hive paths; pass dirs
                         are immutable once promoted and carry a _MERGED
                         marker once their keys are in the checkpoint
-      _staging/       — per-pass scratch (atomic-renamed into
-                        extracted_all when non-empty; wiped on job start)
+      _staging/       — the call's one write, attempt=k/is_ok=… (each
+                        attempt dir atomic-renamed into extracted_all;
+                        leftovers of a crashed call wiped on job start)
       checkpoint/     — snapshot store (atomic pointer swap)
       lineage/        — per-partition metrics, append-only
       failures/       — typed failure rows, append-only (reference:
@@ -284,62 +293,77 @@ def run_extraction_job(
         if d.startswith("pass_num=")
     ]
     base_pass = max(existing) + 1 if existing else 0
-    for pass_num in range(base_pass, base_pass + max_retries):
-        frontier = store.pending(pages)
-        if track_inflight:
-            # inflight visibility (reference: src/prefect_state.py:335-346);
-            # costs one snapshot rewrite per pass, so opt-in. Key columns
-            # only — the blob never enters the checkpoint job.
-            store.mark_running(frontier.select("url", "warc_ts"))
-        # --- the one bulk job: kernel + single partitioned write ---
-        # Staged OUTSIDE extracted_all, promoted by atomic rename only when
-        # non-empty: a fixed-run_id rerun whose frontier is already empty
-        # (checkpoint advanced) must never overwrite a prior pass dir with
-        # an empty result — that was a data-loss bug, not a no-op.
+    frontier = store.pending(pages)
+    # prior attempts are read (their snapshot files bound) before
+    # mark_running stamps the frontier
+    open_keys = store.open_attempts(spark)
+    if track_inflight:
+        # inflight visibility (reference: src/prefect_state.py:335-346);
+        # costs one snapshot rewrite per run, so opt-in. Key columns
+        # only — the blob never enters the checkpoint job.
+        store.mark_running(frontier.select("url", "warc_ts"))
+    # each key's attempts this run: what a pass-per-attempt loop would give
+    # it — up to max_retries, cut short once the store dead-letters it
+    # (store.max_retries counting prior attempts), but at least one while
+    # max_retries allows any. Kernels are deterministic, so a retry of the
+    # same bytes fails identically: a failed row's re-attempts cost only
+    # its own parse, in the task that failed it. Task-level faults (a lost
+    # executor or worker) are Spark's task retry.
+    prior = F.lit(0)
+    if open_keys is not None:  # a fresh store has no prior attempts
+        frontier = frontier.join(
+            open_keys.withColumnRenamed("attempts", "_prior"),
+            on=["url", "warc_ts"], how="left",
+        )
+        prior = F.coalesce(F.col("_prior"), F.lit(0))
+    budget = F.least(
+        F.lit(max_retries), F.greatest(F.lit(1), store.max_retries - prior)
+    )
+    # --- the one bulk job: kernel (every attempt) + one partitioned write.
+    # Staged OUTSIDE extracted_all; each attempt=k dir is promoted by
+    # atomic rename to pass_num=base_pass+k. An empty frontier writes no
+    # attempt dir, so nothing is promoted and no prior pass dir is touched.
+    tmp_path = os.path.join(staging_root, f"{run_id}-{uuid.uuid4().hex[:8]}")
+    t_ph = time.perf_counter()
+    (
+        extract_attempts(frontier, budget, n_partitions=n_partitions)
+        .withColumn("is_ok", F.col("error_type").isNull())
+        .write.mode("overwrite")
+        .partitionBy("attempt", "is_ok")
+        .parquet(tmp_path)
+    )
+    t_ph = result._phase("extract_write", t_ph)
+    attempts = sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(tmp_path) if d.startswith("attempt=")
+    )
+    # --- per attempt dir, in order: lineage, promote, MERGE, failure log
+    for k in attempts:
+        pass_num = base_pass + k
+        att_path = os.path.join(tmp_path, f"attempt={k}")
         final_path = os.path.join(
             all_path, f"run_id={run_id}", f"pass_num={pass_num}"
         )
-        tmp_path = os.path.join(
-            staging_root, f"{run_id}-{pass_num}-{uuid.uuid4().hex[:8]}"
-        )
-        t_ph = time.perf_counter()
-        extracted = extract_pages(frontier, n_partitions=n_partitions)
-        (
-            extracted.withColumn("is_ok", F.col("error_type").isNull())
-            .write.mode("overwrite")
-            .partitionBy("is_ok")
-            .parquet(tmp_path)
-        )
-        t_ph = result._phase("extract_write", t_ph)
-        # --- cheap derived work over the pass we just wrote ---
-        # one tiny aggregate gives lineage rows AND the pass accounting.
-        # Driver-side (pyarrow) when the staged dir is a local fs — each
-        # avoided Spark job saves ~0.5 s of fixed scheduling/commit latency
-        # per pass; on a cluster (object storage) the Spark path runs.
-        local_fs = os.path.isdir(tmp_path)
-        lin_rows = (
-            lineage_rows_local(tmp_path, run_id, pass_num)
-            if local_fs
-            else None
-        )
-        if lin_rows is None:  # remote fs, or pass too big for one driver
-            staged = spark.read.schema(STAGED_SCHEMA).parquet(tmp_path)
+        # one tiny aggregate gives lineage rows AND the pass accounting,
+        # driver-side (pyarrow): each avoided Spark job saves ~0.5 s of
+        # fixed scheduling/commit latency per pass
+        lin_rows = lineage_rows_local(att_path, run_id, pass_num)
+        if lin_rows is None:  # pass too big for one driver
+            staged = spark.read.schema(STAGED_SCHEMA).parquet(att_path)
             lin_rows = lineage_rows(staged, run_id, pass_num).collect()
         n_total = sum(int(r["row_count"]) for r in lin_rows)
         n_bad = sum(int(r["failure_count"]) for r in lin_rows)
+        _append_lineage_rows(lin_rows, lineage_path, run_id, pass_num)
         t_ph = result._phase("lineage", t_ph)
-        if n_total == 0:
-            # empty frontier — the job is complete; nothing to promote
-            shutil.rmtree(tmp_path, ignore_errors=True)
-            break
-        if lin_rows:
-            _append_lineage_rows(lin_rows, lineage_path, run_id, pass_num)
         # promote: atomic rename into the readable layout. Pass dirs are
         # immutable once promoted (base_pass skips existing ones; reconcile
         # merged any unmarked ones), so the target cannot exist — os.rename
-        # fails loudly rather than ever replacing extracted data.
+        # fails loudly rather than ever replacing extracted data. The
+        # write committed every attempt dir at once; each keeps a
+        # _SUCCESS marker as a pass dir always had.
+        _touch(os.path.join(att_path, "_SUCCESS"))
         os.makedirs(os.path.dirname(final_path), exist_ok=True)
-        os.rename(tmp_path, final_path)
+        os.rename(att_path, final_path)
         # checkpoint MERGE reads only the 3 key/status columns; driver-side
         # fast path for small local passes, Spark MERGE otherwise
         if not store.merge_results_local(final_path):
@@ -348,12 +372,11 @@ def run_extraction_job(
         _touch(os.path.join(final_path, _MERGED))
         t_ph = result._phase("merge", t_ph)
         if n_bad:
-            # attempt index within THIS run (pass_num is offset by
-            # base_pass on fixed-run_id reruns)
-            attempt = pass_num - base_pass + 1
-            if local_fs and n_total <= _LOCAL_FAST_PATH_MAX_ROWS:
+            # the failure log counts attempts within this call (k + 1),
+            # not pass_num, which a fixed-run_id rerun offsets by base_pass
+            if n_total <= _LOCAL_FAST_PATH_MAX_ROWS:
                 _append_failures_local(
-                    final_path, failures_path, run_id, pass_num, attempt
+                    final_path, failures_path, run_id, pass_num, k + 1
                 )
             else:
                 # failure log: partition-pruned (is_ok=false) + column-pruned
@@ -364,7 +387,7 @@ def run_extraction_job(
                     "error_type",
                     "error_message",
                     "input_sample",
-                    F.lit(attempt).cast("int").alias("attempts"),
+                    F.lit(k + 1).cast("int").alias("attempts"),
                     F.lit(run_id).alias("run_id"),
                     F.current_timestamp().alias("created_at"),
                 ).coalesce(8).write.mode("append").parquet(failures_path)
@@ -373,11 +396,6 @@ def run_extraction_job(
         result.extracted_rows += n_total
         result.success_rows += n_total - n_bad
         result.failed_rows += n_bad
-        if n_bad == 0:
-            break
-        # deterministic kernels: a retry of the same bytes fails identically,
-        # so the loop exists for transient task-level faults; the anti-join
-        # (success ∪ dead excluded) shrinks the frontier every pass.
     shutil.rmtree(staging_root, ignore_errors=True)
     store.vacuum()
     result.wall_sec = time.perf_counter() - t_start

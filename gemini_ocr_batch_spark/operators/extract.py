@@ -3,8 +3,10 @@
 This is the Spark-side half of the reference's per-document map (reference:
 src/batch_builder.py:23-43 request build + src/results.py:81-230 decode/
 validate). The remote LLM is replaced by the deterministic kernels; the
-plumbing is ``mapInPandas`` over Arrow batches — no per-row Python at the
-DataFrame layer (BASELINE.json input_hint).
+plumbing is ``mapInArrow`` over Arrow batches (``mapInPandas`` twin kept) —
+no per-row Python at the DataFrame layer (BASELINE.json input_hint).
+``extract_attempts`` is the job's variant: it retries a failed row inside
+the same task, up to a per-row attempt budget.
 
 Skew handling (north_rule: "salted repartitioning by byte-size buckets"):
 giant blobs make per-task work heavy-tailed. ``salt_by_size`` spreads rows
@@ -18,14 +20,21 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gemini_ocr_batch_spark import EXTRACTOR_VERSION
 from gemini_ocr_batch_spark.schemas import EXTRACTED_SCHEMA
 
 # bytes of raw input kept on failure rows for forensics
 _SAMPLE_BYTES = 240
+
+# extract_attempts' output: the kernel row plus its 0-based attempt index
+ATTEMPTS_SCHEMA = T.StructType(
+    list(EXTRACTED_SCHEMA.fields)
+    + [T.StructField("attempt", T.IntegerType(), False)]
+)
 
 
 def salt_by_size(pages: DataFrame, n_partitions: int, n_salt: int = 64) -> DataFrame:
@@ -52,13 +61,10 @@ def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     are emitted per row for the lineage aggregation (north_rule:
     per-partition lineage rows).
     """
-    # late imports: executed on the Python worker
-    from pyspark import TaskContext
-
+    # late import: executed on the Python worker
     from gemini_ocr_batch_spark.kernels import extract_document_detail
 
-    tc = TaskContext.get()
-    pid = tc.partitionId() if tc is not None else -1
+    pid = _partition_id()
     for pdf in it:
         t0 = time.perf_counter_ns()
         texts, spans_col, kinds, errors = [], [], [], []
@@ -107,6 +113,89 @@ def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+def _extract_record_batch(batch, pid: int):
+    """Run the kernel over one pyarrow RecordBatch of (url, html, ...) →
+    one RecordBatch of EXTRACTED_SCHEMA columns."""
+    import pyarrow as pa
+
+    from gemini_ocr_batch_spark.kernels import extract_document_detail
+
+    t0 = time.perf_counter_ns()
+    urls = batch.column("url").to_pylist()
+    blobs = batch.column("html").to_pylist()
+    texts, kinds, errs = [], [], []
+    msgs, samples, nbytes = [], [], []
+    # spans go straight to flattened Arrow buffers (offsets + struct
+    # children + null mask) instead of one python dict PER SPAN —
+    # measured ~100x faster array build; on span-dense real pages the
+    # dict path was ~20% of total kernel wall
+    sp_offsets, sp_starts, sp_ends, sp_kinds, sp_null = [0], [], [], [], []
+    for url, blob in zip(urls, blobs):
+        text, sp, kind, err, msg = extract_document_detail(blob, url)
+        texts.append(text)
+        if sp is None:
+            sp_null.append(True)
+        else:
+            sp_null.append(False)
+            for s, e, k in sp:
+                sp_starts.append(s)
+                sp_ends.append(e)
+                sp_kinds.append(k)
+        sp_offsets.append(len(sp_starts))
+        kinds.append(kind)
+        errs.append(err)
+        msgs.append(msg)
+        samples.append(
+            blob[:_SAMPLE_BYTES].decode("latin-1")
+            if err is not None and blob
+            else None
+        )
+        nbytes.append(len(blob) if blob is not None else 0)
+    spans_arr = pa.ListArray.from_arrays(
+        pa.array(sp_offsets, pa.int32()),
+        pa.StructArray.from_arrays(
+            [
+                pa.array(sp_starts, pa.int64()),
+                pa.array(sp_ends, pa.int64()),
+                pa.array(sp_kinds, pa.string()),
+            ],
+            fields=[
+                pa.field("start", pa.int64(), nullable=False),
+                pa.field("end", pa.int64(), nullable=False),
+                pa.field("kind", pa.string(), nullable=False),
+            ],
+        ),
+        mask=pa.array(sp_null),
+    )
+    elapsed = time.perf_counter_ns() - t0
+    n = batch.num_rows  # constant columns must match row count exactly
+    per_row_ns = elapsed // max(1, n)
+    return pa.record_batch(
+        [
+            batch.column("url"),
+            batch.column("warc_ts"),
+            pa.array(texts, pa.string()),
+            spans_arr,
+            pa.array(kinds, pa.string()),
+            pa.array([EXTRACTOR_VERSION] * n, pa.string()),
+            pa.array(errs, pa.string()),
+            pa.array(msgs, pa.string()),
+            pa.array(samples, pa.string()),
+            pa.array([pid] * n, pa.int32()),
+            pa.array(nbytes, pa.int64()),
+            pa.array([per_row_ns] * n, pa.int64()),
+        ],
+        names=EXTRACTED_SCHEMA.names,
+    )
+
+
+def _partition_id() -> int:
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    return tc.partitionId() if tc is not None else -1
+
+
 def _extract_batches_arrow(it):
     """mapInArrow kernel: pyarrow RecordBatch in/out — skips the pandas
     object-column round trip (list-of-struct spans are expensive to carry
@@ -114,120 +203,83 @@ def _extract_batches_arrow(it):
     The DEFAULT path since round 2: once the parser got ~2x faster, serde
     became the bottleneck and this measures ~1.3x the pandas twin at 32
     cores (118k vs 92k docs/s at sf0.1)."""
-    import pyarrow as pa
-    from pyspark import TaskContext
-
-    from gemini_ocr_batch_spark.kernels import extract_document_detail
-
-    tc = TaskContext.get()
-    pid = tc.partitionId() if tc is not None else -1
-    span_type = pa.list_(
-        pa.struct(
-            [
-                pa.field("start", pa.int64(), nullable=False),
-                pa.field("end", pa.int64(), nullable=False),
-                pa.field("kind", pa.string(), nullable=False),
-            ]
-        )
-    )
+    pid = _partition_id()
     for batch in it:
-        t0 = time.perf_counter_ns()
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        texts, kinds, errs = [], [], []
-        msgs, samples, nbytes = [], [], []
-        # spans go straight to flattened Arrow buffers (offsets + struct
-        # children + null mask) instead of one python dict PER SPAN —
-        # measured ~100x faster array build; on span-dense real pages the
-        # dict path was ~20% of total kernel wall
-        sp_offsets, sp_starts, sp_ends, sp_kinds, sp_null = [0], [], [], [], []
-        for url, blob in zip(urls, blobs):
-            text, sp, kind, err, msg = extract_document_detail(blob, url)
-            texts.append(text)
-            if sp is None:
-                sp_null.append(True)
-            else:
-                sp_null.append(False)
-                for s, e, k in sp:
-                    sp_starts.append(s)
-                    sp_ends.append(e)
-                    sp_kinds.append(k)
-            sp_offsets.append(len(sp_starts))
-            kinds.append(kind)
-            errs.append(err)
-            msgs.append(msg)
-            samples.append(
-                blob[:_SAMPLE_BYTES].decode("latin-1")
-                if err is not None and blob
-                else None
+        yield _extract_record_batch(batch, pid)
+
+
+def _extract_attempts_arrow(it):
+    """mapInArrow kernel with in-task retries: every row gets up to its
+    ``_budget`` attempts. Attempt 0 runs over the whole batch; each later
+    attempt re-runs only the rows whose previous attempt failed and that
+    still have budget. One output batch per attempt, tagged ``attempt``."""
+    import pyarrow as pa
+
+    pid = _partition_id()
+    for batch in it:
+        budget = batch.column("_budget").to_pylist()
+        rows = [i for i, b in enumerate(budget) if b > 0]
+        attempt = 0
+        while rows:
+            sub = batch if len(rows) == batch.num_rows else batch.take(rows)
+            out = _extract_record_batch(sub, pid)
+            yield out.append_column(
+                "attempt", pa.array([attempt] * len(rows), pa.int32())
             )
-            nbytes.append(len(blob) if blob is not None else 0)
-        spans_arr = pa.ListArray.from_arrays(
-            pa.array(sp_offsets, pa.int32()),
-            pa.StructArray.from_arrays(
-                [
-                    pa.array(sp_starts, pa.int64()),
-                    pa.array(sp_ends, pa.int64()),
-                    pa.array(sp_kinds, pa.string()),
-                ],
-                fields=list(span_type.value_type),
-            ),
-            mask=pa.array(sp_null),
+            attempt += 1
+            errs = out.column("error_type").to_pylist()
+            rows = [
+                i for i, err in zip(rows, errs)
+                if err is not None and budget[i] > attempt
+            ]
+
+
+# plan nodes that hand the kernel their child's rows in the child's
+# partitioning: projections, filters, and the probe (left) side of the
+# resume joins — checkpoint.pending's anti-join and the job's attempt-budget
+# left join
+_PASS_THROUGH = ("Project", "Filter", "SubqueryAlias")
+_PROBE_SIDE_JOINS = ("LeftAnti", "LeftSemi", "LeftOuter")
+
+
+def _row_source(df: DataFrame) -> DataFrame:
+    """The relation ``df``'s rows are read from: its analyzed plan walked
+    down through pass-through nodes and the left side of left joins.
+
+    Building this frame is planning only, so the salt decision runs no
+    Spark job; ``df.rdd`` on a resumed frontier would execute the join's
+    broadcast stage under AQE. Falls back to ``df`` when the plan cannot
+    be walked."""
+    try:
+        node = df._jdf.queryExecution().analyzed()
+        while True:
+            kind = node.getClass().getSimpleName()
+            if kind in _PASS_THROUGH:
+                node = node.child()
+            elif (kind == "Join"
+                  and node.joinType().toString() in _PROBE_SIDE_JOINS):
+                node = node.left()
+            else:
+                break
+        spark = df.sparkSession
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, node
         )
-        elapsed = time.perf_counter_ns() - t0
-        n = batch.num_rows  # constant columns must match row count exactly
-        per_row_ns = elapsed // max(1, n)
-        yield pa.record_batch(
-            [
-                batch.column("url"),
-                batch.column("warc_ts"),
-                pa.array(texts, pa.string()),
-                spans_arr,
-                pa.array(kinds, pa.string()),
-                pa.array([EXTRACTOR_VERSION] * n, pa.string()),
-                pa.array(errs, pa.string()),
-                pa.array(msgs, pa.string()),
-                pa.array(samples, pa.string()),
-                pa.array([pid] * n, pa.int32()),
-                pa.array(nbytes, pa.int64()),
-                pa.array([per_row_ns] * n, pa.int64()),
-            ],
-            names=[
-                "url", "warc_ts", "extracted_text", "spans", "content_kind",
-                "extractor_version", "error_type", "error_message",
-                "input_sample", "partition_id", "bytes_in", "kernel_ns",
-            ],
-        )
+        return DataFrame(jdf, spark)
+    except Exception:  # not a classic JVM plan: probe df itself
+        return df
 
 
-def extract_pages(
-    pages: DataFrame,
-    n_partitions: int | None = None,
-    salt: bool | str = "auto",
-    use_arrow: bool = True,
-) -> DataFrame:
-    """pages(url, warc_ts, html, ...) → extracted rows (EXTRACTED_SCHEMA).
-
-    Column-prunes to exactly the three columns the kernel needs before any
-    shuffle, so `text`/`lang` never move.
-
-    ``salt`` policy — the blob column is the expensive thing to move, so
-    the shuffle must pay for itself:
-    - "auto" (default): salt only when the source partitioning cannot
-      feed the target parallelism. A size-bounded file scan (parquet
-      splits ≤ spark.sql.files.maxPartitionBytes) already bounds per-task
-      byte work, so a well-split table skips the blob shuffle entirely
-      (measured 2× kernel-stage throughput); a coarse source (few huge
-      splits, or a collapsed post-join frontier) gets the full salted
-      repartition.
-    - True: always salt (pathological co-location, non-splittable blobs).
-    - False: never (streaming frames, pre-partitioned input).
-    """
-    slim = pages.select("url", "warc_ts", "html")
+def _kernel_input(pages: DataFrame, n_partitions: int | None,
+                  salt: bool | str, *extra) -> DataFrame:
+    """The kernel's input: (url, warc_ts, html, *extra), salted per
+    ``salt`` (see extract_pages)."""
+    slim = pages.select("url", "warc_ts", "html", *extra)
     parts = n_partitions or pages.sparkSession.sparkContext.defaultParallelism
     if salt == "auto":
+        source = _row_source(slim)
         try:
-            src_parts = slim.rdd.getNumPartitions()
+            src_parts = source.rdd.getNumPartitions()
         except Exception:  # streaming frames have no rdd
             src_parts = parts
         # Planned byte-range splits LIE for coarse-row-group parquet: a
@@ -243,13 +295,61 @@ def extract_pages(
             # [] (not an exception) for in-memory/LocalRelation sources —
             # treat it like the non-file path, else every non-file source
             # would count as "0 files" and force a redundant salt shuffle
-            n_files = len(slim.inputFiles()) or src_parts
+            n_files = len(source.inputFiles()) or src_parts
         except Exception:  # non-file source (stream)
             n_files = src_parts
         effective = min(src_parts, max(n_files, 1))
         salt = effective < max(2, parts // 2)
-    if salt:
-        slim = salt_by_size(slim, parts)
+    return salt_by_size(slim, parts) if salt else slim
+
+
+def extract_pages(
+    pages: DataFrame,
+    n_partitions: int | None = None,
+    salt: bool | str = "auto",
+    use_arrow: bool = True,
+) -> DataFrame:
+    """pages(url, warc_ts, html, ...) → extracted rows (EXTRACTED_SCHEMA).
+
+    Column-prunes to exactly the three columns the kernel needs before any
+    shuffle, so `text`/`lang` never move.
+
+    ``salt`` policy — the blob column is the expensive thing to move, so
+    the shuffle must pay for itself:
+    - "auto" (default): salt only when the source scan cannot feed the
+      target parallelism. A size-bounded file scan (parquet splits ≤
+      spark.sql.files.maxPartitionBytes) already bounds per-task byte
+      work, so a well-split table skips the blob shuffle entirely
+      (measured 2× kernel-stage throughput); a coarse source (few huge
+      splits, few files) gets the full salted repartition. The decision
+      reads the splits and files of the relation the rows come from,
+      found through projections, filters and the left side of left joins,
+      and runs no Spark job. A broadcast resume join keeps the source's
+      partitions, so the decision is the one the joined frontier would
+      give. A sort-merge resume join (a checkpoint too big to broadcast)
+      feeds the kernel its own shuffle partitions, which the decision
+      does not see: a well-split source goes straight from the join to
+      the kernel, and a coarse one is salted on top of the join's shuffle.
+    - True: always salt (pathological co-location, non-splittable blobs).
+    - False: never (streaming frames, pre-partitioned input).
+    """
+    slim = _kernel_input(pages, n_partitions, salt)
     if use_arrow:
         return slim.mapInArrow(_extract_batches_arrow, schema=EXTRACTED_SCHEMA)
     return slim.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+
+
+def extract_attempts(
+    pages: DataFrame, budget: Column, n_partitions: int | None = None
+) -> DataFrame:
+    """pages(url, warc_ts, html, ...) → one row per extraction attempt
+    (ATTEMPTS_SCHEMA: EXTRACTED_SCHEMA + the 0-based ``attempt``).
+
+    ``budget`` is an int column: the attempts each row may take (a row
+    with 0 is not extracted). A row whose attempt k failed is extracted
+    again as attempt k+1 in the same task while k+1 < budget, so retries
+    add no Spark job. Salting is extract_pages' salt="auto"; the Arrow
+    kernel only.
+    """
+    slim = _kernel_input(pages, n_partitions, "auto", budget.alias("_budget"))
+    return slim.mapInArrow(_extract_attempts_arrow, schema=ATTEMPTS_SCHEMA)

@@ -1,9 +1,13 @@
-"""Job edge cases: empty input, all-failure input, single-retry budget."""
+"""Job edge cases: empty input, all-failure input, single-retry budget,
+the per-attempt outputs of in-task retries, and the call's job budget."""
 
 from __future__ import annotations
 
+import collections
 import datetime as dt
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from gemini_ocr_batch_spark.checkpoint import ParquetCheckpointStore
@@ -42,3 +46,136 @@ def test_single_pass_budget_leaves_failed_retryable(spark, tmp_path):
                                    max_retries=3)
     # with max_retries=1 at merge time the rows went dead after one attempt
     assert store.read(spark).filter(F.col("status") == "dead").count() == 5
+
+
+# datagen rows by golden outcome: generate_rows(300, seed=42) holds these
+# good pages, EmptyDocument blobs and DecodeError (binary garbage) blobs
+_OK = ["page/0.html", "page/1.html", "page/2.html"]
+_BAD = {
+    "empty/89.html": "EmptyDocument",
+    "empty/170.html": "EmptyDocument",
+    "bin/148.html": "DecodeError",
+    "bin/283.html": "DecodeError",
+}
+# per-pass lineage sums (rows, successes, failures, bytes_in), captured
+# from the job that ran one Spark job per attempt
+_LINEAGE = {0: (7, 3, 4, 7714), 1: (4, 0, 4, 1024), 2: (4, 0, 4, 1024)}
+
+
+def _short(url: str) -> str:
+    return url.split("example.org/", 1)[1]
+
+
+def _datagen_mix(spark):
+    from gemini_ocr_batch_spark.datagen import generate_rows
+
+    rows = {_short(r[0]): r for r in generate_rows(300, seed=42)}
+    return spark.createDataFrame(
+        [rows[u] for u in _OK + list(_BAD)], PAGES_SCHEMA
+    )
+
+
+def _read(path: str, columns: list[str]) -> list[dict]:
+    import pyarrow.dataset as pads
+
+    return pads.dataset(path, format="parquet", partitioning="hive").to_table(
+        columns=columns
+    ).to_pylist()
+
+
+@pytest.mark.parametrize("max_retries", [1, 2, 3])
+def test_in_task_retries_match_pass_per_attempt_job(spark, tmp_path,
+                                                    max_retries):
+    """Retrying failed rows inside the kernel task leaves exactly what the
+    old one-Spark-job-per-attempt loop left (values captured from it): per
+    pass dir the (key, is_ok, error_type) rows, the checkpoint's (status,
+    attempts, last_error), the failure log's (url, attempts, error_type),
+    the per-pass lineage sums and the JobResult counts."""
+    out = str(tmp_path / "out")
+    res = run_extraction_job(spark, _datagen_mix(spark), out,
+                             max_retries=max_retries, run_id="eq")
+    bad = [(u, False, e) for u, e in _BAD.items()]
+    ok = [(u, True, None) for u in _OK]
+    run_dir = os.path.join(out, "extracted_all", "run_id=eq")
+    passes = {
+        d: sorted(
+            (_short(r["url"]), str(r["is_ok"]).lower() == "true",
+             r["error_type"])
+            for r in _read(os.path.join(run_dir, d),
+                           ["url", "is_ok", "error_type"])
+        )
+        for d in os.listdir(run_dir)
+    }
+    assert passes == {
+        f"pass_num={k}": sorted(bad + (ok if k == 0 else []))
+        for k in range(max_retries)
+    }
+    store = ParquetCheckpointStore(os.path.join(out, "checkpoint"))
+    ckpt = {
+        _short(r["url"]): (r["status"], r["attempts"], r["last_error"])
+        for r in store.read(spark).collect()
+    }
+    assert ckpt == {
+        **{u: ("success", 1, None) for u in _OK},
+        **{u: ("dead", max_retries, e) for u, e in _BAD.items()},
+    }
+    failures = sorted(
+        (_short(r["url"]), r["attempts"], r["error_type"])
+        for r in _read(os.path.join(out, "failures"),
+                       ["url", "attempts", "error_type"])
+    )
+    assert failures == sorted(
+        (u, a, e) for u, e in _BAD.items() for a in range(1, max_retries + 1)
+    )
+    lineage = collections.defaultdict(lambda: [0, 0, 0, 0])
+    for r in _read(os.path.join(out, "lineage"),
+                   ["pass_num", "row_count", "success_count",
+                    "failure_count", "bytes_in"]):
+        acc = lineage[r["pass_num"]]
+        for i, c in enumerate(["row_count", "success_count",
+                               "failure_count", "bytes_in"]):
+            acc[i] += r[c]
+    assert {k: tuple(v) for k, v in lineage.items()} == {
+        k: _LINEAGE[k] for k in range(max_retries)
+    }
+    assert (res.passes, res.extracted_rows, res.success_rows,
+            res.failed_rows) == (max_retries, 7 + 4 * (max_retries - 1),
+                                 3, 4 * max_retries)
+
+
+def _count_jobs(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def test_retries_run_inside_one_kernel_job(spark, tmp_path):
+    """All of a call's attempts run in ONE kernel job: a failed row is
+    re-extracted by the task that failed it. Measured on in-memory mixed
+    pages at max_retries=3: 1 job into a fresh store; 3 on resume (the
+    anti-join's broadcast, the prior-attempts join's broadcast, the kernel
+    write). One kernel job per attempt ran 7 and 9."""
+    out = str(tmp_path / "out")
+    first = _datagen_mix(spark)
+    n_jobs, res = _count_jobs(
+        spark, "job_budget_fresh",
+        lambda: run_extraction_job(spark, first, out, max_retries=3),
+    )
+    assert (res.passes, res.extracted_rows) == (3, 15)
+    assert n_jobs <= 1
+
+    ts = dt.datetime(2024, 1, 1)
+    more = first.unionByName(spark.createDataFrame(
+        [(f"https://y/{i}", ts, b"", None, "en") for i in range(3)],
+        PAGES_SCHEMA,
+    ))
+    n_jobs, res = _count_jobs(
+        spark, "job_budget_resume",
+        lambda: run_extraction_job(spark, more, out, max_retries=3),
+    )
+    assert (res.passes, res.extracted_rows) == (3, 9)
+    assert n_jobs <= 3

@@ -16,6 +16,7 @@ import datetime as dt
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,7 +25,7 @@ from gemini_ocr_batch_spark.checkpoint import (
     ParquetCheckpointStore,
 )
 from gemini_ocr_batch_spark.job import read_extracted, run_extraction_job
-from gemini_ocr_batch_spark.schemas import PAGES_SCHEMA
+from gemini_ocr_batch_spark.schemas import CHECKPOINT_SCHEMA, PAGES_SCHEMA
 
 _TS = dt.datetime(2024, 1, 1)
 _GOOD = (
@@ -567,3 +568,136 @@ def test_multi_run_lifecycle_bounded_and_consistent(spark, tmp_path):
             assert {
                 r["url"] for r in store.read(spark).collect()
             } == set(state)
+
+
+_BAD_BLOB = bytes(range(256)) * 4
+
+
+def _seed(spark, store, rows):
+    """Overwrite the checkpoint with (url, status, attempts) rows."""
+    store.overwrite(spark.createDataFrame(
+        [(u, _TS, s, a, "DecodeError" if a else None, _TS)
+         for u, s, a in rows],
+        CHECKPOINT_SCHEMA,
+    ))
+
+
+def _bad_pages(spark, urls):
+    return spark.createDataFrame(
+        [(u, _TS, _BAD_BLOB, None, "en") for u in urls], PAGES_SCHEMA
+    )
+
+
+def _passes_of(out, run_id="r"):
+    """url → sorted pass numbers holding a row for it."""
+    run_dir = os.path.join(out, "extracted_all", f"run_id={run_id}")
+    seen: dict[str, list[int]] = {}
+    for d in sorted(os.listdir(run_dir)):
+        for r in pq.read_table(os.path.join(run_dir, d),
+                               columns=["url"]).to_pylist():
+            seen.setdefault(r["url"], []).append(int(d.split("=")[1]))
+    return {u: sorted(p) for u, p in seen.items()}
+
+
+def _state(spark, out):
+    store = ParquetCheckpointStore(os.path.join(out, "checkpoint"))
+    return {
+        r["url"]: (r["status"], r["attempts"], r["last_error"])
+        for r in store.read(spark).collect()
+    }
+
+
+def test_failed_key_from_a_crashed_run_gets_its_remaining_budget(
+        spark, tmp_path):
+    """A key left failed with attempts=1 gets max_retries - 1 = 2 more
+    attempts, in pass dirs 0 and 1, and ends dead with 3; a new failing
+    key beside it gets all 3."""
+    out = str(tmp_path / "out")
+    store = ParquetCheckpointStore(os.path.join(out, "checkpoint"))
+    _seed(spark, store, [("https://bad/seeded", "failed", 1)])
+    res = run_extraction_job(
+        spark, _bad_pages(spark, ["https://bad/seeded", "https://bad/new"]),
+        out, max_retries=3, run_id="r")
+    assert _passes_of(out) == {
+        "https://bad/seeded": [0, 1], "https://bad/new": [0, 1, 2]}
+    assert _state(spark, out) == {
+        "https://bad/seeded": ("dead", 3, "DecodeError"),
+        "https://bad/new": ("dead", 3, "DecodeError"),
+    }
+    assert (res.passes, res.extracted_rows) == (3, 5)
+
+
+def test_running_keys_get_budget_from_their_attempts(spark, tmp_path):
+    """A key a track_inflight run left running with 0 attempts gets the
+    full budget; one left running after 2 failed attempts gets 1."""
+    out = str(tmp_path / "out")
+    store = ParquetCheckpointStore(os.path.join(out, "checkpoint"))
+    _seed(spark, store, [("https://bad/fresh", "running", 0),
+                         ("https://bad/twice", "running", 2)])
+    run_extraction_job(
+        spark, _bad_pages(spark, ["https://bad/fresh", "https://bad/twice"]),
+        out, max_retries=3, run_id="r", track_inflight=True)
+    assert _passes_of(out) == {
+        "https://bad/fresh": [0, 1, 2], "https://bad/twice": [0]}
+    assert _state(spark, out) == {
+        "https://bad/fresh": ("dead", 3, "DecodeError"),
+        "https://bad/twice": ("dead", 3, "DecodeError"),
+    }
+
+
+def test_lowered_store_max_retries_still_gives_one_attempt(spark, tmp_path):
+    """A key whose attempts already reach a lowered store.max_retries is
+    still attempted once, then dead-lettered."""
+    out = str(tmp_path / "out")
+    store = ParquetCheckpointStore(os.path.join(out, "checkpoint"),
+                                   max_retries=1)
+    _seed(spark, store, [("https://bad/k", "failed", 2)])
+    res = run_extraction_job(spark, _bad_pages(spark, ["https://bad/k"]),
+                             out, max_retries=3, run_id="r", store=store)
+    assert _passes_of(out) == {"https://bad/k": [0]}
+    assert _state(spark, out) == {"https://bad/k": ("dead", 3, "DecodeError")}
+    assert res.passes == 1
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("crash_at", ["merge_attempt_0", "lineage_attempt_1"])
+def test_crash_between_attempts_resumes_to_uninterrupted_state(
+        spark, tmp_path, monkeypatch, crash_at):
+    """A driver crash after attempt 0 is promoted but before attempt 1 is
+    (before attempt 0's merge, or after it): the rerun wipes the staged
+    later attempts, reconciles the promoted one, and gives the failed
+    keys their remaining budget — ending in the checkpoint state and pass
+    dirs of an uninterrupted run."""
+    import gemini_ocr_batch_spark.job as job
+
+    pages = _mixed_pages(spark)
+    clean = str(tmp_path / "clean")
+    run_extraction_job(spark, pages, clean, max_retries=3, run_id="r")
+
+    out = str(tmp_path / "out")
+    if crash_at == "merge_attempt_0":
+        def crash(self, path, *a, **k):
+            raise _Crash(path)
+        monkeypatch.setattr(ParquetCheckpointStore, "merge_results_local",
+                            crash)
+    else:
+        real = job.lineage_rows_local
+
+        def crash(path, run_id, pass_num, *a, **k):
+            if pass_num == 1:
+                raise _Crash(path)
+            return real(path, run_id, pass_num, *a, **k)
+        monkeypatch.setattr(job, "lineage_rows_local", crash)
+    with pytest.raises(_Crash):
+        run_extraction_job(spark, pages, out, max_retries=3, run_id="r")
+    monkeypatch.undo()
+    assert sorted(os.listdir(os.path.join(
+        out, "extracted_all", "run_id=r"))) == ["pass_num=0"]
+
+    run_extraction_job(spark, pages, out, max_retries=3, run_id="r")
+    assert _state(spark, out) == _state(spark, clean)
+    assert _passes_of(out) == _passes_of(clean)
+    assert not os.path.exists(os.path.join(out, "_staging"))

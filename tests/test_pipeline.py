@@ -274,6 +274,50 @@ def test_auto_salt_skips_inmemory_sources(spark):
     assert plan.count("Exchange") <= 1, plan
 
 
+@pytest.mark.parametrize("n_files,n_partitions,salted", [(1, 8, True),
+                                                       (4, 4, False)])
+def test_auto_salt_on_resumed_frontier_runs_no_job(spark, tmp_path, n_files,
+                                                   n_partitions, salted):
+    """salt='auto' over a resumed frontier (pages ⟕̸ broadcast checkpoint)
+    reads the splits and files of the pages scan under the join: planning
+    the extraction runs no Spark job (probing the joined frame's rdd ran
+    the join's broadcast stage), and it decides as for the scan alone."""
+    from gemini_ocr_batch_spark.datagen import (
+        generate_rows,
+        write_pages_parquet,
+    )
+    from gemini_ocr_batch_spark.schemas import CHECKPOINT_SCHEMA
+
+    rows = generate_rows(80, seed=3)
+    src = tmp_path / "pages"
+    src.mkdir()
+    for i in range(n_files):
+        write_pages_parquet(rows[i::n_files], str(src / f"part-{i}.parquet"))
+    pages = spark.read.parquet(str(src))
+    store = ParquetCheckpointStore(str(tmp_path / "ck"))
+    ts = dt.datetime(2024, 1, 1)
+    store.overwrite(spark.createDataFrame(
+        [(rows[0][0], rows[0][1], "success", 1, None, ts)], CHECKPOINT_SCHEMA
+    ))
+    frontier = store.pending(pages)
+
+    sc = spark.sparkContext
+    group = f"auto_salt_resumed_{n_files}"
+    sc.setJobGroup(group, group)
+    try:
+        planned = extract_pages(frontier, n_partitions=n_partitions)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    def is_salted(df):
+        return "_size_bucket" in df._jdf.queryExecution().analyzed().toString()
+
+    assert is_salted(planned) is salted
+    assert is_salted(extract_pages(pages, n_partitions=n_partitions)) is salted
+    assert planned.count() == len(rows) - 1
+
+
 def test_datagen_writes_splittable_row_groups(tmp_path):
     import pyarrow.parquet as pq
 
