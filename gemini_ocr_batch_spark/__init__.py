@@ -15,7 +15,7 @@ re-expresses every one of those capabilities Spark-first:
                     verbatim between the single-threaded golden oracle and
                     the vectorized Spark operator, so byte-identity gates
                     Spark plumbing rather than kernel drift.
-- ``operators``   — DataFrame-level operators: mapInPandas extraction,
+- ``operators``   — DataFrame-level operators: mapInArrow extraction,
                     dedup (exact / minhash-LSH / simhash / n-gram
                     jaccard), similarity search, text analysis,
                     multimodal plumbing.

@@ -17,14 +17,25 @@ in-memory store behind the same interface):
   buckets), never O(|checkpoint|). At 10^12 keys with B=4096, a pass that
   touches 1% of the key space rewrites ~41 buckets' files, not the whole
   table. Readers always see a complete snapshot (the manifest swap is
-  atomic); a crashed writer leaves only unreferenced version dirs.
+  atomic); a crashed writer leaves only unreferenced version dirs. The
+  manifest is also the job's commit record: the flip that merges a call's
+  pass dirs lists them under ``"commit"``, so a crash between that flip and
+  the pass dirs' ``_MERGED`` stamps is recognized instead of replayed.
 
 - Iceberg (cluster runtimes with the jar): the same ``merge`` surface maps
   to ``MERGE INTO checkpoint t USING delta s ON t.url=s.url AND
   t.warc_ts=s.warc_ts WHEN MATCHED THEN UPDATE ... WHEN NOT MATCHED THEN
   INSERT ...`` — gated behind an import/catalog check since no Iceberg jar
   ships in this sandbox. Its bucket(256, url) partitioning is the exact
-  twin of the manifest scheme here.
+  twin of the manifest scheme here. It records no commit, so reconcile
+  replays any pass dir left unstamped.
+
+The state transitions are written once, as SQL expression text
+(``result_transition_sql``, ``running_transition_sql``) that the Spark
+merge embeds through ``F.expr``, the DuckDB merge in its ``COPY`` and the
+Iceberg MERGE in its ``UPDATE SET``/``INSERT VALUES`` clauses. A merge
+first folds its rows to one delta row per key (``FOLD_SQL``), so a call's
+attempts land in one MERGE.
 """
 
 from __future__ import annotations
@@ -55,11 +66,6 @@ KEY = ["url", "warc_ts"]
 
 class CheckpointConflict(RuntimeError):
     """Another writer advanced the checkpoint mid-merge (lost-update guard)."""
-
-
-# small-pass driver-side merge ceiling: above this the pass is executor
-# work; below it, spinning 2-3 Spark jobs costs more than the merge itself
-LOCAL_MERGE_MAX_ROWS = 2_000_000
 
 
 def _sql_str(path: str) -> str:
@@ -94,6 +100,106 @@ def bucket_of(url: str, n_buckets: int) -> int:
     return int(hashlib.md5(url.encode("utf-8")).hexdigest()[:15], 16) % n_buckets
 
 
+def _duck_bucket(url_sql: str, n_buckets: int) -> str:
+    """The DuckDB twin of ``_bucket_col``'s h60(url) % B."""
+    return (f"(('0x' || substr(md5({url_sql}), 1, 15))::BIGINT"
+            f" % {n_buckets})::INT")
+
+
+# A merge's rows (url, warc_ts, error_type, attempt) folded to one delta row
+# per key: ``n`` attempts, ``ok`` = the last attempt succeeded, ``err`` = the
+# last non-NULL error. Not max_by(error_type, attempt): on a NULL value
+# DuckDB skips the row where Spark returns NULL; with the ordering NULL
+# wherever the error is, both engines skip it.
+FOLD_SQL = {
+    "n": "count(*)",
+    "ok": "coalesce(max(CASE WHEN error_type IS NULL THEN attempt END)"
+          " = max(attempt), false)",
+    "err": "max_by(error_type, CASE WHEN error_type IS NOT NULL"
+           " THEN attempt END)",
+}
+
+
+def fold_sql(rows: str) -> str:
+    """SELECT of ``FOLD_SQL`` over the relation ``rows``."""
+    fold = ", ".join(f"{e} AS {c}" for c, e in FOLD_SQL.items())
+    return f"SELECT url, warc_ts, {fold} FROM {rows} GROUP BY url, warc_ts"
+
+
+def _ref(alias: str | None):
+    """Column reference builder: ``alias.col``, or NULL when no row exists
+    (a fresh store, an Iceberg INSERT)."""
+    return (lambda c: f"{alias}.{c}") if alias else (lambda c: "NULL")
+
+
+def result_transition_sql(old: str | None, new: str,
+                          max_retries: int) -> dict[str, str]:
+    """THE result transition: SQL text per non-key checkpoint column.
+
+    ``new`` aliases a folded delta row (``FOLD_SQL``; NULL ``n`` = key not
+    in the delta, old row kept); ``old`` aliases the checkpoint row, or is
+    None where there is none. Analog of the reference's close-batch +
+    increment-failure-counts transitions (reference:
+    src/prefect_state.py:111-155,176-199): a call's last attempt decides —
+    success, else dead once attempts reach ``max_retries`` (dead-letter
+    predicate, reference: src/scanner.py:87-88), else failed. Equal to one
+    merge per attempt: that sequence's result depends only on the last
+    row, the attempt count and the last error.
+    """
+    o = _ref(old)
+    prior = f"coalesce({o('attempts')}, 0)"
+    return {
+        "status": f"CASE WHEN {new}.n IS NULL THEN {o('status')}"
+                  f" WHEN {new}.ok THEN '{STATUS_SUCCESS}'"
+                  f" WHEN {prior} + {new}.n >= {int(max_retries)}"
+                  f" THEN '{STATUS_DEAD}' ELSE '{STATUS_FAILED}' END",
+        "attempts": f"CAST({prior} + coalesce({new}.n, 0) AS INT)",
+        "last_error": f"coalesce({new}.err, {o('last_error')})",
+        "updated_at": f"CASE WHEN {new}.n IS NULL THEN {o('updated_at')}"
+                      " ELSE current_timestamp END",
+    }
+
+
+def running_transition_sql(old: str | None, new: str) -> dict[str, str]:
+    """The inflight stamp, same shape as ``result_transition_sql``: a key
+    in the running delta ``new`` (NULL url = not in it) becomes running
+    unless it is already success/dead, which never transition."""
+    o = _ref(old)
+    keep = (f"{new}.url IS NULL OR coalesce({o('status')}, "
+            f"'{STATUS_PENDING}') IN ('{STATUS_SUCCESS}', '{STATUS_DEAD}')")
+    return {
+        "status": f"CASE WHEN {keep} THEN {o('status')}"
+                  f" ELSE '{STATUS_RUNNING}' END",
+        "attempts": f"CAST(coalesce({o('attempts')}, 0) AS INT)",
+        "last_error": o("last_error"),
+        "updated_at": f"CASE WHEN {keep} THEN {o('updated_at')}"
+                      " ELSE current_timestamp END",
+    }
+
+
+def _attempt_rows(rows: DataFrame) -> DataFrame:
+    """(url, warc_ts, error_type, attempt): the rows ``FOLD_SQL`` folds;
+    without an ``attempt`` column each row is one attempt."""
+    return rows.selectExpr("url", "warc_ts", "error_type", "attempt"
+                           if "attempt" in rows.columns else "0 AS attempt")
+
+
+def _apply_transition(old: DataFrame | None, delta: DataFrame,
+                      transition) -> DataFrame:
+    """CHECKPOINT_SCHEMA rows of ``transition(old_alias)`` over old ⟗ delta
+    (just the delta on a fresh store: no join against an empty relation)."""
+    if old is None:
+        frame, text = delta.alias("d"), transition(None)
+    else:
+        frame = old.alias("o").join(delta.alias("d"), on=KEY,
+                                    how="full_outer")
+        text = transition("o")
+    return frame.select(*KEY, *[
+        F.expr(text[f.name]).cast(f.dataType).alias(f.name)
+        for f in CHECKPOINT_SCHEMA.fields if f.name not in KEY
+    ])
+
+
 class ParquetCheckpointStore:
     """Bucket-manifest checkpoint over plain Parquet.
 
@@ -101,10 +207,21 @@ class ParquetCheckpointStore:
 
         root/
           _CURRENT                 # JSON {"n_buckets": B, "buckets":
-                                   #       {"0": "v_00000003_ab12cd34", ...}}
+                                   #       {"0": "v_00000003_ab12cd34", ...},
+                                   #  "commit": ["run_id=R/pass_num=0", ...]}
           v_00000001_…/bucket=0/…  # hive-partitioned snapshot fragments
           v_00000003_…/bucket=7/…  # (a version dir holds only the buckets
                                    #  that its merge rewrote)
+
+    Commit record: a flip made by ``merge_results[_local](..., commit=…)``
+    — the job's one merge per call, and reconcile's — lists the pass dirs
+    it merged under ``"commit"``; every other flip (``mark_running``,
+    ``overwrite``, a merge without ``commit``) writes none, and a manifest
+    without the key reads as an empty commit (``last_commit``). The job
+    stamps ``_MERGED`` into those dirs only after the flip, so with a
+    single writer only the current manifest's commit can name unstamped
+    dirs: reconcile stamps those and merges the rest, and no attempt is
+    counted twice.
 
     Concurrency contract: SINGLE WRITER. The store does not serialize
     concurrent merges — it *fences* them: every merge records the manifest
@@ -329,202 +446,89 @@ class ParquetCheckpointStore:
             ~F.col("status").isin(STATUS_SUCCESS, STATUS_DEAD)
         ).select(*KEY, "attempts")
 
-    def _merge_bucketed(self, delta: DataFrame, combine) -> None:
+    def _merge_bucketed(self, delta: DataFrame, transition,
+                        commit: list[str] | None = None) -> None:
         """Shared bucket-pruned MERGE skeleton.
 
-        ``delta`` must carry url+warc_ts; ``combine(old, delta)`` returns
-        the merged rows (CHECKPOINT_SCHEMA) for the touched buckets only.
-        Reads and rewrites ONLY buckets containing delta keys; every other
-        bucket keeps its old manifest entry untouched.
+        ``delta`` carries url+warc_ts; ``transition(old_alias)`` gives the
+        SQL text of the merged columns (``_apply_transition``). Reads and
+        rewrites ONLY buckets containing delta keys; every other bucket
+        keeps its old manifest entry untouched.
         """
         spark = delta.sparkSession
         base = self._manifest()  # CAS base (lost-update guard)
-        delta = delta.withColumn("bucket", _bucket_col(self.n_buckets))
         if base is None or not base["buckets"]:
             # fresh store: the delta IS the snapshot — no join (an empty
             # LocalRelation build side would plan a full SMJ shuffle)
-            fresh = combine(None, delta).withColumn(
-                "bucket", _bucket_col(self.n_buckets)
+            merged = _apply_transition(None, delta, transition)
+            n_parts = self.n_buckets
+        else:
+            # O(|delta|) pre-scan for the touched buckets — the price that
+            # converts the rewrite from O(|checkpoint|) to O(touched buckets)
+            touched = sorted(
+                r["bucket"] for r in delta.select(
+                    _bucket_col(self.n_buckets).alias("bucket")
+                ).distinct().collect()
             )
-            version = self._write_version(fresh, self.n_buckets)
-            self._flip(
-                {
-                    "n_buckets": self.n_buckets,
-                    "buckets": {
-                        b: version for b in self._written_buckets(version)
-                    },
-                },
-                expect=base,
-            )
-            return
-        # O(|delta|) pre-scan for the touched buckets — the price that
-        # converts the rewrite from O(|checkpoint|) to O(touched buckets)
-        touched = sorted(
-            r["bucket"] for r in delta.select("bucket").distinct().collect()
+            if not touched:
+                return  # empty delta: nothing to merge, nothing to flip
+            old = self._read_buckets(spark, base, touched)
+            merged = _apply_transition(old, delta, transition)
+            n_parts = len(touched)
+        version = self._write_version(
+            merged.withColumn("bucket", _bucket_col(self.n_buckets)), n_parts
         )
-        if not touched:
-            return  # empty delta: nothing to merge, nothing to flip
-        old = self._read_buckets(spark, base, touched)
-        merged = combine(old, delta).withColumn(
-            "bucket", _bucket_col(self.n_buckets)
-        )
-        version = self._write_version(merged, len(touched))
-        mapping = dict(base["buckets"])
+        self._flip_version(version, base, base, commit)
+
+    def _flip_version(self, version: str, base: dict | None, expect,
+                      commit: list[str] | None = None) -> None:
+        """Flip to a manifest mapping ``version``'s buckets over ``base``'s
+        (None: over nothing), recording ``commit`` when given."""
+        mapping = dict(base["buckets"]) if base else {}
         for b in self._written_buckets(version):
             mapping[b] = version
-        self._flip(
-            {"n_buckets": self.n_buckets, "buckets": mapping}, expect=base
+        manifest = {"n_buckets": self.n_buckets, "buckets": mapping}
+        if commit is not None:
+            manifest["commit"] = list(commit)
+        self._flip(manifest, expect=expect)
+
+    def last_commit(self) -> list[str]:
+        """The pass dirs the current manifest's flip merged (empty when
+        the last flip was not a job's merge, or for an older manifest)."""
+        return (self._manifest() or {}).get("commit", [])
+
+    def merge_results(self, extracted: DataFrame,
+                      commit: list[str] | None = None) -> None:
+        """MERGE extraction attempts (url, warc_ts, error_type[, attempt])
+        into the checkpoint: folded per key (``FOLD_SQL``), then one
+        ``result_transition_sql`` MERGE. ``commit`` names the pass dirs
+        this flip records as merged (the job's commit record)."""
+        delta = _attempt_rows(extracted).groupBy(*KEY).agg(
+            *[F.expr(e).alias(c) for c, e in FOLD_SQL.items()]
+        )
+        self._merge_bucketed(
+            delta,
+            lambda old: result_transition_sql(old, "d", self.max_retries),
+            commit,
         )
 
-    def merge_results(self, extracted: DataFrame) -> None:
-        """MERGE the outcome of one extraction pass into the checkpoint.
+    def merge_results_local(self, staged, commit: list[str] | None = None
+                            ) -> bool:
+        """Driver-side twin of ``merge_results`` over staged parquet dirs.
 
-        Analog of the reference's close-batch + increment-failure-counts
-        transitions (reference: src/prefect_state.py:111-155,176-199):
-        success → status=success; failure → attempts+1, status=failed, or
-        dead once attempts ≥ max_retries (dead-letter predicate, reference:
-        src/scanner.py:87-88).
+        ``staged`` is one dir or a list of them in attempt order. A call's
+        few thousand keys cost 2-3 Spark jobs (~1-2 s of scheduling/commit
+        latency in local mode, worse on a cluster) on the Spark path; here
+        DuckDB reads (url, warc_ts, error_type) straight from the parquet,
+        applies the same ``FOLD_SQL`` and ``result_transition_sql`` text,
+        writes the touched bucket files and CAS-flips the manifest. The
+        caller decides whether a call is small enough. Returns False —
+        caller falls back to the Spark path — when the store or a staged
+        dir is not a local directory, or duckdb is not installed.
         """
-        delta = extracted.select(
-            "url",
-            "warc_ts",
-            F.when(F.col("error_type").isNull(), F.lit(STATUS_SUCCESS))
-            .otherwise(F.lit(STATUS_FAILED))
-            .alias("new_status"),
-            F.col("error_type").alias("new_error"),
-        )
-
-        def combine(old: DataFrame | None, d: DataFrame) -> DataFrame:
-            if old is None:
-                return d.select(
-                    "url",
-                    "warc_ts",
-                    F.when(
-                        (F.col("new_status") == STATUS_FAILED)
-                        & (F.lit(1) >= F.lit(self.max_retries)),
-                        F.lit(STATUS_DEAD),
-                    )
-                    .otherwise(F.col("new_status"))
-                    .alias("status"),
-                    F.lit(1).cast("int").alias("attempts"),
-                    F.col("new_error").alias("last_error"),
-                    F.current_timestamp().alias("updated_at"),
-                )
-            return old.join(
-                d.drop("bucket"), on=KEY, how="full_outer"
-            ).select(
-                "url",
-                "warc_ts",
-                F.when(F.col("new_status").isNull(), F.col("status"))
-                .when(
-                    F.col("new_status") == STATUS_SUCCESS,
-                    F.lit(STATUS_SUCCESS),
-                )
-                .when(
-                    F.coalesce(F.col("attempts"), F.lit(0)) + 1
-                    >= F.lit(self.max_retries),
-                    F.lit(STATUS_DEAD),
-                )
-                .otherwise(F.lit(STATUS_FAILED))
-                .alias("status"),
-                (
-                    F.coalesce(F.col("attempts"), F.lit(0))
-                    + F.when(
-                        F.col("new_status").isNotNull(), F.lit(1)
-                    ).otherwise(F.lit(0))
-                )
-                .cast("int")
-                .alias("attempts"),
-                F.coalesce(F.col("new_error"), F.col("last_error")).alias(
-                    "last_error"
-                ),
-                F.when(
-                    F.col("new_status").isNotNull(), F.current_timestamp()
-                )
-                .otherwise(F.col("updated_at"))
-                .alias("updated_at"),
-            )
-
-        self._merge_bucketed(delta, combine)
-
-    def all_terminal_local(self, staged_path: str) -> bool | None:
-        """Are ALL of a staged pass dir's keys already terminal
-        (success/dead) in the checkpoint?
-
-        Used by reconcile to recognize pass dirs that were merged by code
-        predating the ``_MERGED`` marker: replaying those would double-count
-        attempts for failed keys — and worse, a failure staged in pass K
-        whose key succeeded in pass K+n would DOWNGRADE success back to
-        failed. A pass whose every key is terminal can be stamped merged
-        without replaying (terminal states never transition). Returns None
-        when undeterminable (non-local store, no duckdb) — caller falls
-        back to replaying, the pre-existing documented behavior.
-        """
-        if not (os.path.isdir(self.root) and os.path.isdir(staged_path)):
-            return None
-        try:
-            import duckdb
-        except ImportError:
-            return None
-        import glob as globmod
-
-        staged_glob = os.path.join(staged_path, "**", "*.parquet")
-        if not globmod.glob(staged_glob, recursive=True):
-            return True  # empty pass: vacuously merged
-        base = self._manifest()
-        if not base:
-            return False  # no checkpoint at all -> nothing is terminal
-        con = duckdb.connect()
-        try:
-            bucket_sql = (
-                f"(('0x' || substr(md5(url), 1, 15))::BIGINT "
-                f"% {self.n_buckets})::INT"
-            )
-            touched = sorted(
-                r[0]
-                for r in con.execute(
-                    f"SELECT DISTINCT {bucket_sql} FROM read_parquet(?)",
-                    [staged_glob],
-                ).fetchall()
-            )
-            old_paths = self._bucket_paths(base, touched)
-            if not old_paths:
-                return False
-            globs = ", ".join(
-                _sql_str(os.path.join(p, "*.parquet")) for p in old_paths
-            )
-            n_open = con.execute(
-                f"""
-                SELECT count(*) FROM read_parquet(?) s
-                LEFT JOIN read_parquet([{globs}]) t
-                  ON s.url = t.url AND s.warc_ts = t.warc_ts
-                WHERE t.url IS NULL
-                   OR t.status NOT IN ('{STATUS_SUCCESS}', '{STATUS_DEAD}')
-                """,
-                [staged_glob],
-            ).fetchone()[0]
-            return n_open == 0
-        finally:
-            con.close()
-
-    def merge_results_local(self, staged_path: str,
-                            max_rows: int = LOCAL_MERGE_MAX_ROWS) -> bool:
-        """Driver-side MERGE fast path for small passes on a local fs.
-
-        A retry pass of a few thousand keys costs 2-3 Spark jobs (~1-2 s of
-        pure scheduling/commit latency in local mode, worse on a cluster)
-        while the merge itself is sub-second of pyarrow+pandas. This path
-        reads (url, warc_ts, error_type) straight from the staged parquet,
-        applies the EXACT transition table merge_results implements
-        relationally (tests pin the two paths equal), writes the touched
-        bucket files with pyarrow, and CAS-flips the manifest. Returns
-        False — caller falls back to the Spark path — when the store or the
-        staged dir is not a local directory or the pass exceeds
-        ``max_rows``. At 10^12 scale passes are orders of magnitude above
-        the ceiling and staged data lives on object storage, so the Spark
-        path is the one that runs.
-        """
-        if not (os.path.isdir(self.root) and os.path.isdir(staged_path)):
+        paths = [staged] if isinstance(staged, str) else list(staged)
+        if not (os.path.isdir(self.root)
+                and all(os.path.isdir(p) for p in paths)):
             return False
         try:
             import duckdb
@@ -532,103 +536,66 @@ class ParquetCheckpointStore:
             return False  # vanilla install: the Spark merge path handles it
         import glob as globmod
 
-        staged_glob = os.path.join(staged_path, "**", "*.parquet")
-        # explicit file probe instead of exception sniffing: an empty pass
-        # (zero data files) is a clean no-op; any real duckdb IO failure
-        # below propagates loudly rather than being mistaken for "merged"
-        if not globmod.glob(staged_glob, recursive=True):
+        # explicit file probe instead of exception sniffing: a pass with
+        # zero data files is skipped, and all-empty is a clean no-op; any
+        # real duckdb IO failure below propagates loudly
+        rows_sql = " UNION ALL ".join(
+            f"SELECT url, warc_ts, error_type, {i} AS attempt "
+            f"FROM read_parquet({_sql_str(g)})"
+            for i, g in enumerate(os.path.join(p, "**", "*.parquet")
+                                  for p in paths)
+            if globmod.glob(g, recursive=True)
+        )
+        if not rows_sql:
             return True
+        base = self._manifest()
+        n_b = self.n_buckets
         con = duckdb.connect()
         try:
-            n_rows = con.execute(
-                "SELECT count(*) FROM read_parquet(?)", [staged_glob]
-            ).fetchone()[0]
-            if n_rows == 0:
-                return True
-            if n_rows > max_rows:
-                return False
-            base = self._manifest()
-            n_b = self.n_buckets
+            old_paths = []
             if base and base.get("buckets"):
-                # the exact duckdb twin of _bucket_col's h60(url) % B
-                bucket_sql = (
-                    f"(('0x' || substr(md5(url), 1, 15))::BIGINT"
-                    f" % {n_b})::INT"
-                )
+                # a fresh store skips this pre-scan: it would re-read every
+                # staged url only to look up paths in an empty mapping
                 touched = sorted(
-                    r[0]
-                    for r in con.execute(
-                        f"SELECT DISTINCT {bucket_sql} "
-                        f"FROM read_parquet(?)", [staged_glob]
+                    r[0] for r in con.execute(
+                        f"SELECT DISTINCT {_duck_bucket('url', n_b)} "
+                        f"FROM ({rows_sql})"
                     ).fetchall()
                 )
                 old_paths = self._bucket_paths(base, touched)
-            else:
-                # fresh store: no old buckets can exist, so skip the
-                # touched-bucket pre-scan — it would re-read every staged
-                # url only to look up paths in an empty mapping (the
-                # first/biggest pass of every run pays this)
-                old_paths = []
             if old_paths:
                 globs = ", ".join(
                     _sql_str(os.path.join(p, "*.parquet")) for p in old_paths
                 )
-                old_sql = (
-                    "SELECT url, warc_ts, status, attempts, last_error, "
-                    f"updated_at FROM read_parquet([{globs}])"
-                )
+                source = (f"read_parquet([{globs}]) o FULL OUTER JOIN delta d"
+                          " ON o.url = d.url AND o.warc_ts = d.warc_ts")
+                old = "o"
             else:
-                old_sql = (
-                    "SELECT NULL::VARCHAR AS url, "
-                    "NULL::TIMESTAMPTZ AS warc_ts, "
-                    "NULL::VARCHAR AS status, NULL::INTEGER AS attempts, "
-                    "NULL::VARCHAR AS last_error, "
-                    "NULL::TIMESTAMPTZ AS updated_at WHERE false"
-                )
+                source, old = "delta d", None
+            key_sql = {
+                k: f"coalesce(o.{k}, d.{k})" if old else f"d.{k}"
+                for k in KEY
+            }
+            text = result_transition_sql(old, "d", self.max_retries)
+            cols = ", ".join(
+                [f"{e} AS {c}" for c, e in key_sql.items()]
+                + [f"{e} AS {c}" for c, e in text.items()]
+            )
             version = self._next_version()
-            out_dir = os.path.join(self.root, version)
-            # the same CASE chain as merge_results (keep in lockstep!)
             con.execute(
                 f"""
                 COPY (
-                  WITH delta AS (
-                    SELECT url, warc_ts, error_type
-                    FROM read_parquet({_sql_str(staged_glob)})
-                  ),
-                  old AS ({old_sql})
-                  SELECT
-                    coalesce(o.url, d.url) AS url,
-                    coalesce(o.warc_ts, d.warc_ts) AS warc_ts,
-                    CASE WHEN d.url IS NULL THEN o.status
-                         WHEN d.error_type IS NULL THEN '{STATUS_SUCCESS}'
-                         WHEN coalesce(o.attempts, 0) + 1
-                              >= {self.max_retries} THEN '{STATUS_DEAD}'
-                         ELSE '{STATUS_FAILED}' END AS status,
-                    (coalesce(o.attempts, 0)
-                     + CASE WHEN d.url IS NULL THEN 0 ELSE 1 END
-                    )::INT AS attempts,
-                    coalesce(d.error_type, o.last_error) AS last_error,
-                    CASE WHEN d.url IS NULL THEN o.updated_at
-                         ELSE now() END AS updated_at,
-                    ('0x' || substr(md5(coalesce(o.url, d.url)), 1, 15)
-                    )::BIGINT % {n_b} AS bucket
-                  FROM old o
-                  FULL OUTER JOIN delta d
-                    ON o.url = d.url AND o.warc_ts = d.warc_ts
-                ) TO {_sql_str(out_dir)}
+                  WITH delta AS ({fold_sql(f"({rows_sql})")})
+                  SELECT {cols}, {_duck_bucket(key_sql['url'], n_b)} AS bucket
+                  FROM {source}
+                ) TO {_sql_str(os.path.join(self.root, version))}
                 (FORMAT PARQUET, PARTITION_BY (bucket),
                  OVERWRITE_OR_IGNORE true)
                 """
             )
         finally:
             con.close()
-        mapping = dict(base["buckets"]) if base else {}
-        for b in self._written_buckets(version):
-            mapping[b] = version
-        self._flip(
-            {"n_buckets": n_b, "buckets": mapping},
-            expect=base,
-        )
+        self._flip_version(version, base, base, commit)
         return True
 
     def mark_running(self, keys: DataFrame) -> None:
@@ -642,56 +609,16 @@ class ParquetCheckpointStore:
         success/failed/dead. Bucket-pruned like every merge — opt-in from
         the job (track_inflight=True).
         """
-        delta = keys.select(*KEY).withColumn("_inflight", F.lit(1))
-
-        def combine(old: DataFrame | None, d: DataFrame) -> DataFrame:
-            if old is None:
-                return d.select(
-                    "url",
-                    "warc_ts",
-                    F.lit(STATUS_RUNNING).alias("status"),
-                    F.lit(0).cast("int").alias("attempts"),
-                    F.lit(None).cast("string").alias("last_error"),
-                    F.current_timestamp().alias("updated_at"),
-                )
-            return old.join(
-                d.drop("bucket"), on=KEY, how="full_outer"
-            ).select(
-                "url",
-                "warc_ts",
-                F.when(
-                    F.col("_inflight").isNotNull()
-                    & ~F.coalesce(
-                        F.col("status"), F.lit(STATUS_PENDING)
-                    ).isin(STATUS_SUCCESS, STATUS_DEAD),
-                    F.lit(STATUS_RUNNING),
-                )
-                .otherwise(
-                    F.coalesce(F.col("status"), F.lit(STATUS_RUNNING))
-                )
-                .alias("status"),
-                F.coalesce(F.col("attempts"), F.lit(0)).cast("int").alias(
-                    "attempts"
-                ),
-                F.col("last_error"),
-                F.when(F.col("_inflight").isNotNull(), F.current_timestamp())
-                .otherwise(F.col("updated_at"))
-                .alias("updated_at"),
-            )
-
-        self._merge_bucketed(delta, combine)
+        self._merge_bucketed(
+            keys.select(*KEY),
+            lambda old: running_transition_sql(old, "d"),
+        )
 
     def overwrite(self, snapshot: DataFrame, expect=_UNSET) -> None:
         """Full-snapshot replace (admin surface: rollback, clear, tests)."""
         bucketed = snapshot.withColumn("bucket", _bucket_col(self.n_buckets))
         version = self._write_version(bucketed, self.n_buckets)
-        self._flip(
-            {
-                "n_buckets": self.n_buckets,
-                "buckets": {b: version for b in self._written_buckets(version)},
-            },
-            expect=expect,
-        )
+        self._flip_version(version, None, expect)
 
     def dead_letters(self, spark: SparkSession) -> DataFrame:
         """Keys retired after max_retries (reference: src/scanner.py:87-88)."""
@@ -750,22 +677,24 @@ class IcebergCheckpointStore:
             ~F.col("status").isin(STATUS_SUCCESS, STATUS_DEAD)
         ).select(*KEY, "attempts")
 
-    def merge_results(self, extracted: DataFrame) -> None:
-        extracted.select("url", "warc_ts", "error_type").createOrReplaceTempView(
-            "_ckpt_delta"
-        )
+    def merge_results(self, extracted: DataFrame,
+                      commit: list[str] | None = None) -> None:
+        """The rows through one MERGE INTO that folds them. ``commit`` is
+        not recorded (see ``last_commit``)."""
+        _attempt_rows(extracted).createOrReplaceTempView("_ckpt_delta")
         self.spark.sql(merge_sql(self.table, self.max_retries))
 
-    def merge_results_local(self, staged_path: str,
-                            max_rows: int = 0) -> bool:
+    def merge_results_local(self, staged, commit: list[str] | None = None
+                            ) -> bool:
         """No driver-side fast path for a remote table — always False so
         the job falls through to the MERGE INTO."""
         return False
 
-    def all_terminal_local(self, staged_path: str) -> bool | None:
-        """Undeterminable driver-side for a remote table — reconcile falls
-        back to replaying the pass (MERGE is idempotent for success keys)."""
-        return None
+    def last_commit(self) -> list[str]:
+        """No commit record: a snapshot-summary property could carry one,
+        but it cannot be tested without an Iceberg runtime, so reconcile
+        replays every unstamped pass dir."""
+        return []
 
     def mark_running(self, keys: DataFrame) -> None:
         """Inflight visibility via MERGE (same semantics as the Parquet
@@ -800,48 +729,36 @@ def create_table_sql(table: str) -> str:
                 PARTITIONED BY (bucket(256, url))"""
 
 
-def mark_running_sql(table: str) -> str:
-    """MERGE stamping frontier keys as running (visibility only) — the
-    Iceberg twin of ParquetCheckpointStore.mark_running, string-testable
-    without an Iceberg runtime."""
+def _merge_into_sql(table: str, source: str, transition) -> str:
+    """MERGE INTO ``table`` from ``source`` on the key: ``transition("t")``
+    updates matched rows, ``transition(None)`` builds inserted ones."""
+    cols = ("status", "attempts", "last_error", "updated_at")
+    upd, ins = transition("t"), transition(None)
+    sets = ",\n                    ".join(f"t.{c} = {upd[c]}" for c in cols)
+    values = ",\n                    ".join(ins[c] for c in cols)
     return f"""MERGE INTO {table} t
-                USING _ckpt_running s
+                USING {source} s
                 ON t.url = s.url AND t.warc_ts = s.warc_ts
-                WHEN MATCHED AND t.status NOT IN
-                    ('{STATUS_SUCCESS}', '{STATUS_DEAD}') THEN UPDATE SET
-                    t.status = '{STATUS_RUNNING}',
-                    t.updated_at = current_timestamp()
-                WHEN NOT MATCHED THEN INSERT (
-                    url, warc_ts, status, attempts, last_error, updated_at
-                ) VALUES (
-                    s.url, s.warc_ts, '{STATUS_RUNNING}', 0, NULL,
-                    current_timestamp()
-                )"""
-
-
-def merge_sql(table: str, max_retries: int) -> str:
-    """The MERGE INTO statement for one extraction pass — module-level so
-    its transition logic is string-testable without an Iceberg runtime."""
-    return f"""MERGE INTO {table} t
-                USING _ckpt_delta s
-                ON t.url = s.url AND t.warc_ts = s.warc_ts
-                WHEN MATCHED AND s.error_type IS NULL THEN UPDATE SET
-                    t.status = '{STATUS_SUCCESS}',
-                    t.attempts = t.attempts + 1,
-                    t.updated_at = current_timestamp()
                 WHEN MATCHED THEN UPDATE SET
-                    t.status = CASE WHEN t.attempts + 1 >= {max_retries}
-                                    THEN '{STATUS_DEAD}'
-                                    ELSE '{STATUS_FAILED}' END,
-                    t.attempts = t.attempts + 1,
-                    t.last_error = s.error_type,
-                    t.updated_at = current_timestamp()
+                    {sets}
                 WHEN NOT MATCHED THEN INSERT (
                     url, warc_ts, status, attempts, last_error, updated_at
                 ) VALUES (
                     s.url, s.warc_ts,
-                    CASE WHEN s.error_type IS NULL THEN '{STATUS_SUCCESS}'
-                         WHEN 1 >= {max_retries} THEN '{STATUS_DEAD}'
-                         ELSE '{STATUS_FAILED}' END,
-                    1, s.error_type, current_timestamp()
+                    {values}
                 )"""
+
+
+def mark_running_sql(table: str) -> str:
+    """MERGE stamping frontier keys as running (visibility only) — the
+    Iceberg twin of ParquetCheckpointStore.mark_running."""
+    return _merge_into_sql(table, "_ckpt_running",
+                           lambda old: running_transition_sql(old, "s"))
+
+
+def merge_sql(table: str, max_retries: int) -> str:
+    """The MERGE INTO statement folding the ``_ckpt_delta`` rows."""
+    return _merge_into_sql(
+        table, f"({fold_sql('_ckpt_delta')})",
+        lambda old: result_transition_sql(old, "s", max_retries),
+    )

@@ -10,9 +10,15 @@ the retry loop, and the retry loop runs inside the kernel's tasks):
           → mapInArrow(extract, re-extracting a failed row in the same task
             while its budget lasts; one row per attempt)
           → ONE bulk write, hive-partitioned by (attempt, is_ok)
-          → per attempt k, in order: lineage, promote to pass_num=base+k,
-            checkpoint MERGE, failure log — from column-pruned reads of
-            that same parquet
+          → per attempt k, in order: lineage, promote to pass_num=base+k
+          → ONE checkpoint MERGE of all the call's pass dirs (folded per
+            key; the manifest flip records them as its commit), then
+            _MERGED stamps and the failure log per pass dir — all from
+            column-pruned reads of that same parquet
+
+Whether lineage, the MERGE and the failure log run driver-side (pyarrow /
+DuckDB) or as Spark jobs is decided once per call from the staged row
+count, read from the parquet footers.
 
 Physical design (why one write): the kernel output is written exactly once
 and each attempt dir is promoted to ``extracted_all/run_id=R/pass_num=N/
@@ -37,15 +43,13 @@ import os
 import shutil
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gemini_ocr_batch_spark.checkpoint import (
-    LOCAL_MERGE_MAX_ROWS,
-    ParquetCheckpointStore,
-)
+from gemini_ocr_batch_spark.checkpoint import ParquetCheckpointStore
 from gemini_ocr_batch_spark.lineage import lineage_rows, lineage_rows_local
 from gemini_ocr_batch_spark.operators.extract import extract_attempts
 from gemini_ocr_batch_spark.schemas import (
@@ -93,11 +97,39 @@ def _append_lineage_rows(rows, lineage_path: str, run_id: str,
 # probe (reference: src/scanner.py:90-91)
 _MERGED = "_MERGED"
 
-# driver-side sinks ceiling: small passes skip Spark-job fixed costs.
-# ONE constant shared with the checkpoint merge fast path so a pass never
-# straddles the two regimes (Spark merge but pyarrow failures, or vice
-# versa) after someone tunes one of them.
-_LOCAL_FAST_PATH_MAX_ROWS = LOCAL_MERGE_MAX_ROWS
+# driver-side ceiling: a call staging at most this many rows runs lineage,
+# the checkpoint MERGE and the failure log on the driver, where 2-3 Spark
+# jobs per step would cost more than the work itself; above it, all three
+# run as Spark jobs. Decided once per call (``_is_small``).
+LOCAL_MAX_ROWS = 2_000_000
+
+
+def _is_small(paths: list[str]) -> bool:
+    """Do these staged dirs hold at most LOCAL_MAX_ROWS rows? Read from
+    the parquet footers only."""
+    import pyarrow.dataset as pads
+
+    return sum(
+        pads.dataset(p, format="parquet").count_rows() for p in paths
+    ) <= LOCAL_MAX_ROWS
+
+
+def _merge_passes(spark: SparkSession, store, paths: list[str],
+                  commit: list[str], small: bool) -> None:
+    """ONE checkpoint MERGE of pass dirs, each key's rows folded in list
+    (attempt) order; the flip records ``commit``. Driver-side for a small
+    call when the store allows it, a Spark MERGE otherwise."""
+    if small and store.merge_results_local(paths, commit):
+        return
+    store.merge_results(
+        reduce(DataFrame.unionByName, (
+            spark.read.schema(STAGED_SCHEMA).parquet(p).select(
+                "url", "warc_ts", "error_type", F.lit(i).alias("attempt")
+            )
+            for i, p in enumerate(paths)
+        )),
+        commit,
+    )
 
 
 def _append_failures_local(final_path: str, failures_path: str,
@@ -158,25 +190,17 @@ def _reconcile_orphans(
 ) -> int:
     """Fold promoted-but-unmerged pass dirs into the checkpoint.
 
-    Closes the crash window between the staged write and the checkpoint
-    MERGE: without this, a rerun under a fresh run_id would re-extract
-    those keys and leave duplicates under two run_id dirs. Promotion is an
-    atomic rename, so any pass dir found here is complete; one lacking
-    ``_MERGED`` simply never had its keys merged. Merging is idempotent for
-    success keys; for failure keys a crash exactly between merge and marker
-    can double-count one attempt (biases toward earlier dead-letter, never
-    data loss). Returns the number of reconciled pass dirs.
-
-    Upgrade path (pass dirs written by pre-``_MERGED`` code, which merged
-    every pass but stamped nothing): a pass whose keys are ALL already
-    terminal in the checkpoint is stamped without replaying — replaying
-    would double-count attempts and could downgrade a later success back
-    to failed. Only passes with open (non-terminal/absent) keys — the
-    genuine crash-window shape — are merged.
+    Closes the crash window between promotion and the ``_MERGED`` stamps:
+    without this, a rerun under a fresh run_id would re-extract those keys
+    and leave duplicates under two run_id dirs. Promotion is an atomic
+    rename, so any pass dir found here is complete. An unstamped dir that
+    the manifest's commit record names was merged by the flip before the
+    crash and is only stamped; the others are merged, all in ONE folded
+    MERGE whose flip records them as its commit, then stamped. Returns the
+    number of merged pass dirs.
     """
-    n = 0
     if not os.path.isdir(all_path):
-        return n
+        return 0
 
     def _pass_key(d: str):
         try:
@@ -184,31 +208,28 @@ def _reconcile_orphans(
         except (IndexError, ValueError):
             return 1 << 62
 
+    orphans = []
     for run_dir in sorted(os.listdir(all_path)):
         run_path = os.path.join(all_path, run_dir)
         if not (run_dir.startswith("run_id=") and os.path.isdir(run_path)):
             continue
-        # numeric pass order: lexicographic would replay pass_num=10
-        # before pass_num=2, re-ordering the transition sequence
+        # numeric pass order: lexicographic would fold pass_num=10
+        # before pass_num=2, re-ordering the attempts
         for pass_dir in sorted(os.listdir(run_path), key=_pass_key):
             pass_path = os.path.join(run_path, pass_dir)
-            if not (
-                pass_dir.startswith("pass_num=") and os.path.isdir(pass_path)
-            ):
-                continue
-            if os.path.exists(os.path.join(pass_path, _MERGED)):
-                continue
-            if store.all_terminal_local(pass_path):
-                _touch(os.path.join(pass_path, _MERGED))
-                continue
-            if not store.merge_results_local(pass_path):
-                staged = spark.read.schema(STAGED_SCHEMA).parquet(pass_path)
-                store.merge_results(
-                    staged.select("url", "warc_ts", "error_type")
-                )
-            _touch(os.path.join(pass_path, _MERGED))
-            n += 1
-    return n
+            if (pass_dir.startswith("pass_num=") and os.path.isdir(pass_path)
+                    and not os.path.exists(os.path.join(pass_path, _MERGED))):
+                orphans.append(pass_path)
+    committed = set(store.last_commit())
+    todo = [p for p in orphans
+            if os.path.relpath(p, all_path) not in committed]
+    if todo:
+        _merge_passes(spark, store, todo,
+                      [os.path.relpath(p, all_path) for p in todo],
+                      _is_small(todo))
+    for p in orphans:
+        _touch(os.path.join(p, _MERGED))
+    return len(todo)
 
 
 class JobResult:
@@ -257,7 +278,9 @@ def run_extraction_job(
       _staging/       — the call's one write, attempt=k/is_ok=… (each
                         attempt dir atomic-renamed into extracted_all;
                         leftovers of a crashed call wiped on job start)
-      checkpoint/     — snapshot store (atomic pointer swap)
+      checkpoint/     — snapshot store (atomic pointer swap); the call's
+                        one merge flip records its pass dirs as the
+                        manifest's commit
       lineage/        — per-partition metrics, append-only
       failures/       — typed failure rows, append-only (reference:
                         failure_logs, src/database.py:101-125)
@@ -337,18 +360,21 @@ def run_extraction_job(
         int(d.split("=", 1)[1])
         for d in os.listdir(tmp_path) if d.startswith("attempt=")
     )
-    # --- per attempt dir, in order: lineage, promote, MERGE, failure log
+    small = _is_small([tmp_path])
+    # --- per attempt dir, in order: lineage, promote
+    passes = []  # (k, pass dir, failed rows)
     for k in attempts:
         pass_num = base_pass + k
         att_path = os.path.join(tmp_path, f"attempt={k}")
         final_path = os.path.join(
             all_path, f"run_id={run_id}", f"pass_num={pass_num}"
         )
-        # one tiny aggregate gives lineage rows AND the pass accounting,
-        # driver-side (pyarrow): each avoided Spark job saves ~0.5 s of
-        # fixed scheduling/commit latency per pass
-        lin_rows = lineage_rows_local(att_path, run_id, pass_num)
-        if lin_rows is None:  # pass too big for one driver
+        # one tiny aggregate gives lineage rows AND the pass accounting;
+        # driver-side (pyarrow) for a small call, where each avoided Spark
+        # job saves ~0.5 s of fixed scheduling/commit latency
+        if small:
+            lin_rows = lineage_rows_local(att_path, run_id, pass_num)
+        else:
             staged = spark.read.schema(STAGED_SCHEMA).parquet(att_path)
             lin_rows = lineage_rows(staged, run_id, pass_num).collect()
         n_total = sum(int(r["row_count"]) for r in lin_rows)
@@ -364,38 +390,43 @@ def run_extraction_job(
         _touch(os.path.join(att_path, "_SUCCESS"))
         os.makedirs(os.path.dirname(final_path), exist_ok=True)
         os.rename(att_path, final_path)
-        # checkpoint MERGE reads only the 3 key/status columns; driver-side
-        # fast path for small local passes, Spark MERGE otherwise
-        if not store.merge_results_local(final_path):
-            staged = spark.read.schema(STAGED_SCHEMA).parquet(final_path)
-            store.merge_results(staged.select("url", "warc_ts", "error_type"))
-        _touch(os.path.join(final_path, _MERGED))
-        t_ph = result._phase("merge", t_ph)
-        if n_bad:
-            # the failure log counts attempts within this call (k + 1),
-            # not pass_num, which a fixed-run_id rerun offsets by base_pass
-            if n_total <= _LOCAL_FAST_PATH_MAX_ROWS:
-                _append_failures_local(
-                    final_path, failures_path, run_id, pass_num, k + 1
-                )
-            else:
-                # failure log: partition-pruned (is_ok=false) + column-pruned
-                staged = spark.read.schema(STAGED_SCHEMA).parquet(final_path)
-                staged.filter(~F.col("is_ok")).select(
-                    "url",
-                    "warc_ts",
-                    "error_type",
-                    "error_message",
-                    "input_sample",
-                    F.lit(k + 1).cast("int").alias("attempts"),
-                    F.lit(run_id).alias("run_id"),
-                    F.current_timestamp().alias("created_at"),
-                ).coalesce(8).write.mode("append").parquet(failures_path)
-            t_ph = result._phase("failures", t_ph)
+        passes.append((k, final_path, n_bad))
         result.passes += 1
         result.extracted_rows += n_total
         result.success_rows += n_total - n_bad
         result.failed_rows += n_bad
+    # --- ONE checkpoint MERGE of the call's pass dirs (3 key/status
+    # columns), its flip recording them; then the _MERGED stamps
+    if passes:
+        paths = [p for _, p, _ in passes]
+        _merge_passes(spark, store, paths,
+                      [os.path.relpath(p, all_path) for p in paths], small)
+        for p in paths:
+            _touch(os.path.join(p, _MERGED))
+        t_ph = result._phase("merge", t_ph)
+    # --- failure log per pass dir; it counts attempts within this call
+    # (k + 1), not pass_num, which a fixed-run_id rerun offsets by base_pass
+    for k, final_path, n_bad in passes:
+        if not n_bad:
+            continue
+        if small:
+            _append_failures_local(
+                final_path, failures_path, run_id, base_pass + k, k + 1
+            )
+        else:
+            # failure log: partition-pruned (is_ok=false) + column-pruned
+            staged = spark.read.schema(STAGED_SCHEMA).parquet(final_path)
+            staged.filter(~F.col("is_ok")).select(
+                "url",
+                "warc_ts",
+                "error_type",
+                "error_message",
+                "input_sample",
+                F.lit(k + 1).cast("int").alias("attempts"),
+                F.lit(run_id).alias("run_id"),
+                F.current_timestamp().alias("created_at"),
+            ).coalesce(8).write.mode("append").parquet(failures_path)
+        t_ph = result._phase("failures", t_ph)
     shutil.rmtree(staging_root, ignore_errors=True)
     store.vacuum()
     result.wall_sec = time.perf_counter() - t_start

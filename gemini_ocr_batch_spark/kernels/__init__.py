@@ -2,7 +2,7 @@
 
 These are plain-Python functions over ``bytes`` — no Spark imports — so the
 exact same code runs (a) single-threaded as the golden oracle and (b) inside
-the Arrow-batched ``mapInPandas`` operator. Byte-identity between the two is
+the Arrow-batched ``mapInArrow`` operator. Byte-identity between the two is
 the correctness gate (BASELINE.json north_rule).
 """
 

@@ -48,24 +48,22 @@ def lineage_rows(extracted: DataFrame, run_id: str, pass_num: int) -> DataFrame:
     )
 
 
-def lineage_rows_local(staged_path: str, run_id: str, pass_num: int,
-                       max_rows: int = 50_000_000) -> list[dict] | None:
+def lineage_rows_local(staged_path: str, run_id: str,
+                       pass_num: int) -> list[dict]:
     """Driver-side twin of :func:`lineage_rows` over a LOCAL staged dir.
 
     A pass's telemetry columns (partition_id, error_type, bytes_in,
     kernel_ns) are a few MB even at bench scale; aggregating them with
-    pyarrow+pandas replaces one whole Spark job of fixed scheduling/commit
+    pyarrow replaces one whole Spark job of fixed scheduling/commit
     latency per pass. Returns plain dicts consumable by the same pyarrow
-    lineage appender, or None above ``max_rows`` (caller falls back to the
-    distributed aggregation). Tests pin this equal to the Spark path.
+    lineage appender; the job calls it only for a call small enough for
+    one driver. Tests pin this equal to the Spark path.
     """
     import pyarrow.dataset as pads
 
     ds = pads.dataset(staged_path, format="parquet", partitioning="hive")
     if "partition_id" not in ds.schema.names:
         return []  # empty pass: zero data files were written
-    if ds.count_rows() > max_rows:
-        return None  # too big for one driver: use the Spark aggregation
     # Only the three int64 telemetry columns are read from data pages; the
     # failure count comes from the hive `is_ok` partition field (free —
     # decoded from directory names), so the error_type STRING column never

@@ -3,8 +3,8 @@
 This is the Spark-side half of the reference's per-document map (reference:
 src/batch_builder.py:23-43 request build + src/results.py:81-230 decode/
 validate). The remote LLM is replaced by the deterministic kernels; the
-plumbing is ``mapInArrow`` over Arrow batches (``mapInPandas`` twin kept) —
-no per-row Python at the DataFrame layer (BASELINE.json input_hint).
+plumbing is ``mapInArrow`` over Arrow batches — no per-row Python at the
+DataFrame layer (BASELINE.json input_hint).
 ``extract_attempts`` is the job's variant: it retries a failed row inside
 the same task, up to a per-row attempt budget.
 
@@ -17,9 +17,7 @@ accumulates many giants, while small pages still pack densely.
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,66 +49,6 @@ def salt_by_size(pages: DataFrame, n_partitions: int, n_salt: int = 64) -> DataF
     return bucketed.repartition(n_partitions, "_size_bucket", "_salt").drop(
         "_size_bucket", "_salt"
     )
-
-
-def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: one Arrow batch of pages in, extracted rows out.
-
-    Runs the exact same ``extract_document`` the golden oracle runs
-    (byte-identity gate). Per-batch wall time and the physical partition id
-    are emitted per row for the lineage aggregation (north_rule:
-    per-partition lineage rows).
-    """
-    # late import: executed on the Python worker
-    from gemini_ocr_batch_spark.kernels import extract_document_detail
-
-    pid = _partition_id()
-    for pdf in it:
-        t0 = time.perf_counter_ns()
-        texts, spans_col, kinds, errors = [], [], [], []
-        messages, samples, nbytes = [], [], []
-        for blob, url in zip(pdf["html"], pdf["url"]):
-            blob_b = bytes(blob) if blob is not None else None
-            text, spans, kind, err, msg = extract_document_detail(blob_b, url)
-            texts.append(text)
-            spans_col.append(
-                None
-                if spans is None
-                else [
-                    {"start": s, "end": e, "kind": k} for s, e, k in spans
-                ]
-            )
-            kinds.append(kind)
-            errors.append(err)
-            messages.append(msg)
-            # failure forensics: a short lossless (latin-1) prefix of the
-            # raw input so a failure class is debuggable without re-running
-            # the kernel (reference failure log keeps the raw payload,
-            # src/prefect_state.py:245-282)
-            samples.append(
-                blob_b[:_SAMPLE_BYTES].decode("latin-1")
-                if err is not None and blob_b
-                else None
-            )
-            nbytes.append(len(blob_b) if blob_b is not None else 0)
-        elapsed = time.perf_counter_ns() - t0
-        n = max(1, len(pdf))
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"],
-                "warc_ts": pdf["warc_ts"],
-                "extracted_text": pd.Series(texts, dtype="object"),
-                "spans": pd.Series(spans_col, dtype="object"),
-                "content_kind": pd.Series(kinds, dtype="object"),
-                "extractor_version": EXTRACTOR_VERSION,
-                "error_type": pd.Series(errors, dtype="object"),
-                "error_message": pd.Series(messages, dtype="object"),
-                "input_sample": pd.Series(samples, dtype="object"),
-                "partition_id": pid,
-                "bytes_in": pd.Series(nbytes, dtype="int64"),
-                "kernel_ns": elapsed // n,
-            }
-        )
 
 
 def _extract_record_batch(batch, pid: int):
@@ -200,9 +138,9 @@ def _extract_batches_arrow(it):
     """mapInArrow kernel: pyarrow RecordBatch in/out — skips the pandas
     object-column round trip (list-of-struct spans are expensive to carry
     through pandas; building the Arrow ListArray directly is cheaper).
-    The DEFAULT path since round 2: once the parser got ~2x faster, serde
-    became the bottleneck and this measures ~1.3x the pandas twin at 32
-    cores (118k vs 92k docs/s at sf0.1)."""
+    Once the parser got ~2x faster, serde became the bottleneck; this
+    measured ~1.3x the former mapInPandas kernel at 32 cores (118k vs 92k
+    docs/s at sf0.1)."""
     pid = _partition_id()
     for batch in it:
         yield _extract_record_batch(batch, pid)
@@ -307,7 +245,6 @@ def extract_pages(
     pages: DataFrame,
     n_partitions: int | None = None,
     salt: bool | str = "auto",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """pages(url, warc_ts, html, ...) → extracted rows (EXTRACTED_SCHEMA).
 
@@ -334,9 +271,7 @@ def extract_pages(
     - False: never (streaming frames, pre-partitioned input).
     """
     slim = _kernel_input(pages, n_partitions, salt)
-    if use_arrow:
-        return slim.mapInArrow(_extract_batches_arrow, schema=EXTRACTED_SCHEMA)
-    return slim.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+    return slim.mapInArrow(_extract_batches_arrow, schema=EXTRACTED_SCHEMA)
 
 
 def extract_attempts(

@@ -6,14 +6,24 @@ increments; src/scanner.py:87-88 dead-letter) to random pass sequences;
 the store must agree exactly after every sequence. Merges alternate
 between the Spark relational path and the driver-side DuckDB fast path,
 so the test also pins the two implementations against each other on
-histories neither unit test enumerates.
+histories neither unit test enumerates. A property test then checks that
+one folded merge of a call's ordered attempts equals one merge per attempt.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
 import random
+import tempfile
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from gemini_ocr_batch_spark.checkpoint import ParquetCheckpointStore
@@ -110,3 +120,102 @@ def test_recommended_buckets_scaling():
         b = S.recommended_buckets(n)
         assert b & (b - 1) == 0  # power of two
     assert S.recommended_buckets(10**30) == 1 << 20  # hard cap
+
+
+_H_URLS = [f"https://h/{i}" for i in range(6)]
+_H_TS = pa.array([_TS], pa.timestamp("us", tz="UTC"))[0]
+_ERR = st.sampled_from([None, "KernelError", "DecodeError"])
+# one attempt: the keys it touched, each with its outcome
+_ATTEMPT = st.dictionaries(st.sampled_from(_H_URLS), _ERR, min_size=1)
+_PRIOR_ROW = st.tuples(
+    st.sampled_from(["failed", "running", "success", "dead"]),
+    st.integers(0, 4), st.sampled_from([None, "DecodeError"]),
+)
+
+
+def _write_attempt(path: str, rows: dict) -> None:
+    """A staged pass dir holding one attempt's (url, warc_ts, error_type)."""
+    os.makedirs(path)
+    pq.write_table(pa.table({
+        "url": pa.array(list(rows), pa.string()),
+        "warc_ts": pa.array([_H_TS] * len(rows),
+                            pa.timestamp("us", tz="UTC")),
+        "error_type": pa.array(list(rows.values()), pa.string()),
+    }), os.path.join(path, "part-0.parquet"))
+
+
+def _seeded_store(root: str, prior: dict) -> ParquetCheckpointStore:
+    """A store whose snapshot is ``prior`` (none at all when empty),
+    written in the documented bucket-manifest layout."""
+    from gemini_ocr_batch_spark.checkpoint import bucket_of
+
+    store = ParquetCheckpointStore(root, max_retries=MAX_RETRIES,
+                                   n_buckets=2)
+    if not prior:
+        return store
+    buckets: dict[int, list] = {}
+    for url, row in prior.items():
+        buckets.setdefault(bucket_of(url, 2), []).append((url, *row))
+    for b, rows in buckets.items():
+        os.makedirs(os.path.join(root, "v_00000001_seed", f"bucket={b}"))
+        pq.write_table(pa.table({
+            "url": pa.array([r[0] for r in rows], pa.string()),
+            "warc_ts": pa.array([_H_TS] * len(rows),
+                                pa.timestamp("us", tz="UTC")),
+            "status": pa.array([r[1] for r in rows], pa.string()),
+            "attempts": pa.array([r[2] for r in rows], pa.int32()),
+            "last_error": pa.array([r[3] for r in rows], pa.string()),
+            "updated_at": pa.array([_H_TS] * len(rows),
+                                   pa.timestamp("us", tz="UTC")),
+        }), os.path.join(root, "v_00000001_seed", f"bucket={b}",
+                         "part-0.parquet"))
+    with open(os.path.join(root, "_CURRENT"), "w", encoding="utf-8") as f:
+        json.dump({"n_buckets": 2, "buckets": {
+            str(b): "v_00000001_seed" for b in buckets}}, f)
+    return store
+
+
+def _snapshot(store: ParquetCheckpointStore) -> dict:
+    manifest = store._manifest()
+    if not manifest:
+        return {}
+    tbl = pads.dataset([
+        pads.dataset(p, format="parquet") for p in store._bucket_paths(manifest)
+    ]).to_table(columns=["url", "status", "attempts", "last_error"])
+    return {r["url"]: (r["status"], r["attempts"], r["last_error"])
+            for r in tbl.to_pylist()}
+
+
+@pytest.mark.parametrize("fresh", [True, False], ids=["fresh", "prior"])
+def test_folded_merge_equals_sequential_merges(spark, tmp_path, fresh):
+    """One folded merge of k ordered attempts, on the DuckDB path and on
+    the Spark path, leaves the checkpoint of k one-attempt merges."""
+    from gemini_ocr_batch_spark.job import _merge_passes
+
+    @settings(max_examples=25, deadline=None, derandomize=True,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(prior=st.dictionaries(st.sampled_from(_H_URLS), _PRIOR_ROW,
+                                 min_size=1) if not fresh else st.just({}),
+           history=st.lists(_ATTEMPT, min_size=1, max_size=4))
+    def check(prior, history):
+        with tempfile.TemporaryDirectory(dir=tmp_path) as d:
+            passes = [os.path.join(d, f"pass_num={k}")
+                      for k in range(len(history))]
+            for path, rows in zip(passes, history):
+                _write_attempt(path, rows)
+            stores = {name: _seeded_store(os.path.join(d, name), prior)
+                      for name in ("sequential", "duckdb", "spark")}
+            for path in passes:
+                assert stores["sequential"].merge_results_local(path)
+            _merge_passes(spark, stores["duckdb"], passes, ["c"], True)
+            _merge_passes(spark, stores["spark"], passes, ["c"], False)
+            want = _snapshot(stores["sequential"])
+            model = dict(prior)
+            for rows in history:
+                _model_apply(model, list(rows.items()))
+            assert want == model
+            assert _snapshot(stores["duckdb"]) == want
+            assert _snapshot(stores["spark"]) == want
+            assert stores["spark"].last_commit() == ["c"]
+
+    check()

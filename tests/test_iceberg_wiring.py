@@ -30,14 +30,21 @@ class _FakeConf:
 
 
 class _FakeDF:
-    """Records select() projections and temp-view registrations on the
-    shared event log, in call order, like a DataFrame would."""
+    """Records select()/selectExpr() projections and temp-view
+    registrations on the shared event log, in call order, like a DataFrame
+    would."""
+
+    columns = ["url", "warc_ts", "error_type", "extracted_text"]
 
     def __init__(self, events):
         self._events = events
 
     def select(self, *cols):
         self._events.append(("select", tuple(str(c) for c in cols)))
+        return self
+
+    def selectExpr(self, *exprs):
+        self._events.append(("select", exprs))
         return self
 
     def createOrReplaceTempView(self, name):
@@ -82,10 +89,13 @@ def test_merge_results_registers_delta_view_then_merges():
     # select → view → sql, strictly in that order: the MERGE reads the
     # temp view, so registration must precede execution
     assert kinds == ["select", "view", "sql"]
-    assert fake.events[0][1] == ("url", "warc_ts", "error_type")
+    # one attempt per row: the MERGE folds (url, warc_ts, error_type,
+    # attempt) rows per key
+    assert fake.events[0][1] == ("url", "warc_ts", "error_type",
+                                 "0 AS attempt")
     assert fake.events[1][1] == "_ckpt_delta"
     assert fake.events[2][1] == merge_sql("cat.db.ckpt", 5)
-    assert "USING _ckpt_delta" in fake.events[2][1]
+    assert "FROM _ckpt_delta GROUP BY" in fake.events[2][1]
 
 
 def test_mark_running_registers_running_view_then_merges():
@@ -104,7 +114,6 @@ def test_mark_running_registers_running_view_then_merges():
 def test_local_fast_paths_defer_to_merge_into():
     store = IcebergCheckpointStore(_FakeSpark(), "cat.db.ckpt")
     assert store.merge_results_local("/nonexistent") is False
-    assert store.all_terminal_local("/nonexistent") is None
 
 
 def test_vacuum_is_catalog_owned_noop():

@@ -113,60 +113,6 @@ def test_crash_between_promote_and_merge_reconciles(spark, tmp_path):
     assert not os.path.isdir(run_b) or os.listdir(run_b) == []
 
 
-def test_upgrade_from_premarker_passes_stamps_without_remerge(spark, tmp_path):
-    """ADVICE r2: pass dirs written by pre-_MERGED code were already merged;
-    reconcile must recognize their keys as terminal and stamp the marker
-    WITHOUT replaying — replaying would double-count attempts for dead
-    keys (earlier dead-letter) and could downgrade success back to failed."""
-    out = str(tmp_path / "out")
-    pages = _mixed_pages(spark)
-    run_extraction_job(spark, pages, out, run_id="oldrun", max_retries=2)
-    store = ParquetCheckpointStore(os.path.join(out, "checkpoint"),
-                                   max_retries=2)
-    before = {
-        (r["url"]): (r["status"], r["attempts"])
-        for r in store.read(spark).collect()
-    }
-    assert any(s == "dead" for s, _ in before.values())
-    # simulate the upgrade: markers did not exist when these passes landed
-    run_dir = os.path.join(out, "extracted_all", "run_id=oldrun")
-    markers = []
-    for pass_dir in os.listdir(run_dir):
-        m = os.path.join(run_dir, pass_dir, "_MERGED")
-        if os.path.exists(m):
-            os.remove(m)
-            markers.append(m)
-    assert markers
-
-    res = run_extraction_job(spark, pages, out, run_id="newrun",
-                             max_retries=2)
-    assert res.extracted_rows == 0  # frontier empty: nothing re-extracted
-    after = {
-        (r["url"]): (r["status"], r["attempts"])
-        for r in store.read(spark).collect()
-    }
-    assert after == before  # no attempt double-count, no status change
-    for m in markers:
-        assert os.path.exists(m)  # stamped, so the probe runs only once
-
-
-def test_all_terminal_local_detects_open_keys(spark, tmp_path):
-    """The reconcile probe: False while a staged key is absent/non-terminal
-    in the checkpoint, True once every staged key is success/dead."""
-    out = str(tmp_path / "out")
-    pages = _good_pages(spark, n=6)
-    run_extraction_job(spark, pages, out, run_id="runA")
-    store = ParquetCheckpointStore(os.path.join(out, "checkpoint"))
-    pass_dir = os.path.join(out, "extracted_all", "run_id=runA",
-                            "pass_num=0")
-    assert store.all_terminal_local(pass_dir) is True
-    # roll back two keys -> pass has open keys again
-    ckpt = store.read(spark)
-    forget = ckpt.limit(2).select("url", "warc_ts")
-    store.overwrite(ckpt.join(forget, ["url", "warc_ts"], "left_anti"))
-    assert store.all_terminal_local(pass_dir) is False
-
-
 def test_half_written_staging_is_discarded(spark, tmp_path):
     """A staging dir left by a crash mid-write is wiped at job start and
     never becomes visible to read_extracted."""
@@ -666,11 +612,11 @@ class _Crash(RuntimeError):
 @pytest.mark.parametrize("crash_at", ["merge_attempt_0", "lineage_attempt_1"])
 def test_crash_between_attempts_resumes_to_uninterrupted_state(
         spark, tmp_path, monkeypatch, crash_at):
-    """A driver crash after attempt 0 is promoted but before attempt 1 is
-    (before attempt 0's merge, or after it): the rerun wipes the staged
-    later attempts, reconciles the promoted one, and gives the failed
-    keys their remaining budget — ending in the checkpoint state and pass
-    dirs of an uninterrupted run."""
+    """A driver crash in the call's one merge (every attempt dir already
+    promoted), or after attempt 0 is promoted but before attempt 1 is:
+    the rerun wipes any staged later attempts, reconciles the promoted
+    ones, and gives the failed keys their remaining budget — ending in the
+    checkpoint state and pass dirs of an uninterrupted run."""
     import gemini_ocr_batch_spark.job as job
 
     pages = _mixed_pages(spark)
@@ -694,10 +640,120 @@ def test_crash_between_attempts_resumes_to_uninterrupted_state(
     with pytest.raises(_Crash):
         run_extraction_job(spark, pages, out, max_retries=3, run_id="r")
     monkeypatch.undo()
+    # the one merge runs after every attempt dir is promoted
+    promoted = (["pass_num=0", "pass_num=1", "pass_num=2"]
+                if crash_at == "merge_attempt_0" else ["pass_num=0"])
     assert sorted(os.listdir(os.path.join(
-        out, "extracted_all", "run_id=r"))) == ["pass_num=0"]
+        out, "extracted_all", "run_id=r"))) == promoted
 
     run_extraction_job(spark, pages, out, max_retries=3, run_id="r")
     assert _state(spark, out) == _state(spark, clean)
     assert _passes_of(out) == _passes_of(clean)
     assert not os.path.exists(os.path.join(out, "_staging"))
+
+
+def test_crash_after_merge_flip_before_stamps_is_not_replayed(
+        spark, tmp_path, monkeypatch):
+    """A driver crash after the call's merge flip but before its _MERGED
+    stamps: the manifest's commit record names the unstamped pass dir, so
+    the rerun only stamps it. A budget-cut call (one attempt, store
+    dead-letters at 3) leaves its failed keys open, so a replay would show
+    as a second counted attempt."""
+    import gemini_ocr_batch_spark.job as job
+
+    pages = _mixed_pages(spark)
+
+    def call(out):
+        store = ParquetCheckpointStore(os.path.join(out, "checkpoint"),
+                                       max_retries=3)
+        run_extraction_job(spark, pages, out, max_retries=1, run_id="r",
+                           store=store)
+
+    clean = str(tmp_path / "clean")
+    call(clean)
+    call(clean)
+
+    out = str(tmp_path / "out")
+    real_touch = job._touch
+
+    def crash(path):
+        if path.endswith(job._MERGED):
+            raise _Crash(path)
+        real_touch(path)
+    monkeypatch.setattr(job, "_touch", crash)
+    with pytest.raises(_Crash):
+        call(out)
+    monkeypatch.undo()
+    pass0 = os.path.join(out, "extracted_all", "run_id=r", "pass_num=0")
+    assert not os.path.exists(os.path.join(pass0, job._MERGED))
+    assert {a for _s, a, _e in _state(spark, out).values()} == {1}
+    crashed = ParquetCheckpointStore(
+        os.path.join(out, "checkpoint"))._manifest()
+
+    call(out)
+    assert os.path.exists(os.path.join(pass0, job._MERGED))
+    assert {u: (s, a) for u, (s, a, _e) in _state(spark, out).items()
+            if "bad" in u} == {
+        f"https://bad.example/{i}": ("failed", 2) for i in range(4)}
+    assert _state(spark, out) == _state(spark, clean)
+    assert _passes_of(out) == _passes_of(clean)
+    assert crashed.get("commit") == ["run_id=r/pass_num=0"]
+
+
+def test_one_manifest_flip_per_call(spark, tmp_path, monkeypatch):
+    """Every attempt of a call lands in ONE checkpoint merge: one manifest
+    flip per call, fresh or resumed, with failing keys taking all three
+    attempts; the flip records the call's pass dirs as its commit."""
+    flips = []
+    real_flip = ParquetCheckpointStore._flip
+
+    def counting_flip(self, manifest, *a, **k):
+        flips.append(manifest)
+        return real_flip(self, manifest, *a, **k)
+    monkeypatch.setattr(ParquetCheckpointStore, "_flip", counting_flip)
+
+    out = str(tmp_path / "out")
+    res = run_extraction_job(spark, _mixed_pages(spark), out, max_retries=3,
+                             run_id="a")
+    assert res.passes == 3
+    assert len(flips) == 1
+    assert flips[0]["commit"] == [f"run_id=a/pass_num={k}" for k in range(3)]
+
+    flips.clear()
+    resumed = _mixed_pages(spark, n_good=20, n_bad=8)  # 8 new + 4 new bad
+    res = run_extraction_job(spark, resumed, out, max_retries=3, run_id="b")
+    assert (res.passes, res.extracted_rows) == (3, 8 + 4 * 3)
+    assert len(flips) == 1
+    assert flips[0]["commit"] == [f"run_id=b/pass_num={k}" for k in range(3)]
+
+
+def test_spark_and_driver_paths_agree_for_a_call(spark, tmp_path,
+                                                 monkeypatch):
+    """A call above the driver-side ceiling runs lineage, the merge and the
+    failure log as Spark jobs; each must write what the driver-side path
+    writes for a small call."""
+    import gemini_ocr_batch_spark.job as job
+
+    pages = _mixed_pages(spark)
+
+    def run(out):
+        res = run_extraction_job(spark, pages, out, max_retries=3,
+                                 run_id="r")
+        failures = sorted(
+            (r["url"], r["error_type"], r["attempts"]) for r in
+            spark.read.parquet(os.path.join(out, "failures")).collect())
+        lineage = sorted(
+            (r["pass_num"], r["row_count"], r["failure_count"]) for r in
+            spark.read.parquet(os.path.join(out, "lineage")).groupBy(
+                "pass_num").agg(F.sum("row_count").alias("row_count"),
+                                F.sum("failure_count").alias("failure_count")
+                                ).collect())
+        return ((res.passes, res.extracted_rows, res.failed_rows),
+                _state(spark, out), _passes_of(out), failures, lineage)
+
+    local = run(str(tmp_path / "local"))
+    monkeypatch.setattr(job, "LOCAL_MAX_ROWS", -1)
+    monkeypatch.setattr(ParquetCheckpointStore, "merge_results_local",
+                        lambda *a, **k: pytest.fail("driver-side merge"))
+    assert run(str(tmp_path / "spark")) == local
+    assert local[0] == (3, 12 + 4 * 3, 4 * 3)
