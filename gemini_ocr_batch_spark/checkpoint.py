@@ -9,12 +9,12 @@ in-memory store behind the same interface):
 - ``ParquetCheckpointStore`` (sandbox + any vanilla Spark): snapshots are
   hive-partitioned by ``bucket = h60(url) % B`` (60-bit md5 prefix — NOT
   xxhash64: md5 is the one hash the driver, DuckDB, and the JVM all
-  reproduce bit-identically, which is what makes the driver-side
-  small-pass merge fast path possible) and the atomically
-  replaced ``_CURRENT`` pointer is a JSON *manifest* mapping each bucket to
-  the snapshot version that last rewrote it. A MERGE therefore reads and
-  rewrites ONLY the buckets containing delta keys — O(|delta| + touched
-  buckets), never O(|checkpoint|). At 10^12 keys with B=4096, a pass that
+  reproduce bit-identically, which is what makes the driver-side DuckDB
+  merge possible) and the atomically replaced ``_CURRENT`` pointer is a
+  JSON *manifest* mapping each bucket to the snapshot version that last
+  rewrote it. A MERGE therefore reads and rewrites ONLY the buckets
+  containing delta keys — O(|delta| + touched buckets), never
+  O(|checkpoint|). At 10^12 keys with B=4096, a pass that
   touches 1% of the key space rewrites ~41 buckets' files, not the whole
   table. Readers always see a complete snapshot (the manifest swap is
   atomic); a crashed writer leaves only unreferenced version dirs. The
@@ -83,8 +83,8 @@ def _bucket_col(n_buckets: int):
     """bucket = (60-bit md5 prefix of url) % B.
 
     md5 instead of xxhash64 so the DRIVER can compute the identical bucket
-    with hashlib (``bucket_of``) — that is what makes the small-delta
-    driver-side merge fast path possible. Hashing cost is once per merged
+    with hashlib (``bucket_of``) — that is what makes the driver-side
+    DuckDB merge possible. Hashing cost is once per merged
     key, noise next to the bucket shuffle. Plays the same role as the
     Iceberg twin's bucket(B, url) transform.
     """
@@ -516,24 +516,19 @@ class ParquetCheckpointStore:
                             ) -> bool:
         """Driver-side twin of ``merge_results`` over staged parquet dirs.
 
-        ``staged`` is one dir or a list of them in attempt order. A call's
-        few thousand keys cost 2-3 Spark jobs (~1-2 s of scheduling/commit
-        latency in local mode, worse on a cluster) on the Spark path; here
-        DuckDB reads (url, warc_ts, error_type) straight from the parquet,
-        applies the same ``FOLD_SQL`` and ``result_transition_sql`` text,
-        writes the touched bucket files and CAS-flips the manifest. The
-        caller decides whether a call is small enough. Returns False —
+        ``staged`` is one dir or a list of them in attempt order. DuckDB
+        reads (url, warc_ts, error_type) straight from the parquet, applies
+        the same ``FOLD_SQL`` and ``result_transition_sql`` text, writes the
+        touched bucket files and CAS-flips the manifest: no Spark job, and
+        the scan streams, so it runs at every call size. Returns False —
         caller falls back to the Spark path — when the store or a staged
-        dir is not a local directory, or duckdb is not installed.
+        dir is not a local directory.
         """
         paths = [staged] if isinstance(staged, str) else list(staged)
         if not (os.path.isdir(self.root)
                 and all(os.path.isdir(p) for p in paths)):
             return False
-        try:
-            import duckdb
-        except ImportError:
-            return False  # vanilla install: the Spark merge path handles it
+        import duckdb
         import glob as globmod
 
         # explicit file probe instead of exception sniffing: a pass with

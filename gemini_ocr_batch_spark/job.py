@@ -10,15 +10,18 @@ the retry loop, and the retry loop runs inside the kernel's tasks):
           → mapInArrow(extract, re-extracting a failed row in the same task
             while its budget lasts; one row per attempt)
           → ONE bulk write, hive-partitioned by (attempt, is_ok)
-          → per attempt k, in order: lineage, promote to pass_num=base+k
+          → ONE lineage aggregate over the staged call, then each attempt k
+            promoted, in order, to pass_num=base+k
           → ONE checkpoint MERGE of all the call's pass dirs (folded per
             key; the manifest flip records them as its commit), then
-            _MERGED stamps and the failure log per pass dir — all from
-            column-pruned reads of that same parquet
+            _MERGED stamps and ONE failure-log file for the call — all
+            from column-pruned reads of that same parquet
 
-Whether lineage, the MERGE and the failure log run driver-side (pyarrow /
-DuckDB) or as Spark jobs is decided once per call from the staged row
-count, read from the parquet footers.
+Lineage, the MERGE and the failure log are DuckDB statements on the
+driver at every call size (the Iceberg store's MERGE is its Spark MERGE
+INTO): one Spark job per step would cost more than the work, and DuckDB
+streams the staged parquet, so driver memory does not grow with the call.
+The job therefore needs ``duckdb`` on the driver.
 
 Physical design (why one write): the kernel output is written exactly once
 and each attempt dir is promoted to ``extracted_all/run_id=R/pass_num=N/
@@ -49,13 +52,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gemini_ocr_batch_spark.checkpoint import ParquetCheckpointStore
-from gemini_ocr_batch_spark.lineage import lineage_rows, lineage_rows_local
+from gemini_ocr_batch_spark.checkpoint import ParquetCheckpointStore, _sql_str
+from gemini_ocr_batch_spark.lineage import write_lineage
 from gemini_ocr_batch_spark.operators.extract import extract_attempts
 from gemini_ocr_batch_spark.schemas import (
     EXTRACTED_SCHEMA,
     EXTRACTED_USER_COLUMNS,
-    LINEAGE_SCHEMA,
 )
 
 # staged-pass schema: kernel output + the is_ok partition column
@@ -65,61 +67,18 @@ STAGED_SCHEMA = T.StructType(
 )
 
 
-def _append_lineage_rows(rows, lineage_path: str, run_id: str,
-                         pass_num: int) -> None:
-    """Append collected lineage rows as one parquet file, driver-side."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(lineage_path, exist_ok=True)
-    cols = {f.name: [r[f.name] for r in rows] for f in LINEAGE_SCHEMA.fields}
-    table = pa.table(
-        {
-            "run_id": pa.array(cols["run_id"], pa.string()),
-            "pass_num": pa.array(cols["pass_num"], pa.int32()),
-            "partition_id": pa.array(cols["partition_id"], pa.int32()),
-            "row_count": pa.array(cols["row_count"], pa.int64()),
-            "success_count": pa.array(cols["success_count"], pa.int64()),
-            "failure_count": pa.array(cols["failure_count"], pa.int64()),
-            "bytes_in": pa.array(cols["bytes_in"], pa.int64()),
-            "kernel_wall_ms": pa.array(cols["kernel_wall_ms"], pa.float64()),
-            "extractor_version": pa.array(cols["extractor_version"], pa.string()),
-            "started_at": pa.array(cols["started_at"], pa.timestamp("us")),
-        }
-    )
-    pq.write_table(
-        table, os.path.join(lineage_path, f"part-{run_id}-{pass_num}.parquet")
-    )
-
-
 # marker file dropped into a promoted pass dir once its keys are in the
 # checkpoint — the crash-recovery analog of the reference's output-existence
 # probe (reference: src/scanner.py:90-91)
 _MERGED = "_MERGED"
 
-# driver-side ceiling: a call staging at most this many rows runs lineage,
-# the checkpoint MERGE and the failure log on the driver, where 2-3 Spark
-# jobs per step would cost more than the work itself; above it, all three
-# run as Spark jobs. Decided once per call (``_is_small``).
-LOCAL_MAX_ROWS = 2_000_000
-
-
-def _is_small(paths: list[str]) -> bool:
-    """Do these staged dirs hold at most LOCAL_MAX_ROWS rows? Read from
-    the parquet footers only."""
-    import pyarrow.dataset as pads
-
-    return sum(
-        pads.dataset(p, format="parquet").count_rows() for p in paths
-    ) <= LOCAL_MAX_ROWS
-
-
 def _merge_passes(spark: SparkSession, store, paths: list[str],
-                  commit: list[str], small: bool) -> None:
+                  commit: list[str], local: bool = True) -> None:
     """ONE checkpoint MERGE of pass dirs, each key's rows folded in list
-    (attempt) order; the flip records ``commit``. Driver-side for a small
-    call when the store allows it, a Spark MERGE otherwise."""
-    if small and store.merge_results_local(paths, commit):
+    (attempt) order; the flip records ``commit``. DuckDB on the driver
+    when the store allows it; a store without a driver-side merge (the
+    Iceberg table), or ``local=False``, gets the store's Spark MERGE."""
+    if local and store.merge_results_local(paths, commit):
         return
     store.merge_results(
         reduce(DataFrame.unionByName, (
@@ -132,52 +91,31 @@ def _merge_passes(spark: SparkSession, store, paths: list[str],
     )
 
 
-def _append_failures_local(final_path: str, failures_path: str,
-                           run_id: str, pass_num: int,
-                           attempt: int) -> None:
-    """Driver-side failures append for a small local pass: read the failure
-    columns straight from the promoted pass parquet and write one file —
-    the pyarrow twin of the Spark failures sink (same columns). Reads only
-    the is_ok=false partition dir (the pyarrow analog of the Spark path's
-    partition pruning)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
-
-    bad_dir = os.path.join(final_path, "is_ok=false")
-    if not os.path.isdir(bad_dir):
-        return
-    tbl = pads.dataset(bad_dir, format="parquet").to_table(
-        columns=["url", "warc_ts", "error_type", "error_message",
-                 "input_sample"]
+def _append_failures(con, passes: list[tuple[int, str, int]],
+                     failures_path: str, run_id: str,
+                     base_pass: int) -> None:
+    """ONE failure-log file for the call: the failure columns of every
+    promoted pass dir's is_ok=false partition, with ``attempts`` = k + 1
+    for attempt k (the attempt within this call, not pass_num, which a
+    fixed-run_id rerun offsets by base_pass). ``created_at`` is the
+    statement's UTC instant."""
+    rows = " UNION ALL ".join(
+        "SELECT url, CAST(warc_ts AS TIMESTAMPTZ) AS warc_ts, error_type,"
+        f" error_message, input_sample, CAST({k + 1} AS INTEGER) AS attempts"
+        " FROM read_parquet("
+        f"{_sql_str(os.path.join(path, 'is_ok=false', '*.parquet'))},"
+        " hive_partitioning = false)"
+        for k, path, n_bad in passes if n_bad
     )
-    tbl = tbl.filter(pc.is_valid(tbl.column("error_type")))
-    if tbl.num_rows == 0:
+    if not rows:
         return
-    import datetime as dt
-
-    n = tbl.num_rows
-    now = dt.datetime.now(dt.timezone.utc)
-    ts_type = pa.timestamp("us", tz="UTC")
-    out = pa.table(
-        {
-            "url": tbl.column("url"),
-            # defensive: INT96-written inputs read as naive ns — normalize
-            "warc_ts": tbl.column("warc_ts").cast(ts_type),
-            "error_type": tbl.column("error_type"),
-            "error_message": tbl.column("error_message"),
-            "input_sample": tbl.column("input_sample"),
-            "attempts": pa.array([attempt] * n, pa.int32()),
-            "run_id": pa.array([run_id] * n, pa.string()),
-            "created_at": pa.array([now] * n, pa.timestamp("us", tz="UTC")),
-        }
-    )
     os.makedirs(failures_path, exist_ok=True)
-    pq.write_table(
-        out,
-        os.path.join(failures_path, f"part-{run_id}-{pass_num}.parquet"),
-    )
+    target = os.path.join(failures_path, f"part-{run_id}-{base_pass}.parquet")
+    con.execute(f"""
+        COPY (SELECT *, {_sql_str(run_id)} AS run_id, now() AS created_at
+              FROM ({rows}))
+        TO {_sql_str(target)} (FORMAT PARQUET)
+    """)
 
 
 def _touch(path: str) -> None:
@@ -225,8 +163,7 @@ def _reconcile_orphans(
             if os.path.relpath(p, all_path) not in committed]
     if todo:
         _merge_passes(spark, store, todo,
-                      [os.path.relpath(p, all_path) for p in todo],
-                      _is_small(todo))
+                      [os.path.relpath(p, all_path) for p in todo])
     for p in orphans:
         _touch(os.path.join(p, _MERGED))
     return len(todo)
@@ -360,73 +297,49 @@ def run_extraction_job(
         int(d.split("=", 1)[1])
         for d in os.listdir(tmp_path) if d.startswith("attempt=")
     )
-    small = _is_small([tmp_path])
-    # --- per attempt dir, in order: lineage, promote
     passes = []  # (k, pass dir, failed rows)
-    for k in attempts:
-        pass_num = base_pass + k
-        att_path = os.path.join(tmp_path, f"attempt={k}")
-        final_path = os.path.join(
-            all_path, f"run_id={run_id}", f"pass_num={pass_num}"
-        )
-        # one tiny aggregate gives lineage rows AND the pass accounting;
-        # driver-side (pyarrow) for a small call, where each avoided Spark
-        # job saves ~0.5 s of fixed scheduling/commit latency
-        if small:
-            lin_rows = lineage_rows_local(att_path, run_id, pass_num)
-        else:
-            staged = spark.read.schema(STAGED_SCHEMA).parquet(att_path)
-            lin_rows = lineage_rows(staged, run_id, pass_num).collect()
-        n_total = sum(int(r["row_count"]) for r in lin_rows)
-        n_bad = sum(int(r["failure_count"]) for r in lin_rows)
-        _append_lineage_rows(lin_rows, lineage_path, run_id, pass_num)
-        t_ph = result._phase("lineage", t_ph)
-        # promote: atomic rename into the readable layout. Pass dirs are
-        # immutable once promoted (base_pass skips existing ones; reconcile
-        # merged any unmarked ones), so the target cannot exist — os.rename
-        # fails loudly rather than ever replacing extracted data. The
-        # write committed every attempt dir at once; each keeps a
-        # _SUCCESS marker as a pass dir always had.
-        _touch(os.path.join(att_path, "_SUCCESS"))
-        os.makedirs(os.path.dirname(final_path), exist_ok=True)
-        os.rename(att_path, final_path)
-        passes.append((k, final_path, n_bad))
-        result.passes += 1
-        result.extracted_rows += n_total
-        result.success_rows += n_total - n_bad
-        result.failed_rows += n_bad
-    # --- ONE checkpoint MERGE of the call's pass dirs (3 key/status
-    # columns), its flip recording them; then the _MERGED stamps
-    if passes:
-        paths = [p for _, p, _ in passes]
-        _merge_passes(spark, store, paths,
-                      [os.path.relpath(p, all_path) for p in paths], small)
-        for p in paths:
-            _touch(os.path.join(p, _MERGED))
-        t_ph = result._phase("merge", t_ph)
-    # --- failure log per pass dir; it counts attempts within this call
-    # (k + 1), not pass_num, which a fixed-run_id rerun offsets by base_pass
-    for k, final_path, n_bad in passes:
-        if not n_bad:
-            continue
-        if small:
-            _append_failures_local(
-                final_path, failures_path, run_id, base_pass + k, k + 1
-            )
-        else:
-            # failure log: partition-pruned (is_ok=false) + column-pruned
-            staged = spark.read.schema(STAGED_SCHEMA).parquet(final_path)
-            staged.filter(~F.col("is_ok")).select(
-                "url",
-                "warc_ts",
-                "error_type",
-                "error_message",
-                "input_sample",
-                F.lit(k + 1).cast("int").alias("attempts"),
-                F.lit(run_id).alias("run_id"),
-                F.current_timestamp().alias("created_at"),
-            ).coalesce(8).write.mode("append").parquet(failures_path)
-        t_ph = result._phase("failures", t_ph)
+    if attempts:  # an empty frontier staged nothing: no tail to run
+        import duckdb
+
+        with duckdb.connect() as con:
+            # a naive staged timestamp (INT96-written input) is UTC, as
+            # Spark's session timeZone wrote it
+            con.execute("SET TimeZone = 'UTC'")
+            # ONE aggregate gives the lineage rows AND the pass accounting
+            counts = write_lineage(con, tmp_path, lineage_path, run_id,
+                                   base_pass)
+            t_ph = result._phase("lineage", t_ph)
+            # promote each attempt dir, in order: atomic rename into the
+            # readable layout. Pass dirs are immutable once promoted
+            # (base_pass skips existing ones; reconcile merged any
+            # unmarked ones), so the target cannot exist — os.rename fails
+            # loudly rather than ever replacing extracted data. The write
+            # committed every attempt dir at once; each keeps a _SUCCESS
+            # marker as a pass dir always had.
+            for k in attempts:
+                n_total, n_bad = counts[k]
+                att_path = os.path.join(tmp_path, f"attempt={k}")
+                final_path = os.path.join(
+                    all_path, f"run_id={run_id}", f"pass_num={base_pass + k}"
+                )
+                _touch(os.path.join(att_path, "_SUCCESS"))
+                os.makedirs(os.path.dirname(final_path), exist_ok=True)
+                os.rename(att_path, final_path)
+                passes.append((k, final_path, n_bad))
+                result.passes += 1
+                result.extracted_rows += n_total
+                result.success_rows += n_total - n_bad
+                result.failed_rows += n_bad
+            # ONE checkpoint MERGE of the call's pass dirs (3 key/status
+            # columns), its flip recording them; then the _MERGED stamps
+            paths = [p for _, p, _ in passes]
+            _merge_passes(spark, store, paths,
+                          [os.path.relpath(p, all_path) for p in paths])
+            for p in paths:
+                _touch(os.path.join(p, _MERGED))
+            t_ph = result._phase("merge", t_ph)
+            _append_failures(con, passes, failures_path, run_id, base_pass)
+            result._phase("failures", t_ph)
     shutil.rmtree(staging_root, ignore_errors=True)
     store.vacuum()
     result.wall_sec = time.perf_counter() - t_start

@@ -3,115 +3,65 @@
 Replaces the reference's failure_logs + Prefect artifact reporting
 (reference: src/database.py:101-125, src/flow.py:149-198). The extraction
 operator emits physical telemetry per row (partition_id, bytes_in,
-kernel_ns); this module aggregates it to one row per physical partition and
-appends to an append-only parquet table — the reference's append-only
-failure-log pattern (reference: src/prefect_state.py:245-282).
+kernel_ns); this module aggregates a call's staged output to one row per
+(attempt, physical partition) and appends it to an append-only parquet
+table — the reference's append-only failure-log pattern (reference:
+src/prefect_state.py:245-282).
+
+The aggregate is one DuckDB statement on the driver over the call's staged
+parquet, at every call size: it reads only the three int telemetry columns
+plus the hive ``attempt``/``is_ok`` directory fields, and DuckDB streams
+the scan, so driver memory does not grow with the call. The job is tied to
+the local filesystem already (it stages, lists and renames its dirs with
+``os``), so the driver can always read the staged parquet.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import os
 
 from gemini_ocr_batch_spark import EXTRACTOR_VERSION
+from gemini_ocr_batch_spark.checkpoint import _sql_str
 
 
-def lineage_rows(extracted: DataFrame, run_id: str, pass_num: int) -> DataFrame:
-    """Aggregate extracted rows → one lineage row per physical partition."""
-    return (
-        extracted.groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum(
-                F.when(F.col("error_type").isNull(), 1).otherwise(0)
-            ).alias("success_count"),
-            F.sum(
-                F.when(F.col("error_type").isNotNull(), 1).otherwise(0)
-            ).alias("failure_count"),
-            F.sum("bytes_in").alias("bytes_in"),
-            (F.sum("kernel_ns") / F.lit(1e6)).alias("kernel_wall_ms"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(pass_num).cast("int").alias("pass_num"),
-            F.col("partition_id"),
-            F.col("row_count"),
-            F.col("success_count"),
-            F.col("failure_count"),
-            F.col("bytes_in"),
-            F.col("kernel_wall_ms"),
-            F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
-            F.current_timestamp().alias("started_at"),
-        )
-    )
+def write_lineage(con, staged: str, lineage_path: str, run_id: str,
+                  base_pass: int) -> dict[int, tuple[int, int]]:
+    """Aggregate the staged call dir (``attempt=k/is_ok=…`` hive layout)
+    into LINEAGE_SCHEMA rows, one per (attempt, partition_id) with
+    ``pass_num = base_pass + attempt``, and write them as ONE parquet file.
 
-
-def lineage_rows_local(staged_path: str, run_id: str,
-                       pass_num: int) -> list[dict]:
-    """Driver-side twin of :func:`lineage_rows` over a LOCAL staged dir.
-
-    A pass's telemetry columns (partition_id, error_type, bytes_in,
-    kernel_ns) are a few MB even at bench scale; aggregating them with
-    pyarrow replaces one whole Spark job of fixed scheduling/commit
-    latency per pass. Returns plain dicts consumable by the same pyarrow
-    lineage appender; the job calls it only for a call small enough for
-    one driver. Tests pin this equal to the Spark path.
+    ``con`` is an open DuckDB connection. ``started_at`` is naive UTC
+    whatever the connection's TimeZone. Returns ``{attempt: (rows, failed
+    rows)}``: the pass accounting comes from the same aggregate.
     """
-    import pyarrow.dataset as pads
-
-    ds = pads.dataset(staged_path, format="parquet", partitioning="hive")
-    if "partition_id" not in ds.schema.names:
-        return []  # empty pass: zero data files were written
-    # Only the three int64 telemetry columns are read from data pages; the
-    # failure count comes from the hive `is_ok` partition field (free —
-    # decoded from directory names), so the error_type STRING column never
-    # leaves disk. Aggregation is pyarrow-native (C++), no pandas layer.
-    tbl = ds.to_table(
-        columns=["partition_id", "bytes_in", "kernel_ns", "is_ok"]
+    src = (
+        f"read_parquet({_sql_str(os.path.join(staged, '*', '*', '*.parquet'))},"
+        " hive_partitioning = true,"
+        " hive_types = {'attempt': INTEGER, 'is_ok': BOOLEAN})"
     )
-    if tbl.num_rows == 0:
-        return []
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    bad = pc.if_else(
-        pc.equal(tbl.column("is_ok").cast(pa.string()), "false"),
-        pa.scalar(1, pa.int64()),
-        pa.scalar(0, pa.int64()),
-    )
-    tbl = tbl.drop_columns(["is_ok"]).append_column("is_bad", bad)
-    agg = (
-        pa.TableGroupBy(tbl, "partition_id")
-        .aggregate(
-            [
-                ("partition_id", "count"),
-                ("is_bad", "sum"),
-                ("bytes_in", "sum"),
-                ("kernel_ns", "sum"),
-            ]
-        )
-        .sort_by("partition_id")
-    )
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    rows = []
-    for rec in agg.to_pylist():
-        n = int(rec["partition_id_count"])
-        n_bad = int(rec["is_bad_sum"])
-        rows.append(
-            {
-                "run_id": run_id,
-                "pass_num": int(pass_num),
-                "partition_id": int(rec["partition_id"]),
-                "row_count": n,
-                "success_count": n - n_bad,
-                "failure_count": n_bad,
-                "bytes_in": int(rec["bytes_in_sum"]),
-                "kernel_wall_ms": float(rec["kernel_ns_sum"]) / 1e6,
-                "extractor_version": EXTRACTOR_VERSION,
-                "started_at": now,
-            }
-        )
-    return rows
-
+    con.execute(f"""
+        CREATE OR REPLACE TEMP TABLE lineage AS
+        SELECT {_sql_str(run_id)} AS run_id,
+               CAST({int(base_pass)} + attempt AS INTEGER) AS pass_num,
+               partition_id,
+               count(*) AS row_count,
+               CAST(count_if(is_ok) AS BIGINT) AS success_count,
+               CAST(count_if(NOT is_ok) AS BIGINT) AS failure_count,
+               CAST(sum(bytes_in) AS BIGINT) AS bytes_in,
+               CAST(sum(kernel_ns) / 1e6 AS DOUBLE) AS kernel_wall_ms,
+               {_sql_str(EXTRACTOR_VERSION)} AS extractor_version,
+               timezone('UTC', now()) AS started_at
+        FROM {src}
+        GROUP BY attempt, partition_id
+        ORDER BY pass_num, partition_id
+    """)
+    os.makedirs(lineage_path, exist_ok=True)
+    target = os.path.join(lineage_path, f"part-{run_id}-{base_pass}.parquet")
+    con.execute(f"COPY lineage TO {_sql_str(target)} (FORMAT PARQUET)")
+    return {
+        int(p) - base_pass: (int(n), int(bad))
+        for p, n, bad in con.execute(
+            "SELECT pass_num, sum(row_count), sum(failure_count) "
+            "FROM lineage GROUP BY pass_num"
+        ).fetchall()
+    }

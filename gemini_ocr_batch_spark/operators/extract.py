@@ -5,8 +5,9 @@ src/batch_builder.py:23-43 request build + src/results.py:81-230 decode/
 validate). The remote LLM is replaced by the deterministic kernels; the
 plumbing is ``mapInArrow`` over Arrow batches — no per-row Python at the
 DataFrame layer (BASELINE.json input_hint).
-``extract_attempts`` is the job's variant: it retries a failed row inside
-the same task, up to a per-row attempt budget.
+``extract_attempts`` is the job's form: it retries a failed row inside
+the same task, up to a per-row attempt budget; ``extract_pages`` is the
+same kernel with a budget of 1.
 
 Skew handling (north_rule: "salted repartitioning by byte-size buckets"):
 giant blobs make per-task work heavy-tailed. ``salt_by_size`` spreads rows
@@ -134,18 +135,6 @@ def _partition_id() -> int:
     return tc.partitionId() if tc is not None else -1
 
 
-def _extract_batches_arrow(it):
-    """mapInArrow kernel: pyarrow RecordBatch in/out — skips the pandas
-    object-column round trip (list-of-struct spans are expensive to carry
-    through pandas; building the Arrow ListArray directly is cheaper).
-    Once the parser got ~2x faster, serde became the bottleneck; this
-    measured ~1.3x the former mapInPandas kernel at 32 cores (118k vs 92k
-    docs/s at sf0.1)."""
-    pid = _partition_id()
-    for batch in it:
-        yield _extract_record_batch(batch, pid)
-
-
 def _extract_attempts_arrow(it):
     """mapInArrow kernel with in-task retries: every row gets up to its
     ``_budget`` attempts. Attempt 0 runs over the whole batch; each later
@@ -246,7 +235,8 @@ def extract_pages(
     n_partitions: int | None = None,
     salt: bool | str = "auto",
 ) -> DataFrame:
-    """pages(url, warc_ts, html, ...) → extracted rows (EXTRACTED_SCHEMA).
+    """pages(url, warc_ts, html, ...) → extracted rows (EXTRACTED_SCHEMA):
+    ``extract_attempts`` with one attempt per row, minus its ``attempt``.
 
     Column-prunes to exactly the three columns the kernel needs before any
     shuffle, so `text`/`lang` never move.
@@ -270,8 +260,10 @@ def extract_pages(
     - True: always salt (pathological co-location, non-splittable blobs).
     - False: never (streaming frames, pre-partitioned input).
     """
-    slim = _kernel_input(pages, n_partitions, salt)
-    return slim.mapInArrow(_extract_batches_arrow, schema=EXTRACTED_SCHEMA)
+    slim = _kernel_input(pages, n_partitions, salt, F.lit(1).alias("_budget"))
+    return slim.mapInArrow(_extract_attempts_arrow, ATTEMPTS_SCHEMA).drop(
+        "attempt"
+    )
 
 
 def extract_attempts(

@@ -137,10 +137,11 @@ FAILURES_SCHEMA = T.StructType(
         T.StructField("input_sample", T.StringType(), True),
         # `attempts` is the attempt index WITHIN THIS RUN (1 = first pass
         # of this invocation), NOT the checkpoint's cumulative counter:
-        # the log row is written before the pass's MERGE lands, so the
-        # cumulative value isn't knowable here, and on a rerun against a
-        # non-fresh checkpoint the two numbers legitimately differ. Join
-        # to the checkpoint by (url, warc_ts) — never by attempts.
+        # the log is written from the pass dirs alone, after the call's
+        # one MERGE, and the cumulative count would need a read back of
+        # the checkpoint per failed key; on a rerun against a non-fresh
+        # checkpoint the two numbers legitimately differ. Join to the
+        # checkpoint by (url, warc_ts) — never by attempts.
         T.StructField("attempts", T.IntegerType(), False),
         T.StructField("run_id", T.StringType(), False),
         T.StructField("created_at", T.TimestampType(), False),

@@ -609,7 +609,7 @@ class _Crash(RuntimeError):
     pass
 
 
-@pytest.mark.parametrize("crash_at", ["merge_attempt_0", "lineage_attempt_1"])
+@pytest.mark.parametrize("crash_at", ["merge_attempt_0", "promote_attempt_1"])
 def test_crash_between_attempts_resumes_to_uninterrupted_state(
         spark, tmp_path, monkeypatch, crash_at):
     """A driver crash in the call's one merge (every attempt dir already
@@ -630,13 +630,13 @@ def test_crash_between_attempts_resumes_to_uninterrupted_state(
         monkeypatch.setattr(ParquetCheckpointStore, "merge_results_local",
                             crash)
     else:
-        real = job.lineage_rows_local
+        real = os.rename
 
-        def crash(path, run_id, pass_num, *a, **k):
-            if pass_num == 1:
-                raise _Crash(path)
-            return real(path, run_id, pass_num, *a, **k)
-        monkeypatch.setattr(job, "lineage_rows_local", crash)
+        def crash(src, dst, *a, **k):
+            if src.endswith("attempt=1"):
+                raise _Crash(src)
+            return real(src, dst, *a, **k)
+        monkeypatch.setattr(job.os, "rename", crash)
     with pytest.raises(_Crash):
         run_extraction_job(spark, pages, out, max_retries=3, run_id="r")
     monkeypatch.undo()
@@ -727,13 +727,11 @@ def test_one_manifest_flip_per_call(spark, tmp_path, monkeypatch):
     assert flips[0]["commit"] == [f"run_id=b/pass_num={k}" for k in range(3)]
 
 
-def test_spark_and_driver_paths_agree_for_a_call(spark, tmp_path,
-                                                 monkeypatch):
-    """A call above the driver-side ceiling runs lineage, the merge and the
-    failure log as Spark jobs; each must write what the driver-side path
-    writes for a small call."""
-    import gemini_ocr_batch_spark.job as job
-
+def test_spark_merge_path_agrees_for_a_call(spark, tmp_path, monkeypatch):
+    """A store without a driver-side merge (the Iceberg path:
+    merge_results_local returns False) gets the Spark MERGE; the call must
+    leave the same checkpoint, pass dirs, failure rows and lineage sums as
+    the default DuckDB merge."""
     pages = _mixed_pages(spark)
 
     def run(out):
@@ -752,8 +750,63 @@ def test_spark_and_driver_paths_agree_for_a_call(spark, tmp_path,
                 _state(spark, out), _passes_of(out), failures, lineage)
 
     local = run(str(tmp_path / "local"))
-    monkeypatch.setattr(job, "LOCAL_MAX_ROWS", -1)
+    merged = []
+    real_merge = ParquetCheckpointStore.merge_results
+
+    def spark_merge(self, *a, **k):
+        merged.append(1)
+        return real_merge(self, *a, **k)
     monkeypatch.setattr(ParquetCheckpointStore, "merge_results_local",
-                        lambda *a, **k: pytest.fail("driver-side merge"))
+                        lambda *a, **k: False)
+    monkeypatch.setattr(ParquetCheckpointStore, "merge_results", spark_merge)
     assert run(str(tmp_path / "spark")) == local
+    assert merged == [1]
     assert local[0] == (3, 12 + 4 * 3, 4 * 3)
+    assert local[4] == [(0, 16, 4), (1, 4, 4), (2, 4, 4)]
+
+
+def test_lineage_and_failure_files_keep_their_parquet_types(spark, tmp_path):
+    """The lineage and failure files carry the types the earlier pyarrow
+    writers produced (naive started_at; UTC warc_ts/created_at; int32
+    pass_num/partition_id/attempts), and Spark reads a lineage dir that
+    mixes a file in that earlier format with a new one."""
+    import pyarrow as pa
+
+    out = str(tmp_path / "out")
+    run_extraction_job(spark, _mixed_pages(spark), out, max_retries=3,
+                       run_id="r")
+    utc = pa.timestamp("us", tz="UTC")
+    lineage_schema = pa.schema([
+        ("run_id", pa.string()), ("pass_num", pa.int32()),
+        ("partition_id", pa.int32()), ("row_count", pa.int64()),
+        ("success_count", pa.int64()), ("failure_count", pa.int64()),
+        ("bytes_in", pa.int64()), ("kernel_wall_ms", pa.float64()),
+        ("extractor_version", pa.string()),
+        ("started_at", pa.timestamp("us")),
+    ])
+    failures_schema = pa.schema([
+        ("url", pa.string()), ("warc_ts", utc), ("error_type", pa.string()),
+        ("error_message", pa.string()), ("input_sample", pa.string()),
+        ("attempts", pa.int32()), ("run_id", pa.string()),
+        ("created_at", utc),
+    ])
+    lineage_dir = os.path.join(out, "lineage")
+    assert os.listdir(lineage_dir) == ["part-r-0.parquet"]
+    assert pq.read_schema(os.path.join(lineage_dir, "part-r-0.parquet")
+                          ).equals(lineage_schema)
+    assert pq.read_schema(os.path.join(out, "failures", "part-r-0.parquet")
+                          ).equals(failures_schema)
+    failures = pq.read_table(os.path.join(out, "failures"))
+    assert set(failures.column("warc_ts").to_pylist()) == {
+        _TS.replace(tzinfo=dt.timezone.utc)}
+
+    old = dict(run_id=["old"], pass_num=[0], partition_id=[0], row_count=[7],
+               success_count=[7], failure_count=[0], bytes_in=[70],
+               kernel_wall_ms=[1.5], extractor_version=["v"],
+               started_at=[dt.datetime(2024, 1, 2, 3, 4, 5)])
+    pq.write_table(pa.table(old, schema=lineage_schema),
+                   os.path.join(lineage_dir, "part-old-0.parquet"))
+    rows = spark.read.parquet(lineage_dir).collect()
+    assert sum(r["row_count"] for r in rows) == 7 + 12 + 4 * 3
+    assert [r["started_at"] for r in rows if r["run_id"] == "old"] == [
+        dt.datetime(2024, 1, 2, 3, 4, 5)]

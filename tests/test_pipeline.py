@@ -128,7 +128,11 @@ def test_failures_and_lineage_written(spark, pages_df, tmp_path):
     assert agg["bad"] == res.failed_rows
     # per-partition granularity: >1 physical partition reported
     assert lineage.select("partition_id").distinct().count() > 1
-    assert lineage.filter(F.col("bytes_in") <= 0).count() == 0 or True
+    # pass 0 attempted every input row once: its bytes_in is the input's
+    # html bytes (a NULL blob counts 0)
+    html_bytes = pages_df.agg(F.sum(F.length("html"))).collect()[0][0]
+    pass0 = lineage.filter(F.col("pass_num") == 0)
+    assert pass0.agg(F.sum("bytes_in")).collect()[0][0] == html_bytes > 0
 
 
 def test_prev_context_view(spark, pages_df, tmp_path):
