@@ -43,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 import time
 import uuid
 
@@ -77,6 +78,40 @@ def _sql_str(path: str) -> str:
     malformed SQL.
     """
     return "'" + path.replace("'", "''") + "'"
+
+
+# share of the driver's memory one driver-side DuckDB connection may hold;
+# the rest stays with the Spark JVM and its Python workers beside it
+# (DuckDB's own default is 80% of host RAM)
+DUCKDB_RAM_SHARE = 0.25
+
+
+def _memory_bytes() -> int:
+    """The host's RAM, or the process's cgroup memory limit when that is
+    smaller (cgroup v2 ``memory.max``, else v1 ``memory.limit_in_bytes``)."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for f in ("/sys/fs/cgroup/memory.max",
+              "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(f, encoding="ascii") as fh:
+                return min(ram, int(fh.read().strip()))
+        except (OSError, ValueError):  # absent, or "max" (no limit)
+            continue
+    return ram
+
+
+def duckdb_connect(temp_dir: str):
+    """A DuckDB connection for the job's commit tail: it spills into
+    ``temp_dir`` (not ``.tmp`` under the working directory) and holds at
+    most ``DUCKDB_RAM_SHARE`` of the host's RAM or of the cgroup's memory
+    limit, whichever is smaller."""
+    import duckdb
+
+    return duckdb.connect(config={
+        "temp_directory": temp_dir,
+        "memory_limit":
+            f"{int(_memory_bytes() * DUCKDB_RAM_SHARE) // 2**20}MB",
+    })
 
 
 def _bucket_col(n_buckets: int):
@@ -198,6 +233,22 @@ def _apply_transition(old: DataFrame | None, delta: DataFrame,
         F.expr(text[f.name]).cast(f.dataType).alias(f.name)
         for f in CHECKPOINT_SCHEMA.fields if f.name not in KEY
     ])
+
+
+def _open_frontier(pages: DataFrame, checkpoint: DataFrame) -> DataFrame:
+    """pages ⟕ checkpoint(url, warc_ts, status, attempts), keeping the rows
+    whose key is absent or not success/dead, with ``_prior`` = their
+    attempts (0 when absent). Only the key, status and attempts columns of
+    the checkpoint are read; the blob never enters the join's build side."""
+    ck = checkpoint.select(*KEY, F.col("status").alias("_status"),
+                           F.col("attempts").alias("_attempts"))
+    return (
+        pages.join(ck, on=KEY, how="left")
+        .filter(F.col("_status").isNull()
+                | ~F.col("_status").isin(STATUS_SUCCESS, STATUS_DEAD))
+        .select(*pages.columns,
+                F.coalesce(F.col("_attempts"), F.lit(0)).alias("_prior"))
+    )
 
 
 class ParquetCheckpointStore:
@@ -434,17 +485,23 @@ class ParquetCheckpointStore:
         # would OOM the driver
         return pages.join(done, on=KEY, how="left_anti")
 
-    def open_attempts(self, spark: SparkSession) -> DataFrame | None:
-        """(url, warc_ts, attempts) of the keys a crashed or budget-cut
-        run left open (status neither success nor dead); None for a fresh
-        store, so the caller plans no join against an empty relation (the
-        same short-circuit as ``pending``)."""
+    def frontier(self, pages: DataFrame) -> DataFrame:
+        """``pending(pages)`` plus each row's prior attempts, from ONE read
+        of the checkpoint: the job's resume query.
+
+        One left join of the pages against the checkpoint's (url, warc_ts,
+        status, attempts) keeps the rows whose status is absent or neither
+        success nor dead (the rows ``pending`` keeps) and carries ``_prior``
+        = their checkpoint attempts, else 0. Catalyst picks the join like
+        ``pending``'s: a broadcast of a small snapshot, a sort-merge join at
+        10^9+ keys (one shuffle of the pages, not one per join). A fresh
+        store plans no join: ``_prior`` is 0.
+        """
         manifest = self._manifest()
         if manifest is None or not manifest["buckets"]:
-            return None
-        return self._read_buckets(spark, manifest).filter(
-            ~F.col("status").isin(STATUS_SUCCESS, STATUS_DEAD)
-        ).select(*KEY, "attempts")
+            return pages.select("*", F.lit(0).alias("_prior"))
+        return _open_frontier(
+            pages, self._read_buckets(pages.sparkSession, manifest))
 
     def _merge_bucketed(self, delta: DataFrame, transition,
                         commit: list[str] | None = None) -> None:
@@ -520,15 +577,16 @@ class ParquetCheckpointStore:
         reads (url, warc_ts, error_type) straight from the parquet, applies
         the same ``FOLD_SQL`` and ``result_transition_sql`` text, writes the
         touched bucket files and CAS-flips the manifest: no Spark job, and
-        the scan streams, so it runs at every call size. Returns False —
-        caller falls back to the Spark path — when the store or a staged
-        dir is not a local directory.
+        the scan streams, so it runs at every call size. Its connection
+        (``duckdb_connect``) spills into a temp dir under the store root,
+        removed when the merge ends. Returns False — caller falls back to the
+        Spark path — when the store or a staged dir is not a local
+        directory.
         """
         paths = [staged] if isinstance(staged, str) else list(staged)
         if not (os.path.isdir(self.root)
                 and all(os.path.isdir(p) for p in paths)):
             return False
-        import duckdb
         import glob as globmod
 
         # explicit file probe instead of exception sniffing: a pass with
@@ -545,8 +603,9 @@ class ParquetCheckpointStore:
             return True
         base = self._manifest()
         n_b = self.n_buckets
-        con = duckdb.connect()
-        try:
+        with (tempfile.TemporaryDirectory(prefix="_duckdb-",
+                                          dir=self.root) as spill,
+              duckdb_connect(spill) as con):
             old_paths = []
             if base and base.get("buckets"):
                 # a fresh store skips this pre-scan: it would re-read every
@@ -588,8 +647,6 @@ class ParquetCheckpointStore:
                  OVERWRITE_OR_IGNORE true)
                 """
             )
-        finally:
-            con.close()
         self._flip_version(version, base, base, commit)
         return True
 
@@ -667,10 +724,10 @@ class IcebergCheckpointStore:
         ).select(*KEY)
         return pages.join(done, on=KEY, how="left_anti")
 
-    def open_attempts(self, spark: SparkSession | None = None) -> DataFrame:
-        return self.read().filter(
-            ~F.col("status").isin(STATUS_SUCCESS, STATUS_DEAD)
-        ).select(*KEY, "attempts")
+    def frontier(self, pages: DataFrame) -> DataFrame:
+        """``pending`` plus ``_prior`` in one left join (see the Parquet
+        store's ``frontier``)."""
+        return _open_frontier(pages, self.read())
 
     def merge_results(self, extracted: DataFrame,
                       commit: list[str] | None = None) -> None:

@@ -5,23 +5,27 @@ loop + scan + submit + poll + process) collapses into ONE DataFrame DAG per
 call (SURVEY.md §3.4: with a pure extractor, wave execution degenerates to
 the retry loop, and the retry loop runs inside the kernel's tasks):
 
-    pages ⟕̸ checkpoint [⟕ open keys' prior attempts → attempt budget]
+    pages ⟕ checkpoint, keeping keys not success/dead, with each key's
+          prior attempts → attempt budget (ONE read of the checkpoint,
+          store.frontier; no join on a fresh store)
           → salt-by-size repartition (only for a coarse source)
           → mapInArrow(extract, re-extracting a failed row in the same task
             while its budget lasts; one row per attempt)
           → ONE bulk write, hive-partitioned by (attempt, is_ok)
-          → ONE lineage aggregate over the staged call, then each attempt k
-            promoted, in order, to pass_num=base+k
-          → ONE checkpoint MERGE of all the call's pass dirs (folded per
-            key; the manifest flip records them as its commit), then
-            _MERGED stamps and ONE failure-log file for the call — all
-            from column-pruned reads of that same parquet
+          → each attempt k promoted, in order, to pass_num=base+k
+          → ONE lineage file and ONE failure-log file for the call's pass
+            dirs, then ONE checkpoint MERGE of them (folded per key; the
+            manifest flip records them as its commit), then _MERGED
+            stamps — all from column-pruned reads of that same parquet
 
-Lineage, the MERGE and the failure log are DuckDB statements on the
-driver at every call size (the Iceberg store's MERGE is its Spark MERGE
-INTO): one Spark job per step would cost more than the work, and DuckDB
-streams the staged parquet, so driver memory does not grow with the call.
-The job therefore needs ``duckdb`` on the driver.
+Lineage, the failure log and the MERGE are DuckDB statements on the driver
+at every call size (the Iceberg store's MERGE is its Spark MERGE INTO): one
+Spark job per step would cost more than the work, and DuckDB streams the
+parquet, so driver memory does not grow with the call. The job therefore
+needs ``duckdb`` on the driver. The logs' connection spills into the call's
+``_staging/``, the MERGE's into a temp dir under the checkpoint root; each
+holds at most a fixed share of the host's RAM or of the cgroup's memory
+limit (``checkpoint.duckdb_connect``).
 
 Physical design (why one write): the kernel output is written exactly once
 and each attempt dir is promoted to ``extracted_all/run_id=R/pass_num=N/
@@ -36,12 +40,14 @@ nearly free. An empty frontier writes no attempt dir and promotes nothing
 — no separate anti-join pre-scan.
 
 Idempotence: rerunning the job is a no-op once every key is success/dead —
-the anti-join (checkpoint.pending) returns an empty frontier, exactly like
-the reference's output-existence probe (reference: src/scanner.py:90-91).
+the frontier (checkpoint.frontier, the rows checkpoint.pending keeps) is
+empty, exactly like the reference's output-existence probe (reference:
+src/scanner.py:90-91).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import time
@@ -52,7 +58,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gemini_ocr_batch_spark.checkpoint import ParquetCheckpointStore, _sql_str
+from gemini_ocr_batch_spark.checkpoint import (
+    ParquetCheckpointStore,
+    _sql_str,
+    duckdb_connect,
+)
 from gemini_ocr_batch_spark.lineage import write_lineage
 from gemini_ocr_batch_spark.operators.extract import extract_attempts
 from gemini_ocr_batch_spark.schemas import (
@@ -91,26 +101,28 @@ def _merge_passes(spark: SparkSession, store, paths: list[str],
     )
 
 
-def _append_failures(con, passes: list[tuple[int, str, int]],
-                     failures_path: str, run_id: str,
-                     base_pass: int) -> None:
-    """ONE failure-log file for the call: the failure columns of every
-    promoted pass dir's is_ok=false partition, with ``attempts`` = k + 1
-    for attempt k (the attempt within this call, not pass_num, which a
-    fixed-run_id rerun offsets by base_pass). ``created_at`` is the
-    statement's UTC instant."""
+def _append_failures(con, run_id: str, passes: list[tuple[int, str]],
+                     failures_path: str) -> None:
+    """ONE failure-log file for one run's pass dirs (``[(pass_num, dir)]``
+    in pass order, as ``write_lineage``): the failure columns of every
+    dir's is_ok=false partition, with ``attempts`` = k + 1 for the call's
+    attempt k (its pass_num minus the first pass's, not pass_num, which a
+    fixed-run_id rerun offsets). ``created_at`` is the statement's UTC
+    instant. Named by the run and first pass like the lineage file, so
+    logging the same passes again rewrites it."""
+    first = passes[0][0]
     rows = " UNION ALL ".join(
         "SELECT url, CAST(warc_ts AS TIMESTAMPTZ) AS warc_ts, error_type,"
-        f" error_message, input_sample, CAST({k + 1} AS INTEGER) AS attempts"
-        " FROM read_parquet("
-        f"{_sql_str(os.path.join(path, 'is_ok=false', '*.parquet'))},"
+        f" error_message, input_sample, CAST({n - first + 1} AS INTEGER)"
+        f" AS attempts FROM read_parquet({_sql_str(g)},"
         " hive_partitioning = false)"
-        for k, path, n_bad in passes if n_bad
+        for n, d in passes
+        if glob.glob(g := os.path.join(d, "is_ok=false", "*.parquet"))
     )
     if not rows:
         return
     os.makedirs(failures_path, exist_ok=True)
-    target = os.path.join(failures_path, f"part-{run_id}-{base_pass}.parquet")
+    target = os.path.join(failures_path, f"part-{run_id}-{first}.parquet")
     con.execute(f"""
         COPY (SELECT *, {_sql_str(run_id)} AS run_id, now() AS created_at
               FROM ({rows}))
@@ -123,20 +135,72 @@ def _touch(path: str) -> None:
         pass
 
 
-def _reconcile_orphans(
-    spark: SparkSession, store: ParquetCheckpointStore, all_path: str
-) -> int:
-    """Fold promoted-but-unmerged pass dirs into the checkpoint.
+def _commit_passes(spark: SparkSession, store, con, out_dir: str,
+                   paths: list[str], result: "JobResult"
+                   ) -> dict[str, tuple[int, int]]:
+    """The commit tail of promoted, unstamped pass dirs ``paths`` (under
+    ``out_dir/extracted_all``, in pass order): per run, ONE lineage file
+    and ONE failure-log file for the call's pass dirs; then ONE checkpoint
+    MERGE of the dirs the current manifest's commit record does not
+    already name, its flip recording them; then the ``_MERGED`` stamps.
+
+    The logs come before the MERGE and are named by run and the call's
+    first pass, so a crash anywhere before the stamps is repaired by
+    running this again over the unstamped dirs: the logs are rewritten,
+    not doubled, and the MERGE is not replayed. A crash partway through
+    the stamps leaves only some of a merged call's dirs here; the commit
+    record names all of them, so the logs again cover the whole call.
+    Returns ``{dir: (rows, failed rows)}`` of the logged dirs; the phases'
+    wall time is added to ``result``."""
+    all_path = os.path.join(out_dir, "extracted_all")
+    t = time.perf_counter()
+    committed = set(store.last_commit())
+    todo = [p for p in paths
+            if os.path.relpath(p, all_path) not in committed]
+    logged = set(paths)
+    if len(todo) < len(paths):
+        logged.update(d for c in committed
+                      if os.path.isdir(d := os.path.join(all_path, c)))
+    runs: dict[str, list[tuple[int, str]]] = {}
+    for p in logged:
+        run_dir, pass_dir = os.path.split(p)
+        runs.setdefault(os.path.basename(run_dir).split("=", 1)[1],
+                        []).append((int(pass_dir.split("=", 1)[1]), p))
+    for passes in runs.values():
+        passes.sort()
+    counts = {}
+    for run_id, passes in runs.items():
+        by_pass = write_lineage(con, run_id, passes,
+                                os.path.join(out_dir, "lineage"))
+        counts.update((d, by_pass.get(n, (0, 0))) for n, d in passes)
+    t = result._phase("lineage", t)
+    for run_id, passes in runs.items():
+        _append_failures(con, run_id, passes,
+                         os.path.join(out_dir, "failures"))
+    t = result._phase("failures", t)
+    if todo:
+        _merge_passes(spark, store, todo,
+                      [os.path.relpath(p, all_path) for p in todo])
+    for p in paths:
+        _touch(os.path.join(p, _MERGED))
+    result._phase("merge", t)
+    return counts
+
+
+def _reconcile_orphans(spark: SparkSession, store, out_dir: str,
+                       temp_dir: str) -> int:
+    """Finish the commit tail of promoted-but-unstamped pass dirs.
 
     Closes the crash window between promotion and the ``_MERGED`` stamps:
     without this, a rerun under a fresh run_id would re-extract those keys
     and leave duplicates under two run_id dirs. Promotion is an atomic
-    rename, so any pass dir found here is complete. An unstamped dir that
-    the manifest's commit record names was merged by the flip before the
-    crash and is only stamped; the others are merged, all in ONE folded
-    MERGE whose flip records them as its commit, then stamped. Returns the
-    number of merged pass dirs.
+    rename, so any pass dir found here is complete. ``_commit_passes``
+    over them rewrites their lineage and failure-log files, merges the
+    ones the manifest's commit record does not name (a dir it names was
+    merged by the flip before the crash) in ONE folded MERGE, and stamps
+    them all. Returns the number of pass dirs found.
     """
+    all_path = os.path.join(out_dir, "extracted_all")
     if not os.path.isdir(all_path):
         return 0
 
@@ -158,15 +222,11 @@ def _reconcile_orphans(
             if (pass_dir.startswith("pass_num=") and os.path.isdir(pass_path)
                     and not os.path.exists(os.path.join(pass_path, _MERGED))):
                 orphans.append(pass_path)
-    committed = set(store.last_commit())
-    todo = [p for p in orphans
-            if os.path.relpath(p, all_path) not in committed]
-    if todo:
-        _merge_passes(spark, store, todo,
-                      [os.path.relpath(p, all_path) for p in todo])
-    for p in orphans:
-        _touch(os.path.join(p, _MERGED))
-    return len(todo)
+    if orphans:
+        with duckdb_connect(temp_dir) as con:
+            con.execute("SET TimeZone = 'UTC'")
+            _commit_passes(spark, store, con, out_dir, orphans, JobResult())
+    return len(orphans)
 
 
 class JobResult:
@@ -214,13 +274,18 @@ def run_extraction_job(
                         marker once their keys are in the checkpoint
       _staging/       — the call's one write, attempt=k/is_ok=… (each
                         attempt dir atomic-renamed into extracted_all;
-                        leftovers of a crashed call wiped on job start)
+                        leftovers of a crashed call wiped on job start),
+                        and the lineage/failure-log DuckDB spill files
       checkpoint/     — snapshot store (atomic pointer swap); the call's
                         one merge flip records its pass dirs as the
-                        manifest's commit
-      lineage/        — per-partition metrics, append-only
-      failures/       — typed failure rows, append-only (reference:
-                        failure_logs, src/database.py:101-125)
+                        manifest's commit (the merge spills into a
+                        _duckdb-* temp dir here, removed as it ends)
+      lineage/        — per-partition metrics, append-only, one file per
+                        call's pass dirs (rewritten, not doubled, when a
+                        crashed call's tail is finished by the next call)
+      failures/       — typed failure rows, append-only, one file per
+                        call as lineage (reference: failure_logs,
+                        src/database.py:101-125)
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     # store injection: the config's checkpoint.backend=iceberg path passes
@@ -232,17 +297,18 @@ def run_extraction_job(
     )
     all_path = os.path.join(out_dir, "extracted_all")
     staging_root = os.path.join(out_dir, "_staging")
-    lineage_path = os.path.join(out_dir, "lineage")
-    failures_path = os.path.join(out_dir, "failures")
 
     result = JobResult()
     t_start = time.perf_counter()
     # crash recovery: drop half-written staging dirs (never promoted, never
-    # visible to readers), then fold promoted-but-unmerged passes into the
-    # checkpoint so the frontier excludes them (no re-extraction, no
-    # duplicate keys under two run_ids)
+    # visible to readers), then finish the tail of promoted-but-unstamped
+    # passes: logged once, folded into the checkpoint so the frontier
+    # excludes them (no re-extraction, no duplicate keys under two run_ids)
     shutil.rmtree(staging_root, ignore_errors=True)
-    _reconcile_orphans(spark, store, all_path)
+    # the tail's DuckDB spills here: wiped with the rest of the call's
+    # staging, whatever the working directory
+    duck_tmp = os.path.join(staging_root, "_duckdb")
+    _reconcile_orphans(spark, store, out_dir, duck_tmp)
     # a fixed-run_id rerun continues pass numbering after any passes the
     # previous attempt already promoted — pass dirs are immutable once
     # promoted, so a retry pass must never reuse (and replace) their paths
@@ -253,10 +319,10 @@ def run_extraction_job(
         if d.startswith("pass_num=")
     ]
     base_pass = max(existing) + 1 if existing else 0
-    frontier = store.pending(pages)
-    # prior attempts are read (their snapshot files bound) before
-    # mark_running stamps the frontier
-    open_keys = store.open_attempts(spark)
+    # ONE read of the checkpoint: the pending rows with their prior
+    # attempts. Its snapshot files are bound here, before mark_running
+    # flips the manifest.
+    frontier = store.frontier(pages)
     if track_inflight:
         # inflight visibility (reference: src/prefect_state.py:335-346);
         # costs one snapshot rewrite per run, so opt-in. Key columns
@@ -269,15 +335,9 @@ def run_extraction_job(
     # same bytes fails identically: a failed row's re-attempts cost only
     # its own parse, in the task that failed it. Task-level faults (a lost
     # executor or worker) are Spark's task retry.
-    prior = F.lit(0)
-    if open_keys is not None:  # a fresh store has no prior attempts
-        frontier = frontier.join(
-            open_keys.withColumnRenamed("attempts", "_prior"),
-            on=["url", "warc_ts"], how="left",
-        )
-        prior = F.coalesce(F.col("_prior"), F.lit(0))
     budget = F.least(
-        F.lit(max_retries), F.greatest(F.lit(1), store.max_retries - prior)
+        F.lit(max_retries),
+        F.greatest(F.lit(1), store.max_retries - F.col("_prior")),
     )
     # --- the one bulk job: kernel (every attempt) + one partitioned write.
     # Staged OUTSIDE extracted_all; each attempt=k dir is promoted by
@@ -297,49 +357,32 @@ def run_extraction_job(
         int(d.split("=", 1)[1])
         for d in os.listdir(tmp_path) if d.startswith("attempt=")
     )
-    passes = []  # (k, pass dir, failed rows)
-    if attempts:  # an empty frontier staged nothing: no tail to run
-        import duckdb
-
-        with duckdb.connect() as con:
+    # promote each attempt dir, in order: atomic rename into the readable
+    # layout. Pass dirs are immutable once promoted (base_pass skips
+    # existing ones; reconcile finished any unstamped ones), so the target
+    # cannot exist — os.rename fails loudly rather than ever replacing
+    # extracted data. The write committed every attempt dir at once; each
+    # keeps a _SUCCESS marker as a pass dir always had.
+    paths = []
+    for k in attempts:
+        att_path = os.path.join(tmp_path, f"attempt={k}")
+        final_path = os.path.join(run_path, f"pass_num={base_pass + k}")
+        _touch(os.path.join(att_path, "_SUCCESS"))
+        os.makedirs(run_path, exist_ok=True)
+        os.rename(att_path, final_path)
+        paths.append(final_path)
+    if paths:  # an empty frontier staged nothing: no tail to run
+        t_ph = result._phase("promote", t_ph)
+        with duckdb_connect(duck_tmp) as con:
             # a naive staged timestamp (INT96-written input) is UTC, as
             # Spark's session timeZone wrote it
             con.execute("SET TimeZone = 'UTC'")
-            # ONE aggregate gives the lineage rows AND the pass accounting
-            counts = write_lineage(con, tmp_path, lineage_path, run_id,
-                                   base_pass)
-            t_ph = result._phase("lineage", t_ph)
-            # promote each attempt dir, in order: atomic rename into the
-            # readable layout. Pass dirs are immutable once promoted
-            # (base_pass skips existing ones; reconcile merged any
-            # unmarked ones), so the target cannot exist — os.rename fails
-            # loudly rather than ever replacing extracted data. The write
-            # committed every attempt dir at once; each keeps a _SUCCESS
-            # marker as a pass dir always had.
-            for k in attempts:
-                n_total, n_bad = counts[k]
-                att_path = os.path.join(tmp_path, f"attempt={k}")
-                final_path = os.path.join(
-                    all_path, f"run_id={run_id}", f"pass_num={base_pass + k}"
-                )
-                _touch(os.path.join(att_path, "_SUCCESS"))
-                os.makedirs(os.path.dirname(final_path), exist_ok=True)
-                os.rename(att_path, final_path)
-                passes.append((k, final_path, n_bad))
-                result.passes += 1
-                result.extracted_rows += n_total
-                result.success_rows += n_total - n_bad
-                result.failed_rows += n_bad
-            # ONE checkpoint MERGE of the call's pass dirs (3 key/status
-            # columns), its flip recording them; then the _MERGED stamps
-            paths = [p for _, p, _ in passes]
-            _merge_passes(spark, store, paths,
-                          [os.path.relpath(p, all_path) for p in paths])
-            for p in paths:
-                _touch(os.path.join(p, _MERGED))
-            t_ph = result._phase("merge", t_ph)
-            _append_failures(con, passes, failures_path, run_id, base_pass)
-            result._phase("failures", t_ph)
+            counts = _commit_passes(spark, store, con, out_dir, paths, result)
+        for n_total, n_bad in counts.values():
+            result.passes += 1
+            result.extracted_rows += n_total
+            result.success_rows += n_total - n_bad
+            result.failed_rows += n_bad
     shutil.rmtree(staging_root, ignore_errors=True)
     store.vacuum()
     result.wall_sec = time.perf_counter() - t_start

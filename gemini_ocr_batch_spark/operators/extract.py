@@ -139,9 +139,14 @@ def _extract_attempts_arrow(it):
     """mapInArrow kernel with in-task retries: every row gets up to its
     ``_budget`` attempts. Attempt 0 runs over the whole batch; each later
     attempt re-runs only the rows whose previous attempt failed and that
-    still have budget. One output batch per attempt, tagged ``attempt``."""
+    still have budget. One output batch per attempt, tagged ``attempt``.
+    Installs the worker's zip-cache hook, so this worker's later tasks do
+    not re-read unchanged zip archives (see ``zipcache``)."""
     import pyarrow as pa
 
+    from gemini_ocr_batch_spark import zipcache
+
+    zipcache.install()
     pid = _partition_id()
     for batch in it:
         budget = batch.column("_budget").to_pylist()
@@ -162,9 +167,10 @@ def _extract_attempts_arrow(it):
 
 
 # plan nodes that hand the kernel their child's rows in the child's
-# partitioning: projections, filters, and the probe (left) side of the
-# resume joins — checkpoint.pending's anti-join and the job's attempt-budget
-# left join
+# partitioning: projections, filters, and the probe (left) side of a resume
+# join — the job's one left join of the pages against the checkpoint
+# (store.frontier, then a Filter on the joined status) or the anti-join of
+# store.pending
 _PASS_THROUGH = ("Project", "Filter", "SubqueryAlias")
 _PROBE_SIDE_JOINS = ("LeftAnti", "LeftSemi", "LeftOuter")
 

@@ -137,11 +137,13 @@ FAILURES_SCHEMA = T.StructType(
         T.StructField("input_sample", T.StringType(), True),
         # `attempts` is the attempt index WITHIN THIS RUN (1 = first pass
         # of this invocation), NOT the checkpoint's cumulative counter:
-        # the log is written from the pass dirs alone, after the call's
-        # one MERGE, and the cumulative count would need a read back of
-        # the checkpoint per failed key; on a rerun against a non-fresh
-        # checkpoint the two numbers legitimately differ. Join to the
-        # checkpoint by (url, warc_ts) — never by attempts.
+        # the log is written from the pass dirs alone, before the call's
+        # one MERGE, without reading the checkpoint back (the cumulative
+        # count would need that read per failed key); on a rerun against
+        # a non-fresh checkpoint the two numbers legitimately differ. A
+        # call finished by the next call's reconcile still counts from
+        # its first pass (the manifest's commit record names it). Join to
+        # the checkpoint by (url, warc_ts) — never by attempts.
         T.StructField("attempts", T.IntegerType(), False),
         T.StructField("run_id", T.StringType(), False),
         T.StructField("created_at", T.TimestampType(), False),

@@ -219,3 +219,39 @@ def test_folded_merge_equals_sequential_merges(spark, tmp_path, fresh):
             assert stores["spark"].last_commit() == ["c"]
 
     check()
+
+
+_ANY_STATUS_ROW = st.tuples(
+    st.sampled_from(["pending", "running", "failed", "success", "dead"]),
+    st.integers(0, 3), st.just(None),
+)
+
+
+def test_frontier_is_pending_with_prior_attempts(spark, tmp_path):
+    """``frontier`` keeps exactly ``pending``'s keys over any checkpoint
+    state (every status, attempts 0..3, keys absent from it) and carries
+    ``_prior`` = an open key's checkpoint attempts, else 0."""
+    pages = spark.createDataFrame(
+        [(u, dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc), b"")
+         for u in _H_URLS],
+        "url string, warc_ts timestamp, html binary",
+    )
+
+    @settings(max_examples=30, deadline=None, derandomize=True,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(prior=st.dictionaries(st.sampled_from(_H_URLS), _ANY_STATUS_ROW))
+    def check(prior):
+        with tempfile.TemporaryDirectory(dir=tmp_path) as d:
+            store = _seeded_store(os.path.join(d, "ck"), prior)
+            frontier = {r["url"]: r["_prior"] for r in
+                        store.frontier(pages).select("url", "_prior")
+                        .collect()}
+            pending = {r["url"] for r in
+                       store.pending(pages).select("url").collect()}
+            assert set(frontier) == pending
+            assert frontier == {
+                u: prior[u][1] if u in prior else 0 for u in pending}
+            assert pending == {u for u in _H_URLS if prior.get(
+                u, ("pending",))[0] not in ("success", "dead")}
+
+    check()

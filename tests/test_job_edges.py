@@ -179,3 +179,71 @@ def test_retries_run_inside_one_kernel_job(spark, tmp_path):
     )
     assert (res.passes, res.extracted_rows) == (3, 9)
     assert n_jobs <= 3
+
+
+def test_resume_call_reads_the_checkpoint_once(spark, tmp_path):
+    """A resumed call reads the checkpoint once: one left join gives the
+    frontier and each key's prior attempts, so the call runs the join's
+    one broadcast and the kernel write. The anti-join plus a separate
+    prior-attempts join ran 3 jobs."""
+    out = str(tmp_path / "out")
+    first = _datagen_mix(spark)
+    run_extraction_job(spark, first, out, max_retries=3)
+    ts = dt.datetime(2024, 1, 1)
+    more = first.unionByName(spark.createDataFrame(
+        [(f"https://y/{i}", ts, b"", None, "en") for i in range(3)],
+        PAGES_SCHEMA,
+    ))
+    n_jobs, res = _count_jobs(
+        spark, "job_budget_resume_once",
+        lambda: run_extraction_job(spark, more, out, max_retries=3),
+    )
+    assert (res.passes, res.extracted_rows) == (3, 9)
+    assert n_jobs <= 2
+
+
+def test_commit_tail_duckdb_spills_into_its_dir_and_is_capped(tmp_path):
+    """The commit tail's DuckDB spills into the dir it is given (the call's
+    _staging/), not .tmp under the working directory, and may hold a
+    quarter of the driver's memory (host RAM or the cgroup limit, the
+    smaller), not DuckDB's default 80% of host RAM."""
+    from gemini_ocr_batch_spark.checkpoint import _memory_bytes, duckdb_connect
+
+    spill = str(tmp_path / "_staging" / "_duckdb")
+    with duckdb_connect(spill) as con:
+        temp, limit = con.execute(
+            "SELECT current_setting('temp_directory'),"
+            " current_setting('memory_limit')").fetchone()
+    value, unit = limit.split()
+    limit_b = float(value) * 2 ** (10 * ["KiB", "MiB", "GiB", "TiB"]
+                                   .index(unit) + 10)
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert temp == spill
+    assert _memory_bytes() <= ram
+    assert 0.2 * _memory_bytes() < limit_b < 0.3 * _memory_bytes()
+
+
+def test_duckdb_memory_cap_follows_a_smaller_cgroup_limit(monkeypatch):
+    """A cgroup memory limit below host RAM is the base of the cap; a v2
+    ``max`` (no limit) falls through to host RAM."""
+    import builtins
+    import io
+
+    from gemini_ocr_batch_spark import checkpoint
+
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    real_open = builtins.open
+
+    def cgroup(text):
+        def fake_open(path, *a, **k):
+            if path == "/sys/fs/cgroup/memory.max":
+                return io.StringIO(text)
+            if path.startswith("/sys/fs/cgroup/"):
+                raise FileNotFoundError(path)
+            return real_open(path, *a, **k)
+        return fake_open
+
+    monkeypatch.setattr(builtins, "open", cgroup(f"{2**30}\n"))
+    assert checkpoint._memory_bytes() == min(ram, 2**30)
+    monkeypatch.setattr(builtins, "open", cgroup("max\n"))
+    assert checkpoint._memory_bytes() == ram

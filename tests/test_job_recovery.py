@@ -13,6 +13,7 @@ Covers the three failure windows a long-lived production run actually hits:
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import os
 import shutil
 
@@ -810,3 +811,92 @@ def test_lineage_and_failure_files_keep_their_parquet_types(spark, tmp_path):
     assert sum(r["row_count"] for r in rows) == 7 + 12 + 4 * 3
     assert [r["started_at"] for r in rows if r["run_id"] == "old"] == [
         dt.datetime(2024, 1, 2, 3, 4, 5)]
+
+
+def _lineage_rows(out):
+    return pq.read_table(os.path.join(out, "lineage")).to_pylist()
+
+
+def _per_pass_lineage(out):
+    """pass_num → (rows, successes, failures, bytes_in) over lineage/."""
+    sums: dict[int, list[int]] = {}
+    for r in _lineage_rows(out):
+        acc = sums.setdefault(r["pass_num"], [0, 0, 0, 0])
+        for i, c in enumerate(["row_count", "success_count",
+                               "failure_count", "bytes_in"]):
+            acc[i] += r[c]
+    return {k: tuple(v) for k, v in sums.items()}
+
+
+@pytest.mark.parametrize("crash_at", [
+    "promote_attempt_1", "failure_log", "merge_attempt_0", "stamp",
+    "stamp_pass_1"])
+def test_crash_then_rerun_logs_each_promoted_pass_once(
+        spark, tmp_path, monkeypatch, crash_at):
+    """A driver crash anywhere from promotion to the _MERGED stamps, then a
+    rerun: lineage/ holds exactly one row set per promoted pass (the
+    uninterrupted run's per-pass sums, unique (run_id, pass_num,
+    partition_id)), none for an attempt never promoted, and the failure
+    log holds each failed attempt once, with the uninterrupted run's
+    attempt numbers once the crashed call is finished by reconcile. ``stamp_pass_1`` crashes after the first pass dir is
+    stamped, so the rerun finds only the call's later passes unstamped."""
+    import gemini_ocr_batch_spark.job as job
+
+    pages = _mixed_pages(spark)
+    clean = str(tmp_path / "clean")
+    run_extraction_job(spark, pages, clean, max_retries=3, run_id="r")
+
+    out = str(tmp_path / "out")
+    if crash_at == "promote_attempt_1":
+        real_rename = os.rename
+
+        def rename(src, dst, *a, **k):
+            if src.endswith("attempt=1"):
+                raise _Crash(src)
+            return real_rename(src, dst, *a, **k)
+        monkeypatch.setattr(job.os, "rename", rename)
+    elif crash_at == "failure_log":
+        def failures(*a, **k):
+            raise _Crash("failure log")
+        monkeypatch.setattr(job, "_append_failures", failures)
+    elif crash_at == "merge_attempt_0":
+        def merge(self, *a, **k):
+            raise _Crash("merge")
+        monkeypatch.setattr(ParquetCheckpointStore, "merge_results_local",
+                            merge)
+    else:
+        real_touch = job._touch
+        stamped = []
+
+        def touch(path):
+            if path.endswith(job._MERGED):
+                if len(stamped) == (crash_at == "stamp_pass_1"):
+                    raise _Crash(path)
+                stamped.append(path)
+            real_touch(path)
+        monkeypatch.setattr(job, "_touch", touch)
+    with pytest.raises(_Crash):
+        run_extraction_job(spark, pages, out, max_retries=3, run_id="r")
+    monkeypatch.undo()
+    if os.path.isdir(os.path.join(out, "lineage")):
+        promoted = {int(d.split("=")[1]) for d in os.listdir(
+            os.path.join(out, "extracted_all", "run_id=r"))}
+        assert {r["pass_num"] for r in _lineage_rows(out)} <= promoted
+
+    run_extraction_job(spark, pages, out, max_retries=3, run_id="r")
+    keys = [(r["run_id"], r["pass_num"], r["partition_id"])
+            for r in _lineage_rows(out)]
+    assert len(keys) == len(set(keys))
+    assert _per_pass_lineage(out) == _per_pass_lineage(clean)
+
+    def failed(o):
+        # attempts count within a call: a crash during promotion leaves
+        # the later attempts to the rerun, which counts them from 1
+        return sorted((r["url"], r["error_type"],
+                       None if crash_at == "promote_attempt_1"
+                       else r["attempts"])
+                      for r in pq.read_table(
+                          os.path.join(o, "failures")).to_pylist())
+    assert failed(out) == failed(clean)
+    assert not glob.glob(os.path.join(out, "checkpoint", "_duckdb-*"))
+    assert _state(spark, out) == _state(spark, clean)

@@ -155,3 +155,31 @@ def test_repeated_spans_slim_shuffles_no_pairwise_join(spark, sf_dir):
         assert "text#" not in input_line and "gram#" not in input_line, s
     assert "CartesianProduct" not in fp
     assert "SortMergeJoin Inner" not in fp  # only the semi-join + window
+
+
+def test_checkpoint_frontier_is_one_broadcast_left_join(spark, pages_df,
+                                                         tmp_path):
+    """The job's resume query reads the checkpoint once: one scan of its
+    snapshot, broadcast into one left outer join (keys, status and
+    attempts only), and no anti-join."""
+    import datetime as dt
+
+    from gemini_ocr_batch_spark.checkpoint import ParquetCheckpointStore
+    from gemini_ocr_batch_spark.plans import formatted_plan
+
+    store = ParquetCheckpointStore(str(tmp_path / "ck"))
+    ts = dt.datetime(2024, 1, 1)
+    store.overwrite(
+        spark.createDataFrame(
+            [("https://x/1", ts, "failed", 1, "DecodeError", ts)],
+            "url string, warc_ts timestamp, status string, attempts int, "
+            "last_error string, updated_at timestamp",
+        )
+    )
+    df = store.frontier(pages_df)
+    plan = formatted_plan(df)
+    assert uses_broadcast_join(df, "LeftOuter")
+    assert "LeftAnti" not in plan
+    ck_schemas = [s for s in read_schemas(df) if "status" in s]
+    assert ck_schemas == ["struct<url:string,warc_ts:timestamp,"
+                          "status:string,attempts:int>"]
