@@ -71,7 +71,9 @@ def _shard_job(spark, in_path: str, out_dir: str, n_shards: int,
         # pure column expr — rides the same scan, no extra pass
         corpus = corpus.withColumn(
             "doc_tokens",
-            F.size(tokens(text_col, lowercase=False)).cast("bigint"),
+            F.expr(f"size({tokens(text_col, lowercase=False)})").cast(
+                "bigint"
+            ),
         )
         token_col = "doc_tokens"
     stats = write_training_shards(
@@ -511,6 +513,7 @@ def main(argv: list[str] | None = None) -> int:
                     "failed_rows": res.failed_rows,
                     "wall_sec": round(res.wall_sec, 3),
                     "docs_per_sec": round(res.docs_per_sec, 1),
+                    "phase_secs": res.phase_secs,
                 }
             )
         )

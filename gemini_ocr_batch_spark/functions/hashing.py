@@ -33,19 +33,31 @@ def h60_sql_duckdb(expr: str) -> str:
     return f"cast(('0x' || substr(md5({expr}), 1, 15)) as bigint)"
 
 
-def tokens(col: Column | str, lowercase: bool = True) -> Column:
-    """Whitespace tokenization, shared definition for all text operators.
+# Java regex's ``\s`` class written as its raw characters: the builders
+# below are SQL text, and a backslash escape in a SQL string literal changes
+# meaning when ``spark.sql.parser.escapedStringLiterals`` is set.
+_WHITESPACE = " \t\n\x0b\f\r"
+
+
+def tokens(expr: str, lowercase: bool = True) -> str:
+    """Whitespace tokenization, shared definition for all text operators,
+    as Spark SQL text over the SQL expression ``expr`` (a column name is
+    one).  Use it through ``F.expr``/``selectExpr``; project the array
+    into its own column when more than one expression reads it, since the
+    higher-order functions that consume it are interpreted and re-run an
+    inline split once per mention.
 
     DuckDB twin: ``regexp_split_to_array(trim(lower(x)), '\\s+')``.
     """
-    c = F.col(col) if isinstance(col, str) else col
     if lowercase:
-        c = F.lower(c)
-    return F.split(F.trim(c), r"\s+")
+        expr = f"lower({expr})"
+    return f"split(trim({expr}), '[{_WHITESPACE}]+')"
 
 
-def shingles(token_col: Column, n: int) -> Column:
-    """Word n-gram shingles from a token array (order-preserving).
+def shingles(toks: str, n: int) -> str:
+    """Word n-gram shingles (order-preserving) as Spark SQL text over the
+    token-array expression ``toks`` — pass a projected column: the text
+    names it n+1 times.
 
     DuckDB twin: join against generate_series(1, len(tokens)-n+1) and
     array_to_string(tokens[i : i+n-1], ' ').
@@ -66,14 +78,11 @@ def shingles(token_col: Column, n: int) -> Column:
     null-text row never propagates NULL through gram counts or minhash
     signatures.
     """
-    size = F.size(token_col)
-    acc = token_col
+    acc = toks
     for k in range(1, n):
-        shifted = F.slice(
-            token_col, k + 1, F.greatest(size - k, F.lit(0))
-        )
-        acc = F.zip_with(acc, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    return F.coalesce(
-        F.slice(acc, 1, F.greatest(size - (n - 1), F.lit(0))),
-        F.array().cast("array<string>"),
+        shifted = f"slice({toks}, {k + 1}, greatest(size({toks}) - {k}, 0))"
+        acc = f"zip_with({acc}, {shifted}, (a, b) -> concat_ws(' ', a, b))"
+    return (
+        f"coalesce(slice({acc}, 1, greatest(size({toks}) - {n - 1}, 0)),"
+        " CAST(array() AS ARRAY<STRING>))"
     )

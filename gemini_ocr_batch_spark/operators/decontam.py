@@ -44,10 +44,9 @@ def benchmark_shingle_set(benchmark: DataFrame, n: int = 8,
     sweep then reuses it without re-tokenizing the eval set.
     """
     return (
-        benchmark.select(
-            F.explode(
-                F.array_distinct(shingles(tokens(text_col), n))
-            ).alias("shingle")
+        benchmark.selectExpr(
+            f"explode(array_distinct({shingles(tokens(text_col), n)}))"
+            " AS shingle"
         )
         .select(h60(F.col("shingle")).alias("sh"))
         .distinct()
@@ -107,8 +106,8 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     bench = benchmark_shingle_set(benchmark, n, bench_text_col)
     doc_grams = docs.select(
         F.col(id_col),
-        F.explode(
-            F.array_distinct(shingles(tokens(text_col), n))
+        F.expr(
+            f"explode(array_distinct({shingles(tokens(text_col), n)}))"
         ).alias("shingle"),
     ).select(id_col, h60(F.col("shingle")).alias("sh"))
     hits = (

@@ -2,6 +2,9 @@
 
 All four are pure DataFrame compositions (no Python UDFs anywhere), built
 on engine-portable md5 hashing so a DuckDB oracle reproduces them exactly.
+The expressions on the near-dedup path (shingles, the minhash aggregates,
+the band keys, each components round) are Spark SQL text: one JVM call
+per column, not one per expression node.
 
 Scale notes (the point of each design):
 - exact:   one shuffle (groupBy hash). At 10^12 rows, hash first and
@@ -67,11 +70,10 @@ def _doc_shingles(docs: DataFrame, id_col: str, text_col: str,
     that need the actual shingle text (exact Jaccard). Set-dedup happens
     map-side inside the array, so the explode output is already distinct
     per doc and no shuffle-wide ``distinct()`` is needed."""
-    return spread_small_input(docs).select(
-        F.col(id_col).alias("doc"),
-        F.explode(
-            F.array_distinct(shingles(tokens(text_col), n))
-        ).alias("shingle"),
+    return spread_small_input(docs).selectExpr(
+        f"{id_col} AS doc",
+        f"explode(array_distinct({shingles(tokens(text_col), n)}))"
+        " AS shingle",
     )
 
 
@@ -95,13 +97,13 @@ def _doc_shingle_hashes(docs: DataFrame, id_col: str, text_col: str,
     # chain (which references its operand n+1 times)
     return (
         spread_small_input(docs)
-        .select(F.col(id_col).alias("doc"), tokens(text_col).alias("__toks"))
+        .selectExpr(f"{id_col} AS doc", f"{tokens(text_col)} AS __toks")
         .select(
             "doc",
             F.explode(
                 F.array_distinct(
                     F.transform(
-                        shingles(F.col("__toks"), n),
+                        F.expr(shingles("__toks", n)),
                         lambda s: h60(s) % MINHASH_P,
                     )
                 )
@@ -137,7 +139,7 @@ def _sig_frame(docs: DataFrame, id_col: str, text_col: str, n: int,
     """One row per doc with n_hashes minhash columns mh0..mh{k-1}."""
     based = _doc_shingle_hashes(docs, id_col, text_col, n)
     aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_P).alias(f"mh{i}")
+        F.expr(f"min(({a} * h + {b}) % {MINHASH_P}) AS mh{i}")
         for i, (a, b) in enumerate(minhash_params(n_hashes))
     ]
     return based.groupBy("doc").agg(*aggs)
@@ -180,32 +182,26 @@ def _lsh_pairs_frame(docs: DataFrame, id_col: str, text_col: str, n: int,
     sig = _sig_frame(docs, id_col, text_col, n, n_hashes).localCheckpoint(
         eager=True
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"mh{band * rows_per_band + j}")
-                            for j in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for band in range(bands)
-        ]
-    )
-    banded = sig.select("doc", F.explode(band_structs).alias("bb")).select(
-        "doc", "bb.band", "bb.bucket"
-    )
+
+    def band_key(band: int) -> str:
+        mhs = ", ".join(
+            f"mh{band * rows_per_band + j}" for j in range(rows_per_band)
+        )
+        return (
+            f"named_struct('band', {band},"
+            f" 'bucket', md5(concat_ws('|', {mhs})))"
+        )
+
+    keys = ", ".join(band_key(band) for band in range(bands))
+    banded = sig.selectExpr(
+        "doc", f"explode(array({keys})) AS bb"
+    ).selectExpr("doc", "bb.band", "bb.bucket")
     a = banded.alias("a")
     b = banded.alias("b")
     return (
         a.join(b, on=["band", "bucket"])
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .filter("a.doc < b.doc")
+        .selectExpr("a.doc AS doc_a", "b.doc AS doc_b")
         .distinct()
     )
 
@@ -248,7 +244,7 @@ def _simhash_frame(docs: DataFrame, id_col: str, text_col: str,
 
     tok = (
         spread_small_input(docs)
-        .select(F.col(id_col).alias("doc"), tokens(text_col).alias("__toks"))
+        .selectExpr(f"{id_col} AS doc", f"{tokens(text_col)} AS __toks")
         .select(
             "doc",
             F.explode(
@@ -505,12 +501,10 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     """
     from pyspark.sql import Window
 
-    toks = spread_small_input(docs).select(
-        F.col(id_col).alias("doc"), tokens(text_col).alias("__toks")
+    toks = spread_small_input(docs).selectExpr(
+        f"{id_col} AS doc", f"{tokens(text_col)} AS __toks"
     )
-    hashes = F.transform(
-        shingles(F.col("__toks"), k), lambda g: F.xxhash64(g)
-    )
+    hashes = F.expr(f"transform({shingles('__toks', k)}, g -> xxhash64(g))")
     # materialize the slim triples once: the df-election and the probe
     # side both consume positions, and without the cut the tokenize +
     # shingle + hash pass ran TWICE (r7 A/B at sf1.0: 3.4 s → 2.3 s, and
@@ -584,7 +578,7 @@ def excise_spans(docs: DataFrame, spans: DataFrame,
             )
         ).alias("__spans")
     )
-    toks = tokens(F.col(text_col), lowercase=False)
+    toks = F.expr(tokens(text_col, lowercase=False))
     joined = docs.join(
         span_arrs, docs[id_col] == span_arrs["__sid"], "left"
     ).drop("__sid")
@@ -658,33 +652,30 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     diameter-25 dup graph means the candidate generator is broken).
     """
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
+        pairs.selectExpr(f"{a_col} AS src", f"{b_col} AS dst")
+        .union(pairs.selectExpr(f"{b_col} AS src", f"{a_col} AS dst"))
         .localCheckpoint(eager=True)
     )
     labels = (
         edges.groupBy("src")
-        .agg(F.min("dst").alias("nbr_min"))
-        .select(
-            F.col("src").alias("doc"),
-            F.least("src", "nbr_min").alias("component"),
-        )
+        .agg(F.expr("min(dst) AS nbr_min"))
+        .selectExpr("src AS doc", "least(src, nbr_min) AS component")
     )
+    # each round is built as SQL text: a handful of JVM calls, not one
+    # per expression node
+    min_own = [
+        F.expr("min(component) AS component"),
+        F.expr("max(CASE WHEN own THEN component END) AS prev_component"),
+    ]
+    changed = F.expr("count_if(component != prev_component) AS n")
     for _ in range(max_iter):
-        offers = edges.join(labels, edges["src"] == labels["doc"]).select(
-            F.col("dst").alias("doc"), "component", F.lit(False).alias("own")
+        offers = edges.join(labels, F.expr("src = doc")).selectExpr(
+            "dst AS doc", "component", "false AS own"
         )
         stepped = (
-            offers.unionByName(labels.withColumn("own", F.lit(True)))
+            offers.unionByName(labels.selectExpr("*", "true AS own"))
             .groupBy("doc")
-            .agg(
-                F.min("component").alias("component"),
-                F.max(F.when(F.col("own"), F.col("component"))).alias(
-                    "prev_component"
-                ),
-            )
+            .agg(*min_own)
         )
         # the observed node sits on the aggregation's output, in the
         # checkpoint's result stage: a retried task's update counts once.
@@ -693,12 +684,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
         # an unserializable ObservationManager on the session, after
         # which any Spark ML model holding a training summary fails to
         # ship in a task closure.
-        step = stepped.observe(
-            "changed",
-            F.count_if(F.col("component") != F.col("prev_component")).alias(
-                "n"
-            ),
-        ).select("doc", "component")
+        step = stepped.observe("changed", changed).select("doc", "component")
         labels = step.localCheckpoint(eager=True)
         metrics = step._jdf.queryExecution().observedMetrics()
         if metrics.apply("changed").getLong(0) == 0:
@@ -727,8 +713,6 @@ def near_dedup_keep_list(docs: DataFrame, id_col: str = "doc_id",
     comp = connected_components(
         _lsh_pairs_frame(docs, id_col, text_col, n, n_hashes, bands)
     )
-    return comp.select(
-        F.col("doc").alias(id_col),
-        "component",
-        (F.col("doc") == F.col("component")).alias("keep"),
+    return comp.selectExpr(
+        f"doc AS {id_col}", "component", "doc = component AS keep"
     ).orderBy(id_col)

@@ -45,7 +45,7 @@ _Q = 10_000  # fixed-point scale for log-ratios and Gumbel keys
 def _grams(text_col: str):
     """Unigrams + bigrams as one array (the DSIR feature set)."""
     toks = tokens(text_col)
-    return F.concat(toks, shingles(toks, 2))
+    return F.expr(f"concat({toks}, {shingles(toks, 2)})")
 
 
 def _bucket_stream(docs: DataFrame, id_cols: list[str], text_col: str,
@@ -64,9 +64,9 @@ def _bucket_stream(docs: DataFrame, id_cols: list[str], text_col: str,
     line was that serialization; no-op at production split counts).
     """
     toks = spread_small_input(docs).select(
-        *id_cols, tokens(text_col).alias("__toks")
+        *id_cols, F.expr(tokens(text_col)).alias("__toks")
     )
-    grams = F.concat(F.col("__toks"), shingles(F.col("__toks"), 2))
+    grams = F.expr(f"concat(__toks, {shingles('__toks', 2)})")
     buckets = F.transform(
         grams, lambda g: h60(F.concat(g, F.lit(salt))) % n_buckets
     )

@@ -68,13 +68,13 @@ def train_ngram_lm(docs: DataFrame, text_col: str = "text",
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     toks = tokens(text_col)
     uni = (
-        docs.select(F.explode(toks).alias("w"))
+        docs.selectExpr(f"explode({toks}) AS w")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= min_count)
     )
     big = (
-        docs.select(F.explode(shingles(toks, 2)).alias("g"))
+        docs.selectExpr(f"explode({shingles(toks, 2)}) AS g")
         .groupBy("g")
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= min_count)
@@ -105,7 +105,8 @@ def ngram_logprob(docs: DataFrame, unigrams: DataFrame, bigrams: DataFrame,
     else:
         v = vocab_size
     grams = docs.select(
-        F.col(id_col), F.explode(shingles(tokens(text_col), 2)).alias("g")
+        F.col(id_col),
+        F.expr(f"explode({shingles(tokens(text_col), 2)})").alias("g"),
     ).withColumn("w1", F.substring_index("g", " ", 1))
     uni_m = F.broadcast(
         unigrams.select(F.col("w").alias("w1"), F.col("c").alias("c_uni"))

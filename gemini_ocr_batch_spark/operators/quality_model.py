@@ -35,23 +35,24 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id",
     """(id, <FEATURE_COLS>) — the engineered per-document quality
     signals, composed from the existing scoring operators (one slim
     join on the id; every feature is a scan-side projection)."""
+    from gemini_ocr_batch_spark.operators.textstats import (
+        quality_x10000_sql,
+    )
     from gemini_ocr_batch_spark.operators.webtext import (
         gopher_quality_flags,
-        repetition_x10000_cols,
-    )
-    from gemini_ocr_batch_spark.operators.textstats import (
-        quality_x10000_col,
+        repetition_x10000_sql,
+        with_token_grams,
     )
 
     g = gopher_quality_flags(docs, id_col=id_col, text_col=text_col).select(
         id_col, "n_words", "symbol_ratio_x10000", "alpha_frac_x10000",
         "word_len_x100", "stopword_hits",
     )
-    rep, _ = repetition_x10000_cols(text_col)
-    qr = docs.select(
-        F.col(id_col),
-        quality_x10000_col(text_col).alias("quality_x10000"),
-        rep.alias("rep_x10000"),
+    rep, _ = repetition_x10000_sql("__grams")
+    qr = with_token_grams(docs, text_col).selectExpr(
+        id_col,
+        f"{quality_x10000_sql(text_col, '__toks')} AS quality_x10000",
+        f"{rep} AS rep_x10000",
     )
     return qr.join(g, id_col).select(id_col, *FEATURE_COLS)
 

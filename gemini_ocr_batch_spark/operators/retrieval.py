@@ -80,7 +80,7 @@ def corpus_stats(docs: DataFrame, terms: list[str],
     terms = _check_terms(terms)
     # spread_small_input: a few-split local source would run the whole
     # tokenize+tf pass on one task (r7); no-op at production split counts
-    base = spread_small_input(docs).select(tokens(text_col).alias("__toks"))
+    base = spread_small_input(docs).selectExpr(f"{tokens(text_col)} AS __toks")
     aggs = [
         F.count(F.lit(1)).alias("n"),
         F.sum(F.size("__toks")).alias("tot"),
@@ -127,7 +127,7 @@ def bm25_scores(docs: DataFrame, terms: list[str],
     # CASE ... ELSE 0), not NULL propagated through the sums
     base = spread_small_input(docs).select(
         F.col(id_col),
-        tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("__toks"),
+        F.expr(tokens(f"coalesce({text_col}, '')")).alias("__toks"),
     ).withColumn("__dl", F.size("__toks"))
     matched = F.lit(0).cast("bigint")
     score = F.lit(0).cast("bigint")

@@ -1,6 +1,8 @@
 """Text analysis operators: language-ID, quality scoring, token counting,
 document fingerprinting. All native column expressions (JVM-side) except
-the winnowing fingerprint, which is Arrow-batched.
+the winnowing fingerprint, which is Arrow-batched. The token-array
+rules are Spark SQL text (``functions/hashing.py``), one JVM call per
+column instead of one per expression node.
 
 These run over a ``documents``-shaped table (id, text, ...) and are the
 training-data-pipeline companions of the extraction engine: the extracted
@@ -37,67 +39,91 @@ def token_count(docs: DataFrame, id_col: str = "doc_id",
     published GPT-family rule of thumb) — both pure column math."""
     return docs.select(
         F.col(id_col),
-        F.size(tokens(text_col, lowercase=False)).alias("ws_tokens"),
+        F.expr(f"size({tokens(text_col, lowercase=False)})").alias(
+            "ws_tokens"
+        ),
         F.ceil(F.length(F.col(text_col)) / F.lit(4)).cast("bigint").alias(
             "bpe_est_tokens"
         ),
     ).orderBy(id_col)
 
 
-def quality_x10000_col(text_col: str = "text") -> F.Column:
-    """The composite quality score as a fixed-point x10000 bigint column
-    — the single source of the formula, shared by :func:`quality_score`
-    and ``webtext.curation_flags`` so the blend cannot drift between the
-    scoring and filtering surfaces."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    toks = tokens(text_col)
-    n_tokens = F.size(toks)
-    n_punct = n_chars - F.length(F.regexp_replace(t, r"[\.,;:!\?]", ""))
-    n_upper = n_chars - F.length(F.regexp_replace(t, r"[A-Z]", ""))
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
-    punct_ratio = n_punct / F.greatest(n_chars, F.lit(1))
-    stop_ratio = n_stop / F.greatest(n_tokens, F.lit(1))
-    upper_ratio = n_upper / F.greatest(n_chars, F.lit(1))
+def with_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """``docs`` plus ``__toks``, the token array of ``text_col``, projected
+    once: every rule that reads it then shares one split per row (the
+    higher-order functions reading it are interpreted, and subexpression
+    elimination does not look inside them)."""
+    return docs.selectExpr("*", f"{tokens(text_col)} AS __toks")
+
+
+def _quality_terms(text: str, toks: str) -> dict[str, str]:
+    """The quality features as SQL text over the text and its token
+    array; literals are doubles (``D``), as the blend was built."""
+    n_chars = f"length({text})"
+    n_tokens = f"size({toks})"
+    stop = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
+    n_stop = f"size(filter({toks}, x -> array_contains(array({stop}), x)))"
+
+    def share(cls: str) -> str:
+        # chars of a class: the length minus the length without them
+        return (
+            f"(({n_chars} - length(regexp_replace({text}, '{cls}', '')))"
+            f" / greatest({n_chars}, 1))"
+        )
+
+    return {
+        "n_chars": n_chars,
+        "n_tokens": n_tokens,
+        # no backslash in a class: the text must parse the same under
+        # spark.sql.parser.escapedStringLiterals
+        "punct_ratio": share("[.,;:!?]"),
+        "upper_ratio": share("[A-Z]"),
+        "stop_ratio": f"({n_stop} / greatest({n_tokens}, 1))",
+    }
+
+
+def _x10000(expr: str) -> str:
+    # fixed-point 1e-4 (bigint) instead of round(): floor(x*1e4+0.5) is
+    # bit-deterministic given bit-equal doubles, while round() half-way
+    # behavior differs between engines (breaks oracle value hashes).
+    return f"CAST(floor(({expr}) * 10000 + 0.5D) AS BIGINT)"
+
+
+def quality_x10000_sql(text: str, toks: str) -> str:
+    """The composite quality score as a fixed-point x10000 bigint, as
+    Spark SQL text over the text expression ``text`` and its token array
+    ``toks`` (``tokens(text)``, best a projected column — see
+    :func:`with_tokens`) — the single source of the formula, shared by
+    :func:`quality_score` and ``webtext.curation_flags`` so the blend
+    cannot drift between the scoring and filtering surfaces."""
+    q = _quality_terms(text, toks)
     score = (
-        F.least(n_tokens / F.lit(200.0), F.lit(1.0)) * 0.4
-        + F.least(stop_ratio * F.lit(5.0), F.lit(1.0)) * 0.3
-        + (F.lit(1.0) - F.least(punct_ratio * F.lit(10.0), F.lit(1.0))) * 0.2
-        + (F.lit(1.0) - F.least(upper_ratio * F.lit(5.0), F.lit(1.0))) * 0.1
+        f"(least({q['n_tokens']} / 200.0D, 1.0D) * 0.4D"
+        f" + least({q['stop_ratio']} * 5.0D, 1.0D) * 0.3D"
+        f" + (1.0D - least({q['punct_ratio']} * 10.0D, 1.0D)) * 0.2D"
+        f" + (1.0D - least({q['upper_ratio']} * 5.0D, 1.0D)) * 0.1D)"
     )
-    return F.floor(score * 10000 + F.lit(0.5)).cast("bigint")
+    return _x10000(score)
 
 
 def quality_score(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """Shallow quality features + a composite score in [0,1].
 
-    Features (all codegen'd expressions): length, mean word length,
-    punctuation ratio, stopword ratio, uppercase ratio. The composite is a
+    Features: length, mean word length, punctuation ratio, stopword
+    ratio, uppercase ratio (the stopword count is an interpreted
+    ``filter`` over the token array, projected once). The composite is a
     fixed linear blend — deterministic and oracle-expressible.
     """
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    toks = tokens(text_col)
-    n_tokens = F.size(toks)
-    n_punct = n_chars - F.length(F.regexp_replace(t, r"[\.,;:!\?]", ""))
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
-    punct_ratio = n_punct / F.greatest(n_chars, F.lit(1))
-    stop_ratio = n_stop / F.greatest(n_tokens, F.lit(1))
-    mean_word_len = n_chars / F.greatest(n_tokens, F.lit(1))
-    # fixed-point 1e-4 (bigint) instead of round(): floor(x*1e4+0.5) is
-    # bit-deterministic given bit-equal doubles, while round() half-way
-    # behavior differs between engines (breaks oracle value hashes).
-    bp = lambda c: F.floor(c * 10000 + F.lit(0.5)).cast("bigint")  # noqa: E731
-    return docs.select(
-        F.col(id_col),
-        n_tokens.alias("n_tokens"),
-        bp(mean_word_len).alias("mean_word_len"),
-        bp(punct_ratio).alias("punct_ratio"),
-        bp(stop_ratio).alias("stopword_ratio"),
-        quality_x10000_col(text_col).alias("quality"),
+    q = _quality_terms(text_col, "__toks")
+    return with_tokens(docs, text_col).selectExpr(
+        id_col,
+        f"{q['n_tokens']} AS n_tokens",
+        _x10000(f"{q['n_chars']} / greatest({q['n_tokens']}, 1)")
+        + " AS mean_word_len",
+        f"{_x10000(q['punct_ratio'])} AS punct_ratio",
+        f"{_x10000(q['stop_ratio'])} AS stopword_ratio",
+        f"{quality_x10000_sql(text_col, '__toks')} AS quality",
     ).orderBy(id_col)
 
 
@@ -105,7 +131,7 @@ def language_id(docs: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:
     """Predict language by marker-token hit counts; deterministic
     tie-break by language code. Returns (id, pred_lang, hits)."""
-    toks = tokens(text_col)
+    toks = F.expr(tokens(text_col))
     cols = []
     for lang, markers in sorted(LANG_MARKERS.items()):
         arr = F.array(*[F.lit(m) for m in markers])
@@ -121,13 +147,18 @@ def language_id(docs: DataFrame, id_col: str = "doc_id",
     ).orderBy(id_col)
 
 
+def fingerprint_sql(toks: str) -> str:
+    """The exact-dedup key as SQL text over a token array: md5 of the
+    single-space-joined lowercased tokens."""
+    return f"md5(array_join({toks}, ' '))"
+
+
 def content_fingerprint(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text") -> DataFrame:
     """Whole-document fingerprint: md5 of whitespace-normalized lowercased
     text — the exact-dedup key, oracle-expressible."""
-    normalized = F.array_join(tokens(text_col), " ")
-    return docs.select(
-        F.col(id_col), F.md5(normalized).alias("fingerprint")
+    return docs.selectExpr(
+        id_col, f"{fingerprint_sql(tokens(text_col))} AS fingerprint"
     ).orderBy(id_col)
 
 
@@ -204,7 +235,7 @@ def corpus_token_stats(docs: DataFrame, group_col: str = "lang",
     All quantiles are fixed-point x100 bigints so the value-hash is
     engine-stable.
     """
-    n_tok = F.size(tokens(text_col))
+    n_tok = F.expr(f"size({tokens(text_col)})")
 
     def pct(p: float, alias: str) -> F.Column:
         if exact:

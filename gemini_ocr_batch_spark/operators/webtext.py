@@ -8,8 +8,12 @@ has no analog — these are the corpus-prep ops a 100 TB crawl pipeline
 needs between extraction (kernels/) and dedup (operators/dedup.py).
 
 All pure JVM column expressions (regexp / array / higher-order
-functions): codegen'd, no Python in the hot path, zero shuffles —
-every operator is a projection on the scan's own splits. Regex patterns
+functions), no Python in the hot path, zero shuffles — every operator is
+a projection on the scan's own splits. The higher-order functions
+(``filter``, ``aggregate``, ``zip_with``, ``transform``, ``array_sort``)
+are interpreted (``CodegenFallback``), so an array several rules read is
+projected into its own column once (``__toks``, ``__grams``) rather than
+re-derived inside each rule. Regex patterns
 are restricted to syntax with identical semantics in Java regex and RE2
 so each operator has an exact DuckDB oracle twin (redact_pii and
 repetition_score are driver-registered; canonicalize_urls rides
@@ -23,6 +27,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gemini_ocr_batch_spark.functions.hashing import shingles, tokens
+from gemini_ocr_batch_spark.operators.textstats import (
+    fingerprint_sql,
+    quality_x10000_sql,
+    with_tokens,
+)
 
 # Deliberately simple patterns: no lookaround, no backrefs, no \b-adjacent
 # unicode classes — the subset where Java regex (Spark) and RE2 (DuckDB)
@@ -134,7 +143,7 @@ def gopher_quality_flags(docs: DataFrame, id_col: str = "doc_id",
     alongside ``...``, matching the published Gopher symbol set.
     """
     text = F.coalesce(F.col(text_col), F.lit(""))
-    toks = tokens(text)
+    toks = F.expr(tokens(f"coalesce({text_col}, '')"))
     n_words = F.size(toks)
     n_hash = F.length(text) - F.length(F.regexp_replace(text, "#", ""))
     n_uni_ellipsis = F.length(text) - F.length(
@@ -421,50 +430,45 @@ def repetition_score(docs: DataFrame, id_col: str = "doc_id",
     finds the longest equal-run (== the top gram's count, since the array
     is sorted). The obvious explode -> groupBy(doc, gram) -> groupBy(doc)
     alternative ships every n-gram of the corpus through two exchanges;
-    this plan ships nothing — a codegen'd projection on the scan's own
-    splits, embarrassingly parallel at any scale.
+    this plan ships nothing — a projection on the scan's own splits
+    (interpreted higher-order functions over arrays projected once),
+    embarrassingly parallel at any scale.
     """
-    rep, total = repetition_x10000_cols(text_col, n)
-    return docs.select(
-        F.col(id_col),
-        rep.alias("rep_x10000"),
-        total.alias("n_grams"),
+    rep, total = repetition_x10000_sql("__grams")
+    return with_token_grams(docs, text_col, n).selectExpr(
+        id_col, f"{rep} AS rep_x10000", f"{total} AS n_grams"
     ).orderBy(id_col)
 
 
-def repetition_x10000_cols(text_col: str = "text", n: int = 2):
-    """(rep_x10000, n_grams) as reusable columns — the single source of
-    the repetition formula, shared by :func:`repetition_score` and
-    :func:`curation_flags`."""
-    grams = F.array_sort(shingles(tokens(text_col), n))
-    top_run = F.aggregate(
-        grams,
-        F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("best"),
-        ),
-        lambda acc, g: F.struct(
-            g.alias("prev"),
-            F.when(g == acc["prev"], acc["run"] + 1)
-            .otherwise(F.lit(1))
-            .alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc["best"],
+def with_token_grams(docs: DataFrame, text_col: str = "text",
+                     n: int = 2) -> DataFrame:
+    """``docs`` plus ``__toks`` (see ``textstats.with_tokens``) and
+    ``__grams``, its word ``n``-grams sorted, each projected once so the
+    split and the shingle sort run once per row however many rules read
+    them (the shingle text names its operand n+1 times)."""
+    return with_tokens(docs, text_col).selectExpr(
+        "*", f"array_sort({shingles('__toks', n)}) AS __grams"
     )
-    total = F.size(grams)
+
+
+def repetition_x10000_sql(grams: str) -> tuple[str, str]:
+    """(rep_x10000, n_grams) as Spark SQL text over a SORTED gram array
+    (``__grams`` of :func:`with_token_grams`) — the single source of the
+    repetition formula, shared by :func:`repetition_score` and
+    :func:`curation_flags`. The fold carries (previous gram, current run,
+    best run); on a sorted array the best run is the top gram's count."""
+    run = "CASE WHEN g = acc.prev THEN acc.run + 1 ELSE 1 END"
+    top_run = (
+        f"aggregate({grams}, named_struct('prev', '', 'run', 0, 'best', 0),"
+        f" (acc, g) -> named_struct('prev', g, 'run', {run},"
+        f" 'best', greatest(acc.best, {run})), acc -> acc.best)"
+    )
     rep = (
-        F.when(
-            total > 0,
-            F.floor(top_run.cast("bigint") * 10000 / total).cast("bigint"),
-        )
-        .otherwise(F.lit(0).cast("bigint"))
+        f"CASE WHEN size({grams}) > 0 THEN CAST(floor(CAST({top_run} AS"
+        f" BIGINT) * 10000 / size({grams})) AS BIGINT)"
+        " ELSE CAST(0 AS BIGINT) END"
     )
-    return rep, total.cast("bigint")
+    return rep, f"CAST(size({grams}) AS BIGINT)"
 
 
 def curation_flags(
@@ -487,36 +491,29 @@ def curation_flags(
     projections; the only exchange is the window over ``fingerprint`` for
     canonical selection, and only (id, fingerprint, two bigints) rows
     cross it — never the text.
+
+    Per-row shape: the token array and the sorted bigram array are each
+    projected once (:func:`with_token_grams`) and the fingerprint, quality
+    and repetition rules read those columns — the optimized plan holds
+    one ``split`` and one ``zip_with`` (plan-pinned). Inline, the
+    interpreted higher-order functions re-ran the split ~10 times per row
+    and the shingle array and its sort twice.
     """
-    from pyspark.sql import Window
-
-    from gemini_ocr_batch_spark.operators.textstats import quality_x10000_col
-
-    rep, _ = repetition_x10000_cols(text_col)
-    slim = docs.select(
-        F.col(id_col),
-        F.md5(F.array_join(tokens(text_col), " ")).alias("fingerprint"),
-        quality_x10000_col(text_col).alias("quality_x10000"),
-        rep.alias("rep_x10000"),
-    )
-    w = Window.partitionBy("fingerprint")
-    flagged = slim.select(
+    rep, _ = repetition_x10000_sql("__grams")
+    slim = with_token_grams(docs, text_col).selectExpr(
         id_col,
-        "fingerprint",
-        (F.col(id_col) == F.min(id_col).over(w)).alias("is_canonical"),
-        (F.col("quality_x10000") >= min_quality_x10000).alias("quality_ok"),
-        (F.col("rep_x10000") <= max_rep_x10000).alias("repetition_ok"),
+        f"{fingerprint_sql('__toks')} AS fingerprint",
+        f"{quality_x10000_sql(text_col, '__toks')} AS quality_x10000",
+        f"{rep} AS rep_x10000",
     )
-    out = flagged.select(
+    out = slim.selectExpr(
         id_col,
-        "is_canonical",
-        "quality_ok",
-        "repetition_ok",
-        (
-            F.col("is_canonical")
-            & F.col("quality_ok")
-            & F.col("repetition_ok")
-        ).alias("keep"),
+        f"{id_col} = min({id_col}) OVER (PARTITION BY fingerprint)"
+        " AS is_canonical",
+        f"quality_x10000 >= {int(min_quality_x10000)} AS quality_ok",
+        f"rep_x10000 <= {int(max_rep_x10000)} AS repetition_ok",
+    ).selectExpr(
+        "*", "is_canonical AND quality_ok AND repetition_ok AS keep"
     )
     # presentation order for the oracle harness; bulk writers pass
     # ordered=False and skip the global range exchange
@@ -606,17 +603,17 @@ def domain_quality_stats(pages: DataFrame, url_col: str = "url",
     (domain, fingerprint), not by corpus size.
     """
     from gemini_ocr_batch_spark.operators.blocklist import host_col
-    from gemini_ocr_batch_spark.operators.textstats import (
-        quality_x10000_col,
-    )
 
-    slim = pages.select(
-        host_col(url_col).alias("domain"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("__t"),
-    ).select(
+    slim = with_tokens(
+        pages.select(
+            host_col(url_col).alias("domain"),
+            F.coalesce(F.col(text_col), F.lit("")).alias("__t"),
+        ),
+        "__t",
+    ).selectExpr(
         "domain",
-        F.md5(F.col("__t")).alias("fp"),
-        quality_x10000_col("__t").alias("q"),
+        "md5(__t) AS fp",
+        f"{quality_x10000_sql('__t', '__toks')} AS q",
     )
     per_text = slim.groupBy("domain", "fp").agg(
         F.count(F.lit(1)).alias("n"),
@@ -709,23 +706,24 @@ def run_curation_job(
             .withColumn("keep", F.col("keep") & F.col("gopher_ok"))
         )
     flags_df.write.mode("overwrite").parquet(flags_path)
-    flags = spark.read.parquet(flags_path)
-    kept_keys = flags.filter(F.col("keep")).select("url")
+    # read back under the written frame's schema: no schema-inference job
+    flags = spark.read.schema(flags_df.schema).parquet(flags_path)
+    kept_keys = flags.filter("keep").select("url")
     rows.join(kept_keys, "url", "semi").write.mode("overwrite").parquet(
         corpus_path
     )
-    aggs = [
-        F.count("*").alias("input_rows"),
-        F.sum(F.col("keep").cast("long")).alias("kept"),
-        F.sum((~F.col("is_canonical")).cast("long")).alias("dup_rows"),
-        F.sum((~F.col("quality_ok")).cast("long")).alias("low_quality"),
-        F.sum((~F.col("repetition_ok")).cast("long")).alias("repetitive"),
-    ]
+    aggs = {
+        "input_rows": "count(*)",
+        "kept": "sum(CAST(keep AS BIGINT))",
+        "dup_rows": "sum(CAST(NOT is_canonical AS BIGINT))",
+        "low_quality": "sum(CAST(NOT quality_ok AS BIGINT))",
+        "repetitive": "sum(CAST(NOT repetition_ok AS BIGINT))",
+    }
     if gopher_rules:
-        aggs.append(
-            F.sum((~F.col("gopher_ok")).cast("long")).alias("gopher_fail")
-        )
-    stats_row = flags.agg(*aggs).collect()[0]
+        aggs["gopher_fail"] = "sum(CAST(NOT gopher_ok AS BIGINT))"
+    stats_row = flags.selectExpr(
+        *[f"{e} AS {k}" for k, e in aggs.items()]
+    ).collect()[0]
     out = {
         "input_rows": stats_row["input_rows"],
         "kept": stats_row["kept"] or 0,

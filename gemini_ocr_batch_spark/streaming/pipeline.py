@@ -243,18 +243,25 @@ def stream_curate(pages: DataFrame, time_col: str = "warc_ts",
     cross-horizon canonicalization stays with the batch `curate` pass
     over the accumulated corpus.
     """
-    from gemini_ocr_batch_spark.functions.hashing import tokens
-    from gemini_ocr_batch_spark.operators.textstats import quality_x10000_col
+    from gemini_ocr_batch_spark.operators.textstats import (
+        fingerprint_sql,
+        quality_x10000_sql,
+    )
     from gemini_ocr_batch_spark.operators.webtext import (
-        repetition_x10000_cols,
+        repetition_x10000_sql,
+        with_token_grams,
     )
 
-    rep, _ = repetition_x10000_cols(text_col)
-    flagged = pages.withColumn(
-        "fingerprint", F.md5(F.array_join(tokens(text_col), " "))
-    ).filter(
-        (quality_x10000_col(text_col) >= min_quality_x10000)
-        & (rep <= max_rep_x10000)
+    rep, _ = repetition_x10000_sql("__grams")
+    flagged = (
+        with_token_grams(pages, text_col)
+        .selectExpr("*", f"{fingerprint_sql('__toks')} AS fingerprint")
+        .filter(
+            f"{quality_x10000_sql(text_col, '__toks')}"
+            f" >= {int(min_quality_x10000)}"
+            f" AND {rep} <= {int(max_rep_x10000)}"
+        )
+        .drop("__toks", "__grams")
     )
     return (
         flagged.withWatermark(time_col, watermark)

@@ -156,9 +156,10 @@ def _count_jobs(spark, group: str, fn):
 def test_retries_run_inside_one_kernel_job(spark, tmp_path):
     """All of a call's attempts run in ONE kernel job: a failed row is
     re-extracted by the task that failed it. Measured on in-memory mixed
-    pages at max_retries=3: 1 job into a fresh store; 3 on resume (the
-    anti-join's broadcast, the prior-attempts join's broadcast, the kernel
-    write). One kernel job per attempt ran 7 and 9."""
+    pages at max_retries=3: 1 job into a fresh store; 2 on resume, because
+    the resume reads the checkpoint once (one left join gives the frontier
+    and each key's prior attempts: its broadcast, then the kernel write).
+    One kernel job per attempt ran 7 and 9."""
     out = str(tmp_path / "out")
     first = _datagen_mix(spark)
     n_jobs, res = _count_jobs(
@@ -175,27 +176,6 @@ def test_retries_run_inside_one_kernel_job(spark, tmp_path):
     ))
     n_jobs, res = _count_jobs(
         spark, "job_budget_resume",
-        lambda: run_extraction_job(spark, more, out, max_retries=3),
-    )
-    assert (res.passes, res.extracted_rows) == (3, 9)
-    assert n_jobs <= 3
-
-
-def test_resume_call_reads_the_checkpoint_once(spark, tmp_path):
-    """A resumed call reads the checkpoint once: one left join gives the
-    frontier and each key's prior attempts, so the call runs the join's
-    one broadcast and the kernel write. The anti-join plus a separate
-    prior-attempts join ran 3 jobs."""
-    out = str(tmp_path / "out")
-    first = _datagen_mix(spark)
-    run_extraction_job(spark, first, out, max_retries=3)
-    ts = dt.datetime(2024, 1, 1)
-    more = first.unionByName(spark.createDataFrame(
-        [(f"https://y/{i}", ts, b"", None, "en") for i in range(3)],
-        PAGES_SCHEMA,
-    ))
-    n_jobs, res = _count_jobs(
-        spark, "job_budget_resume_once",
         lambda: run_extraction_job(spark, more, out, max_retries=3),
     )
     assert (res.passes, res.extracted_rows) == (3, 9)

@@ -386,6 +386,25 @@ sharding:
     assert rep2["shard"] == rep["shard"]
 
 
+def test_run_verb_reports_its_phases(spark, pages_parquet, tmp_path,
+                                    capsys):
+    """The run verb's JSON line carries the job's per-phase wall seconds:
+    the one kernel write, the promotion and the commit tail."""
+    import json
+
+    from gemini_ocr_batch_spark.__main__ import main
+
+    rc = main(["run", "--pages", pages_parquet,
+               "--out", str(tmp_path / "out")])
+    assert rc == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["passes"] > 0
+    phases = rep["phase_secs"]
+    assert set(phases) == {"extract_write", "promote", "lineage",
+                           "failures", "merge"}
+    assert all(v >= 0 for v in phases.values())
+
+
 def test_pipeline_verb_requires_curated_out(tmp_path, capsys):
     from gemini_ocr_batch_spark.__main__ import main
 

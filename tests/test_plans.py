@@ -183,3 +183,25 @@ def test_checkpoint_frontier_is_one_broadcast_left_join(spark, pages_df,
     ck_schemas = [s for s in read_schemas(df) if "status" in s]
     assert ck_schemas == ["struct<url:string,warc_ts:timestamp,"
                           "status:string,attempts:int>"]
+
+
+def test_curate_rules_split_and_shingle_once(spark, sf_dir):
+    """curation_flags projects the token array and the sorted bigram array
+    once and every rule reads those columns: its optimized plan holds ONE
+    split and ONE zip_with (the interpreted higher-order functions re-run
+    an inline split per mention). The minhash signature frame splits once
+    too."""
+    from gemini_ocr_batch_spark.operators.dedup import _sig_frame
+    from gemini_ocr_batch_spark.operators.webtext import curation_flags
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    flags = optimized(curation_flags(docs, ordered=False))
+    assert flags.count("split(") == 1, flags
+    assert flags.count("zip_with(") == 1, flags
+    sig = optimized(_sig_frame(docs, "doc_id", "text", 3, 16))
+    assert sig.count("split(") == 1, sig
+

@@ -187,6 +187,69 @@ def test_curate_job_end_to_end(spark, tmp_path):
     assert "https://dup.example/0" in kept_urls
 
 
+def test_curate_outputs_ignore_escaped_string_literals(spark, tmp_path):
+    """The curate builders are SQL text with no backslash in any literal,
+    so the flags, the kept corpus and the near-dup keep-list are the same
+    under both settings of spark.sql.parser.escapedStringLiterals (the
+    Column API they replaced never read it)."""
+    import datetime as dt
+
+    from gemini_ocr_batch_spark.job import read_extracted, run_extraction_job
+    from gemini_ocr_batch_spark.operators.dedup import near_dedup_keep_list
+    from gemini_ocr_batch_spark.operators.webtext import run_curation_job
+    from gemini_ocr_batch_spark.schemas import PAGES_SCHEMA
+
+    words = ("river stone valley north bright garden silver lantern quiet "
+             "harbor meadow copper signal winter orchard canyon").split()
+
+    def page(text: str) -> bytes:
+        return f"<html><body><p>{text}</p></body></html>".encode()
+
+    base = " ".join(words[i % 16] + ("," if i % 7 == 0 else "")
+                    for i in range(60))
+    texts = [base] * 3  # exact duplicates: one canonical survives
+    texts += [base.replace("winter", f"Summer{i}", 1) for i in range(3)]
+    texts += ["spam " * 40, "BUY NOW!!! CLICK HERE!!! FREE!!!"]
+    texts += [" ".join(words[(i * k) % 16] for i in range(50)) + ". Yes?"
+              for k in (3, 5, 7)]
+    ts = dt.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [(f"https://e.example/{i}", ts, page(t), None, "en")
+         for i, t in enumerate(texts)], PAGES_SCHEMA)
+    out = str(tmp_path / "run_out")
+    run_extraction_job(spark, pages, out, max_retries=1)
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    got = {}
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            stats = run_curation_job(spark, out, str(tmp_path / mode))
+            keep = near_dedup_keep_list(
+                read_extracted(spark, out),
+                id_col="url", text_col="extracted_text",
+            )
+            got[mode] = (
+                {k: v for k, v in stats.items() if not k.endswith("_path")},
+                sorted(map(tuple, spark.read.parquet(
+                    stats["flags_path"]).collect())),
+                sorted(r["url"] for r in spark.read.parquet(
+                    stats["corpus_path"]).select("url").collect()),
+                sorted(map(tuple, keep.collect())),
+            )
+    finally:
+        spark.conf.set(key, before)
+    assert got["true"] == got["false"]
+    stats, flags, corpus, keep = got["false"]
+    # not vacuous: every rule and the keep-list have work to do
+    assert stats["input_rows"] == len(texts) == len(flags)
+    assert stats["kept"] == len(corpus)
+    assert stats["dropped_duplicate"] == 2
+    assert stats["dropped_repetitive"] >= 1
+    assert stats["dropped_low_quality"] >= 1
+    assert sum(1 for r in keep if not r[2]) >= 4
+
+
 def test_line_dedup_first_occurrence_wins(spark):
     from gemini_ocr_batch_spark.operators.webtext import line_dedup
 
@@ -482,8 +545,9 @@ def test_domain_quality_stats_rollup(spark):
     from gemini_ocr_batch_spark.operators.webtext import (
         domain_quality_stats,
     )
+    from gemini_ocr_batch_spark.functions.hashing import tokens
     from gemini_ocr_batch_spark.operators.textstats import (
-        quality_x10000_col,
+        quality_x10000_sql,
     )
     from pyspark.sql import functions as F
 
@@ -506,7 +570,8 @@ def test_domain_quality_stats_rollup(spark):
     qs = [
         r["q"]
         for r in df.filter(F.col("url").startswith("https://clean"))
-        .select(quality_x10000_col("text").alias("q")).collect()
+        .select(F.expr(quality_x10000_sql("text", tokens("text"))).alias("q"))
+        .collect()
     ]
     assert clean["mean_quality_x10000"] == sum(qs) // 2
 
