@@ -31,11 +31,12 @@ in-memory store behind the same interface):
   replays any pass dir left unstamped.
 
 The state transitions are written once, as SQL expression text
-(``result_transition_sql``, ``running_transition_sql``) that the Spark
-merge embeds through ``F.expr``, the DuckDB merge in its ``COPY`` and the
-Iceberg MERGE in its ``UPDATE SET``/``INSERT VALUES`` clauses. A merge
-first folds its rows to one delta row per key (``FOLD_SQL``), so a call's
-attempts land in one MERGE.
+(``result_transition_sql``, ``running_transition_sql``). Each store has one
+write engine for them: the Parquet store's DuckDB ``COPY`` and the Iceberg
+store's Spark ``MERGE INTO`` (its ``UPDATE SET``/``INSERT VALUES``
+clauses). Both take a call's pass dirs through one ``merge_passes(paths,
+commit)``, which first folds each key's rows to one delta row
+(``FOLD_SQL``), so a call's attempts land in one merge.
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ import shutil
 import tempfile
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,11 +119,10 @@ def duckdb_connect(temp_dir: str):
 def _bucket_col(n_buckets: int):
     """bucket = (60-bit md5 prefix of url) % B.
 
-    md5 instead of xxhash64 so the DRIVER can compute the identical bucket
-    with hashlib (``bucket_of``) — that is what makes the driver-side
-    DuckDB merge possible. Hashing cost is once per merged
-    key, noise next to the bucket shuffle. Plays the same role as the
-    Iceberg twin's bucket(B, url) transform.
+    md5 instead of xxhash64 so the driver (``bucket_of``) and DuckDB
+    (``_duck_bucket``) compute the identical bucket: ``overwrite`` writes
+    buckets here and every merge rewrites them through DuckDB. Plays the
+    same role as the Iceberg twin's bucket(B, url) transform.
     """
     from gemini_ocr_batch_spark.functions.hashing import h60
 
@@ -212,27 +213,24 @@ def running_transition_sql(old: str | None, new: str) -> dict[str, str]:
     }
 
 
-def _attempt_rows(rows: DataFrame) -> DataFrame:
-    """(url, warc_ts, error_type, attempt): the rows ``FOLD_SQL`` folds;
-    without an ``attempt`` column each row is one attempt."""
-    return rows.selectExpr("url", "warc_ts", "error_type", "attempt"
-                           if "attempt" in rows.columns else "0 AS attempt")
+# DuckDB types of the transition columns, as the checkpoint's parquet
+# holds them (a fresh store's running stamp has a bare NULL last_error)
+_DUCK_TYPES = {"status": "VARCHAR", "attempts": "INTEGER",
+               "last_error": "VARCHAR", "updated_at": "TIMESTAMPTZ"}
 
 
-def _apply_transition(old: DataFrame | None, delta: DataFrame,
-                      transition) -> DataFrame:
-    """CHECKPOINT_SCHEMA rows of ``transition(old_alias)`` over old ⟗ delta
-    (just the delta on a fresh store: no join against an empty relation)."""
-    if old is None:
-        frame, text = delta.alias("d"), transition(None)
-    else:
-        frame = old.alias("o").join(delta.alias("d"), on=KEY,
-                                    how="full_outer")
-        text = transition("o")
-    return frame.select(*KEY, *[
-        F.expr(text[f.name]).cast(f.dataType).alias(f.name)
-        for f in CHECKPOINT_SCHEMA.fields if f.name not in KEY
-    ])
+def _pass_rows_sql(paths: list[str], cols: str) -> str:
+    """DuckDB UNION ALL of ``cols`` plus ``attempt`` (the dir's index) over
+    each dir's parquet files, or "" when none has a data file. Dirs are
+    probed for files, not read and caught: a real IO failure propagates."""
+    import glob as globmod
+
+    return " UNION ALL ".join(
+        f"SELECT {cols}, {i} AS attempt FROM read_parquet({_sql_str(g)})"
+        for i, g in enumerate(os.path.join(p, "**", "*.parquet")
+                              for p in paths)
+        if globmod.glob(g, recursive=True)
+    )
 
 
 def _open_frontier(pages: DataFrame, checkpoint: DataFrame) -> DataFrame:
@@ -264,9 +262,9 @@ class ParquetCheckpointStore:
           v_00000003_…/bucket=7/…  # (a version dir holds only the buckets
                                    #  that its merge rewrote)
 
-    Commit record: a flip made by ``merge_results[_local](..., commit=…)``
-    — the job's one merge per call, and reconcile's — lists the pass dirs
-    it merged under ``"commit"``; every other flip (``mark_running``,
+    Commit record: a flip made by ``merge_passes(..., commit=…)`` — the
+    job's one merge per call, and reconcile's — lists the pass dirs it
+    merged under ``"commit"``; every other flip (``mark_running``,
     ``overwrite``, a merge without ``commit``) writes none, and a manifest
     without the key reads as an empty commit (``last_commit``). The job
     stamps ``_MERGED`` into those dirs only after the flip, so with a
@@ -503,40 +501,6 @@ class ParquetCheckpointStore:
         return _open_frontier(
             pages, self._read_buckets(pages.sparkSession, manifest))
 
-    def _merge_bucketed(self, delta: DataFrame, transition,
-                        commit: list[str] | None = None) -> None:
-        """Shared bucket-pruned MERGE skeleton.
-
-        ``delta`` carries url+warc_ts; ``transition(old_alias)`` gives the
-        SQL text of the merged columns (``_apply_transition``). Reads and
-        rewrites ONLY buckets containing delta keys; every other bucket
-        keeps its old manifest entry untouched.
-        """
-        spark = delta.sparkSession
-        base = self._manifest()  # CAS base (lost-update guard)
-        if base is None or not base["buckets"]:
-            # fresh store: the delta IS the snapshot — no join (an empty
-            # LocalRelation build side would plan a full SMJ shuffle)
-            merged = _apply_transition(None, delta, transition)
-            n_parts = self.n_buckets
-        else:
-            # O(|delta|) pre-scan for the touched buckets — the price that
-            # converts the rewrite from O(|checkpoint|) to O(touched buckets)
-            touched = sorted(
-                r["bucket"] for r in delta.select(
-                    _bucket_col(self.n_buckets).alias("bucket")
-                ).distinct().collect()
-            )
-            if not touched:
-                return  # empty delta: nothing to merge, nothing to flip
-            old = self._read_buckets(spark, base, touched)
-            merged = _apply_transition(old, delta, transition)
-            n_parts = len(touched)
-        version = self._write_version(
-            merged.withColumn("bucket", _bucket_col(self.n_buckets)), n_parts
-        )
-        self._flip_version(version, base, base, commit)
-
     def _flip_version(self, version: str, base: dict | None, expect,
                       commit: list[str] | None = None) -> None:
         """Flip to a manifest mapping ``version``'s buckets over ``base``'s
@@ -554,68 +518,38 @@ class ParquetCheckpointStore:
         the last flip was not a job's merge, or for an older manifest)."""
         return (self._manifest() or {}).get("commit", [])
 
-    def merge_results(self, extracted: DataFrame,
-                      commit: list[str] | None = None) -> None:
-        """MERGE extraction attempts (url, warc_ts, error_type[, attempt])
-        into the checkpoint: folded per key (``FOLD_SQL``), then one
-        ``result_transition_sql`` MERGE. ``commit`` names the pass dirs
-        this flip records as merged (the job's commit record)."""
-        delta = _attempt_rows(extracted).groupBy(*KEY).agg(
-            *[F.expr(e).alias(c) for c, e in FOLD_SQL.items()]
-        )
-        self._merge_bucketed(
-            delta,
-            lambda old: result_transition_sql(old, "d", self.max_retries),
-            commit,
-        )
-
-    def merge_results_local(self, staged, commit: list[str] | None = None
-                            ) -> bool:
-        """Driver-side twin of ``merge_results`` over staged parquet dirs.
-
-        ``staged`` is one dir or a list of them in attempt order. DuckDB
-        reads (url, warc_ts, error_type) straight from the parquet, applies
-        the same ``FOLD_SQL`` and ``result_transition_sql`` text, writes the
-        touched bucket files and CAS-flips the manifest: no Spark job, and
-        the scan streams, so it runs at every call size. Its connection
+    def _merge_copy(self, rows_sql: str, delta, transition,
+                    commit: list[str] | None = None) -> None:
+        """The one write of every merge: ``delta(rows)`` (one row per key
+        of the input rows ``rows_sql``, aliased ``d``) full-outer-joined
+        with the snapshot rows of the buckets those keys fall in,
+        ``transition(old_alias)`` applied, the touched bucket files
+        written by ONE DuckDB ``COPY`` and the manifest CAS-flipped,
+        recording ``commit`` when given. Every other bucket keeps its
+        manifest entry: O(|delta| + touched buckets), never
+        O(|checkpoint|). No input rows flip nothing. The connection
         (``duckdb_connect``) spills into a temp dir under the store root,
-        removed when the merge ends. Returns False — caller falls back to the
-        Spark path — when the store or a staged dir is not a local
-        directory.
-        """
-        paths = [staged] if isinstance(staged, str) else list(staged)
-        if not (os.path.isdir(self.root)
-                and all(os.path.isdir(p) for p in paths)):
-            return False
-        import glob as globmod
-
-        # explicit file probe instead of exception sniffing: a pass with
-        # zero data files is skipped, and all-empty is a clean no-op; any
-        # real duckdb IO failure below propagates loudly
-        rows_sql = " UNION ALL ".join(
-            f"SELECT url, warc_ts, error_type, {i} AS attempt "
-            f"FROM read_parquet({_sql_str(g)})"
-            for i, g in enumerate(os.path.join(p, "**", "*.parquet")
-                                  for p in paths)
-            if globmod.glob(g, recursive=True)
-        )
+        removed when the merge ends."""
         if not rows_sql:
-            return True
-        base = self._manifest()
+            return
+        base = self._manifest()  # CAS base (lost-update guard)
         n_b = self.n_buckets
+        version = self._next_version()
         with (tempfile.TemporaryDirectory(prefix="_duckdb-",
                                           dir=self.root) as spill,
               duckdb_connect(spill) as con):
             old_paths = []
-            if base and base.get("buckets"):
+            if base and base["buckets"]:
                 # a fresh store skips this pre-scan: it would re-read every
-                # staged url only to look up paths in an empty mapping
+                # input url only to look up paths in an empty mapping
                 touched = sorted(
                     r[0] for r in con.execute(
                         f"SELECT DISTINCT {_duck_bucket('url', n_b)} "
                         f"FROM ({rows_sql})"
                     ).fetchall()
                 )
+                if not touched:
+                    return
                 old_paths = self._bucket_paths(base, touched)
             if old_paths:
                 globs = ", ".join(
@@ -630,16 +564,15 @@ class ParquetCheckpointStore:
                 k: f"coalesce(o.{k}, d.{k})" if old else f"d.{k}"
                 for k in KEY
             }
-            text = result_transition_sql(old, "d", self.max_retries)
             cols = ", ".join(
                 [f"{e} AS {c}" for c, e in key_sql.items()]
-                + [f"{e} AS {c}" for c, e in text.items()]
+                + [f"CAST({e} AS {_DUCK_TYPES[c]}) AS {c}"
+                   for c, e in transition(old).items()]
             )
-            version = self._next_version()
             con.execute(
                 f"""
                 COPY (
-                  WITH delta AS ({fold_sql(f"({rows_sql})")})
+                  WITH delta AS ({delta(f"({rows_sql})")})
                   SELECT {cols}, {_duck_bucket(key_sql['url'], n_b)} AS bucket
                   FROM {source}
                 ) TO {_sql_str(os.path.join(self.root, version))}
@@ -647,8 +580,28 @@ class ParquetCheckpointStore:
                  OVERWRITE_OR_IGNORE true)
                 """
             )
+        if not self._written_buckets(version):
+            os.rmdir(os.path.join(self.root, version))
+            return
         self._flip_version(version, base, base, commit)
-        return True
+
+    def merge_passes(self, paths: list[str],
+                     commit: list[str] | None = None) -> None:
+        """ONE merge of staged pass dirs ``paths``, in attempt order:
+        DuckDB reads (url, warc_ts, error_type) straight from their
+        parquet, each row's attempt being its dir's index, folds them per
+        key (``FOLD_SQL``) and applies ``result_transition_sql``
+        (``_merge_copy``). No Spark job, and the scan streams, so it runs
+        at every call size. ``commit`` names the pass dirs this flip
+        records as merged (the job's commit record). A dir without data
+        files adds no rows."""
+        if missing := [p for p in paths if not os.path.isdir(p)]:
+            raise FileNotFoundError(f"no pass dir at {missing}")
+        self._merge_copy(
+            _pass_rows_sql(paths, "url, warc_ts, error_type"), fold_sql,
+            lambda old: result_transition_sql(old, "d", self.max_retries),
+            commit,
+        )
 
     def mark_running(self, keys: DataFrame) -> None:
         """Stamp frontier keys as inflight (status=running) at pass start.
@@ -657,14 +610,22 @@ class ParquetCheckpointStore:
         src/prefect_state.py:335-346): a second operator/monitor can see
         which keys a live run owns. Deliberately WITHOUT lease semantics —
         ``pending`` still returns running keys, so a crashed run never
-        strands work; the subsequent ``merge_results`` transitions them to
-        success/failed/dead. Bucket-pruned like every merge — opt-in from
-        the job (track_inflight=True).
+        strands work; the next ``merge_passes`` transitions them to
+        success/failed/dead. ONE Spark write puts the key columns in a
+        temp dir under the store root (removed when the stamp ends), then
+        the merge's ``COPY`` applies ``running_transition_sql``: bucket-
+        pruned like every merge, and no keys flip nothing. Opt-in from the
+        job (track_inflight=True).
         """
-        self._merge_bucketed(
-            keys.select(*KEY),
-            lambda old: running_transition_sql(old, "d"),
-        )
+        with tempfile.TemporaryDirectory(prefix="_running-",
+                                         dir=self.root) as tmp:
+            staged = os.path.join(tmp, "keys")
+            keys.select(*KEY).write.parquet(staged)
+            self._merge_copy(
+                _pass_rows_sql([staged], "url, warc_ts"),
+                lambda rows: f"SELECT DISTINCT url, warc_ts FROM {rows}",
+                lambda old: running_transition_sql(old, "d"),
+            )
 
     def overwrite(self, snapshot: DataFrame, expect=_UNSET) -> None:
         """Full-snapshot replace (admin surface: rollback, clear, tests)."""
@@ -729,18 +690,19 @@ class IcebergCheckpointStore:
         store's ``frontier``)."""
         return _open_frontier(pages, self.read())
 
-    def merge_results(self, extracted: DataFrame,
-                      commit: list[str] | None = None) -> None:
-        """The rows through one MERGE INTO that folds them. ``commit`` is
-        not recorded (see ``last_commit``)."""
-        _attempt_rows(extracted).createOrReplaceTempView("_ckpt_delta")
+    def merge_passes(self, paths: list[str],
+                     commit: list[str] | None = None) -> None:
+        """The pass dirs' (url, warc_ts, error_type) rows, each with
+        attempt = its dir's index, as ``_ckpt_delta`` through one MERGE
+        INTO that folds them. ``commit`` is not recorded (see
+        ``last_commit``)."""
+        reduce(lambda a, b: a.unionByName(b), (
+            self.spark.read.schema(
+                "url string, warc_ts timestamp, error_type string"
+            ).parquet(p).selectExpr(*KEY, "error_type", f"{i} AS attempt")
+            for i, p in enumerate(paths)
+        )).createOrReplaceTempView("_ckpt_delta")
         self.spark.sql(merge_sql(self.table, self.max_retries))
-
-    def merge_results_local(self, staged, commit: list[str] | None = None
-                            ) -> bool:
-        """No driver-side fast path for a remote table — always False so
-        the job falls through to the MERGE INTO."""
-        return False
 
     def last_commit(self) -> list[str]:
         """No commit record: a snapshot-summary property could carry one,

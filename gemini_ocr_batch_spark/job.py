@@ -18,10 +18,11 @@ the retry loop, and the retry loop runs inside the kernel's tasks):
             manifest flip records them as its commit), then _MERGED
             stamps — all from column-pruned reads of that same parquet
 
-Lineage, the failure log and the MERGE are DuckDB statements on the driver
-at every call size (the Iceberg store's MERGE is its Spark MERGE INTO): one
-Spark job per step would cost more than the work, and DuckDB streams the
-parquet, so driver memory does not grow with the call. The job therefore
+Lineage and the failure log are DuckDB statements on the driver at every
+call size, and the MERGE is the store's one ``merge_passes`` (the Parquet
+store's DuckDB ``COPY``, the Iceberg store's Spark MERGE INTO): one Spark
+job per step would cost more than the work, and DuckDB streams the parquet,
+so driver memory does not grow with the call. The job therefore
 needs ``duckdb`` on the driver. The logs' connection spills into the call's
 ``_staging/``, the MERGE's into a temp dir under the checkpoint root; each
 holds at most a fixed share of the host's RAM or of the cgroup's memory
@@ -52,11 +53,9 @@ import os
 import shutil
 import time
 import uuid
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gemini_ocr_batch_spark.checkpoint import (
     ParquetCheckpointStore,
@@ -66,39 +65,14 @@ from gemini_ocr_batch_spark.checkpoint import (
 from gemini_ocr_batch_spark.lineage import write_lineage
 from gemini_ocr_batch_spark.operators.extract import extract_attempts
 from gemini_ocr_batch_spark.schemas import (
-    EXTRACTED_SCHEMA,
+    EXTRACTED_ALL_SCHEMA,
     EXTRACTED_USER_COLUMNS,
 )
-
-# staged-pass schema: kernel output + the is_ok partition column
-STAGED_SCHEMA = T.StructType(
-    list(EXTRACTED_SCHEMA.fields)
-    + [T.StructField("is_ok", T.BooleanType(), True)]
-)
-
 
 # marker file dropped into a promoted pass dir once its keys are in the
 # checkpoint — the crash-recovery analog of the reference's output-existence
 # probe (reference: src/scanner.py:90-91)
 _MERGED = "_MERGED"
-
-def _merge_passes(spark: SparkSession, store, paths: list[str],
-                  commit: list[str], local: bool = True) -> None:
-    """ONE checkpoint MERGE of pass dirs, each key's rows folded in list
-    (attempt) order; the flip records ``commit``. DuckDB on the driver
-    when the store allows it; a store without a driver-side merge (the
-    Iceberg table), or ``local=False``, gets the store's Spark MERGE."""
-    if local and store.merge_results_local(paths, commit):
-        return
-    store.merge_results(
-        reduce(DataFrame.unionByName, (
-            spark.read.schema(STAGED_SCHEMA).parquet(p).select(
-                "url", "warc_ts", "error_type", F.lit(i).alias("attempt")
-            )
-            for i, p in enumerate(paths)
-        )),
-        commit,
-    )
 
 
 def _append_failures(con, run_id: str, passes: list[tuple[int, str]],
@@ -135,7 +109,7 @@ def _touch(path: str) -> None:
         pass
 
 
-def _commit_passes(spark: SparkSession, store, con, out_dir: str,
+def _commit_passes(store, con, out_dir: str,
                    paths: list[str], result: "JobResult"
                    ) -> dict[str, tuple[int, int]]:
     """The commit tail of promoted, unstamped pass dirs ``paths`` (under
@@ -179,16 +153,15 @@ def _commit_passes(spark: SparkSession, store, con, out_dir: str,
                          os.path.join(out_dir, "failures"))
     t = result._phase("failures", t)
     if todo:
-        _merge_passes(spark, store, todo,
-                      [os.path.relpath(p, all_path) for p in todo])
+        store.merge_passes(todo,
+                           [os.path.relpath(p, all_path) for p in todo])
     for p in paths:
         _touch(os.path.join(p, _MERGED))
     result._phase("merge", t)
     return counts
 
 
-def _reconcile_orphans(spark: SparkSession, store, out_dir: str,
-                       temp_dir: str) -> int:
+def _reconcile_orphans(store, out_dir: str, temp_dir: str) -> int:
     """Finish the commit tail of promoted-but-unstamped pass dirs.
 
     Closes the crash window between promotion and the ``_MERGED`` stamps:
@@ -225,7 +198,7 @@ def _reconcile_orphans(spark: SparkSession, store, out_dir: str,
     if orphans:
         with duckdb_connect(temp_dir) as con:
             con.execute("SET TimeZone = 'UTC'")
-            _commit_passes(spark, store, con, out_dir, orphans, JobResult())
+            _commit_passes(store, con, out_dir, orphans, JobResult())
     return len(orphans)
 
 
@@ -308,7 +281,7 @@ def run_extraction_job(
     # the tail's DuckDB spills here: wiped with the rest of the call's
     # staging, whatever the working directory
     duck_tmp = os.path.join(staging_root, "_duckdb")
-    _reconcile_orphans(spark, store, out_dir, duck_tmp)
+    _reconcile_orphans(store, out_dir, duck_tmp)
     # a fixed-run_id rerun continues pass numbering after any passes the
     # previous attempt already promoted — pass dirs are immutable once
     # promoted, so a retry pass must never reuse (and replace) their paths
@@ -377,7 +350,7 @@ def run_extraction_job(
             # a naive staged timestamp (INT96-written input) is UTC, as
             # Spark's session timeZone wrote it
             con.execute("SET TimeZone = 'UTC'")
-            counts = _commit_passes(spark, store, con, out_dir, paths, result)
+            counts = _commit_passes(store, con, out_dir, paths, result)
         for n_total, n_bad in counts.values():
             result.passes += 1
             result.extracted_rows += n_total
@@ -488,10 +461,12 @@ def apply_input_filters(pages: DataFrame, filters) -> DataFrame:
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The success-only extracted view: partition-pruned on is_ok=true."""
+    """The success-only extracted view: partition-pruned on is_ok=true.
+    Read under the layout's fixed schema, so planning it runs no parquet
+    schema-inference job."""
     return (
-        spark.read.parquet(os.path.join(out_dir, "extracted_all"))
-        # partition discovery types is_ok as a string ("true"/"false")
-        .filter(F.col("is_ok") == "true")
+        spark.read.schema(EXTRACTED_ALL_SCHEMA)
+        .parquet(os.path.join(out_dir, "extracted_all"))
+        .filter(F.col("is_ok"))
         .select(*EXTRACTED_USER_COLUMNS)
     )

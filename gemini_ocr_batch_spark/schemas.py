@@ -66,6 +66,18 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
+# The extracted_all layout: kernel output under the hive partition dirs
+# run_id=R/pass_num=N/is_ok=… — the schema its readers pin instead of
+# inferring it from a parquet footer (and typing is_ok as a string).
+EXTRACTED_ALL_SCHEMA = T.StructType(
+    list(EXTRACTED_SCHEMA.fields)
+    + [
+        T.StructField("run_id", T.StringType(), True),
+        T.StructField("pass_num", T.IntegerType(), True),
+        T.StructField("is_ok", T.BooleanType(), True),
+    ]
+)
+
 # Columns a consumer of the extracted table actually reads.
 EXTRACTED_USER_COLUMNS = [
     "url",

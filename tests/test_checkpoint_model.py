@@ -2,12 +2,14 @@
 
 A pure-Python reference model applies the documented transition table
 (reference: src/prefect_state.py:111-199 close-batch + failure-count
-increments; src/scanner.py:87-88 dead-letter) to random pass sequences;
-the store must agree exactly after every sequence. Merges alternate
-between the Spark relational path and the driver-side DuckDB fast path,
-so the test also pins the two implementations against each other on
-histories neither unit test enumerates. A property test then checks that
-one folded merge of a call's ordered attempts equals one merge per attempt.
+increments; src/scanner.py:87-88 dead-letter) to random pass
+sequences; the store must agree exactly after every sequence.
+Property tests then check that one folded merge of a call's ordered
+attempts equals one merge per attempt, and that the running stamp keeps
+success/dead. Each runs on the Parquet store's DuckDB merge and on a
+Spark SQL evaluation of the Iceberg MERGE INTO's own pieces (the fold,
+the matched and the inserted transition text), so the shared transition
+text is pinned in both dialects against the model.
 """
 
 from __future__ import annotations
@@ -26,7 +28,12 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from gemini_ocr_batch_spark.checkpoint import ParquetCheckpointStore
+from gemini_ocr_batch_spark.checkpoint import (
+    ParquetCheckpointStore,
+    fold_sql,
+    result_transition_sql,
+    running_transition_sql,
+)
 
 _TS = dt.datetime(2024, 1, 1)
 MAX_RETRIES = 3
@@ -46,17 +53,30 @@ def _model_apply(model: dict, batch: list[tuple[str, str | None]]) -> None:
         model[url] = (status, attempts, last_error)
 
 
-def test_random_histories_match_model(spark, tmp_path):
+def test_random_histories_match_model(spark, tmp_path, merge_rows):
     rng = random.Random(2024)
     urls = [f"https://m/{i}" for i in range(40)]
     errs = [None, None, None, "KernelError", "DecodeError"]
+
+    def merge(store, model, batch):
+        _model_apply(model, batch)
+        merge_rows(store, spark.createDataFrame(
+            [(u, _TS, e) for u, e in batch],
+            "url string, warc_ts timestamp, error_type string",
+        ))
+
+    def state(store):
+        return {
+            r["url"]: (r["status"], r["attempts"], r["last_error"])
+            for r in store.read(spark).collect()
+        }
 
     for case in range(4):
         root = str(tmp_path / f"ck{case}")
         store = ParquetCheckpointStore(root, max_retries=MAX_RETRIES,
                                        n_buckets=4)
         model: dict[str, tuple[str, int, str | None]] = {}
-        for pass_i in range(rng.randint(3, 6)):
+        for _ in range(rng.randint(3, 6)):
             # job-shaped batches: only currently-open keys can appear in a
             # pass (the frontier anti-joins success/dead away) — attempts
             # bounds below are only promised for such histories
@@ -69,24 +89,8 @@ def test_random_histories_match_model(spark, tmp_path):
             batch_urls = rng.sample(
                 open_urls, rng.randint(1, min(25, len(open_urls)))
             )
-            batch = [(u, rng.choice(errs)) for u in batch_urls]
-            _model_apply(model, batch)
-            df = spark.createDataFrame(
-                [(u, _TS, e) for u, e in batch],
-                "url string, warc_ts timestamp, error_type string",
-            )
-            if pass_i % 2 == 0:
-                store.merge_results(df)  # Spark relational path
-            else:
-                # driver-side path: stage the pass as parquet first
-                staged = str(tmp_path / f"pass_{case}_{pass_i}")
-                df.coalesce(1).write.mode("overwrite").parquet(staged)
-                assert store.merge_results_local(staged) is True
-        got = {
-            r["url"]: (r["status"], r["attempts"], r["last_error"])
-            for r in store.read(spark).collect()
-        }
-        assert got == model, f"case {case}: store diverged from model"
+            merge(store, model, [(u, rng.choice(errs)) for u in batch_urls])
+        assert state(store) == model, f"case {case}: store diverged from model"
         # invariants the job relies on
         snap = store.read(spark)
         assert snap.filter(F.col("attempts") > MAX_RETRIES).count() == 0
@@ -120,6 +124,35 @@ def test_recommended_buckets_scaling():
         b = S.recommended_buckets(n)
         assert b & (b - 1) == 0  # power of two
     assert S.recommended_buckets(10**30) == 1 << 20  # hard cap
+
+
+def test_bucket_twins_agree(spark):
+    """``overwrite`` buckets keys through Spark's ``_bucket_col`` and every
+    merge through DuckDB's ``_duck_bucket``; the driver's ``bucket_of``
+    must agree with both, or a key would land in two buckets."""
+    import duckdb
+
+    from gemini_ocr_batch_spark.checkpoint import (
+        _bucket_col,
+        _duck_bucket,
+        bucket_of,
+    )
+
+    urls = ["", "https://ex.com", "https://ex.com/", "https://ex.com/?",
+            "https://ex.com/o'brien", 'https://ex.com/"q"', "https://ex.com/\\",
+            "https://bücher.de/straße", "https://例子.测试/路径",
+            "https://ex.com/😀", "https://ex.com/a b%20c"]
+    urls += [f"https://h{i}.example/{i}" for i in range(200)]
+    url_table = pa.table({"url": pa.array(urls, pa.string())})
+    frame = spark.createDataFrame([(u,) for u in urls], "url string")
+    for n in (1, 2, 16, 4096):
+        want = {u: bucket_of(u, n) for u in urls}
+        assert {r["url"]: r["b"] for r in frame.select(
+            "url", _bucket_col(n).alias("b")).collect()} == want, n
+        assert dict(duckdb.sql(
+            f"SELECT url, {_duck_bucket('url', n)} FROM url_table").fetchall()
+        ) == want, n
+        assert set(want.values()) <= set(range(n))
 
 
 _H_URLS = [f"https://h/{i}" for i in range(6)]
@@ -187,11 +220,11 @@ def _snapshot(store: ParquetCheckpointStore) -> dict:
 
 
 @pytest.mark.parametrize("fresh", [True, False], ids=["fresh", "prior"])
-def test_folded_merge_equals_sequential_merges(spark, tmp_path, fresh):
-    """One folded merge of k ordered attempts, on the DuckDB path and on
-    the Spark path, leaves the checkpoint of k one-attempt merges."""
-    from gemini_ocr_batch_spark.job import _merge_passes
-
+def test_folded_merge_equals_sequential_merges(spark, tmp_path, fresh,
+                                              spark_merge_into):
+    """One folded merge of k ordered attempts leaves the checkpoint of k
+    one-attempt merges (the model): on the DuckDB store, and in Spark SQL
+    through the Iceberg MERGE's fold and transition text."""
     @settings(max_examples=25, deadline=None, derandomize=True,
               suppress_health_check=[HealthCheck.function_scoped_fixture])
     @given(prior=st.dictionaries(st.sampled_from(_H_URLS), _PRIOR_ROW,
@@ -203,20 +236,67 @@ def test_folded_merge_equals_sequential_merges(spark, tmp_path, fresh):
                       for k in range(len(history))]
             for path, rows in zip(passes, history):
                 _write_attempt(path, rows)
-            stores = {name: _seeded_store(os.path.join(d, name), prior)
-                      for name in ("sequential", "duckdb", "spark")}
+            sequential = _seeded_store(os.path.join(d, "sequential"), prior)
+            folded = _seeded_store(os.path.join(d, "folded"), prior)
             for path in passes:
-                assert stores["sequential"].merge_results_local(path)
-            _merge_passes(spark, stores["duckdb"], passes, ["c"], True)
-            _merge_passes(spark, stores["spark"], passes, ["c"], False)
-            want = _snapshot(stores["sequential"])
+                sequential.merge_passes([path])
+            folded.merge_passes(passes, ["c"])
             model = dict(prior)
             for rows in history:
                 _model_apply(model, list(rows.items()))
-            assert want == model
-            assert _snapshot(stores["duckdb"]) == want
-            assert _snapshot(stores["spark"]) == want
-            assert stores["spark"].last_commit() == ["c"]
+            assert _snapshot(sequential) == model
+            assert _snapshot(folded) == model
+            assert folded.last_commit() == ["c"]
+            spark.createDataFrame(
+                [(u, _TS, e, k) for k, rows in enumerate(history)
+                 for u, e in rows.items()],
+                "url string, warc_ts timestamp, error_type string, "
+                "attempt int",
+            ).createOrReplaceTempView("_ckpt_delta")
+            assert spark_merge_into(
+                prior, fold_sql("_ckpt_delta"),
+                lambda old: result_transition_sql(old, "s", MAX_RETRIES),
+            ) == model
+
+    check()
+
+
+def _model_running(model: dict, keys) -> None:
+    """The running stamp, independently restated: a stamped key becomes
+    running (a new one with 0 attempts) unless it is success or dead."""
+    for url in keys:
+        status, attempts, last_error = model.get(url, ("pending", 0, None))
+        if status not in ("success", "dead"):
+            model[url] = ("running", attempts, last_error)
+
+
+@pytest.mark.parametrize("fresh", [True, False], ids=["fresh", "prior"])
+def test_running_stamp_matches_model(spark, tmp_path, fresh,
+                                     spark_merge_into):
+    """``mark_running`` on the DuckDB store, and the Iceberg MERGE's
+    running transition text in Spark SQL, both leave the model's state:
+    stamped open keys running, success/dead and unstamped keys as they
+    were."""
+    @settings(max_examples=10, deadline=None, derandomize=True,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(prior=st.dictionaries(st.sampled_from(_H_URLS), _PRIOR_ROW,
+                                 min_size=1) if not fresh else st.just({}),
+           keys=st.sets(st.sampled_from(_H_URLS), min_size=1))
+    def check(prior, keys):
+        with tempfile.TemporaryDirectory(dir=tmp_path) as d:
+            store = _seeded_store(os.path.join(d, "ck"), prior)
+            spark.createDataFrame(
+                [(u, _TS) for u in sorted(keys)],
+                "url string, warc_ts timestamp",
+            ).createOrReplaceTempView("_ckpt_running")
+            store.mark_running(spark.table("_ckpt_running"))
+            model = dict(prior)
+            _model_running(model, keys)
+            assert _snapshot(store) == model
+            assert spark_merge_into(
+                prior, "SELECT * FROM _ckpt_running",
+                lambda old: running_transition_sql(old, "s"),
+            ) == model
 
     check()
 

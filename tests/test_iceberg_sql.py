@@ -3,10 +3,11 @@
 No Iceberg jar ships in this sandbox, so the MERGE INTO branch can't
 execute. Its transitions are not restated here: the tests assert that the
 MERGE embeds the shared fold and transition text (``fold_sql``,
-``result_transition_sql``, ``running_transition_sql``), which the Parquet
-store's Spark and DuckDB merges execute — e.g.
-tests/test_pipeline.py::test_checkpoint_merge_transitions and
-tests/test_checkpoint_model.py.
+``result_transition_sql``, ``running_transition_sql``). The Parquet
+store's DuckDB merge executes that text (e.g.
+tests/test_pipeline.py::test_checkpoint_merge_transitions), and
+tests/test_checkpoint_model.py evaluates the MERGE's pieces in Spark SQL
+against the same model.
 """
 
 from __future__ import annotations
@@ -90,7 +91,7 @@ def test_iceberg_store_surface_matches_job_needs():
         ParquetCheckpointStore,
     )
 
-    for method in ("pending", "merge_results", "merge_results_local",
+    for method in ("frontier", "pending", "merge_passes", "last_commit",
                    "mark_running", "vacuum", "read", "dead_letters"):
         assert hasattr(ParquetCheckpointStore, method), method
         assert hasattr(IcebergCheckpointStore, method), method

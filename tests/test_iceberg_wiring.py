@@ -30,14 +30,16 @@ class _FakeConf:
 
 
 class _FakeDF:
-    """Records select()/selectExpr() projections and temp-view
+    """Records select()/selectExpr() projections, unions and temp-view
     registrations on the shared event log, in call order, like a DataFrame
     would."""
 
-    columns = ["url", "warc_ts", "error_type", "extracted_text"]
-
     def __init__(self, events):
         self._events = events
+
+    def unionByName(self, other):
+        self._events.append(("union",))
+        return self
 
     def select(self, *cols):
         self._events.append(("select", tuple(str(c) for c in cols)))
@@ -51,6 +53,21 @@ class _FakeDF:
         self._events.append(("view", name))
 
 
+class _FakeReader:
+    """``spark.read``: ``schema(...).parquet(path)`` records the read."""
+
+    def __init__(self, events):
+        self._events = events
+
+    def schema(self, schema):
+        self._schema = schema
+        return self
+
+    def parquet(self, path):
+        self._events.append(("read", path, self._schema))
+        return _FakeDF(self._events)
+
+
 class _FakeSpark:
     def __init__(self, iceberg=True):
         impl = "org.apache.iceberg.spark.SparkCatalog" if iceberg else None
@@ -58,6 +75,7 @@ class _FakeSpark:
             {"spark.sql.catalog.spark_catalog": impl} if impl else {}
         )
         self.events: list[tuple] = []
+        self.read = _FakeReader(self.events)
 
     def sql(self, statement):
         self.events.append(("sql", statement))
@@ -81,21 +99,30 @@ def test_constructor_issues_create_table_ddl():
 
 
 def test_merge_results_registers_delta_view_then_merges():
+    """``merge_passes`` registers the passes' rows as ``_ckpt_delta``
+    before the MERGE INTO that reads it."""
     fake = _FakeSpark()
     store = IcebergCheckpointStore(fake, "cat.db.ckpt", max_retries=5)
     fake.events.clear()
-    store.merge_results(fake.frame())
-    kinds = [e[0] for e in fake.events]
-    # select → view → sql, strictly in that order: the MERGE reads the
-    # temp view, so registration must precede execution
-    assert kinds == ["select", "view", "sql"]
-    # one attempt per row: the MERGE folds (url, warc_ts, error_type,
-    # attempt) rows per key
-    assert fake.events[0][1] == ("url", "warc_ts", "error_type",
-                                 "0 AS attempt")
-    assert fake.events[1][1] == "_ckpt_delta"
-    assert fake.events[2][1] == merge_sql("cat.db.ckpt", 5)
-    assert "FROM _ckpt_delta GROUP BY" in fake.events[2][1]
+    paths = [f"/out/extracted_all/run_id=r/pass_num={k}" for k in range(3)]
+    store.merge_passes(paths, [f"run_id=r/pass_num={k}" for k in range(3)])
+    schemas = {e[2] for e in fake.events if e[0] == "read"}
+    assert len(schemas) == 1
+    assert all(c in next(iter(schemas)) for c in
+               ("url", "warc_ts", "error_type"))
+
+    def read(k):
+        # each pass's rows, with its index as the attempt the MERGE folds
+        return [("read", paths[k], *schemas),
+                ("select", ("url", "warc_ts", "error_type",
+                            f"{k} AS attempt"))]
+    # reads → one union → view → sql, strictly in that order: the MERGE
+    # reads the temp view, so registration must precede execution
+    assert fake.events == [
+        *read(0), *read(1), ("union",), *read(2), ("union",),
+        ("view", "_ckpt_delta"), ("sql", merge_sql("cat.db.ckpt", 5)),
+    ]
+    assert "FROM _ckpt_delta GROUP BY" in fake.events[-1][1]
 
 
 def test_mark_running_registers_running_view_then_merges():
@@ -109,11 +136,6 @@ def test_mark_running_registers_running_view_then_merges():
     assert fake.events[1][1] == "_ckpt_running"
     assert fake.events[2][1] == mark_running_sql("cat.db.ckpt")
     assert "USING _ckpt_running" in fake.events[2][1]
-
-
-def test_local_fast_paths_defer_to_merge_into():
-    store = IcebergCheckpointStore(_FakeSpark(), "cat.db.ckpt")
-    assert store.merge_results_local("/nonexistent") is False
 
 
 def test_vacuum_is_catalog_owned_noop():

@@ -182,6 +182,65 @@ def test_retries_run_inside_one_kernel_job(spark, tmp_path):
     assert n_jobs <= 2
 
 
+def test_inflight_stamp_is_one_pass_over_its_keys_and_the_merge_none(
+        spark, tmp_path, monkeypatch):
+    """A track_inflight call over a non-empty store: ``mark_running`` runs
+    the Spark jobs of ONE pass over its keys (their write; the COPY is
+    DuckDB) and the call's ``merge_passes`` runs none. The keys are the
+    frontier, so that pass is the frontier join's broadcast and the write:
+    2 jobs, where the Spark merge this replaced ran 8."""
+    out = str(tmp_path / "out")
+    pages = _datagen_mix(spark)
+    store = ParquetCheckpointStore(os.path.join(out, "checkpoint"))
+    run_extraction_job(spark, pages, out, max_retries=1, store=store)
+    jobs = {}
+    real_mark, real_merge = (ParquetCheckpointStore.mark_running,
+                             ParquetCheckpointStore.merge_passes)
+
+    def mark_running(self, keys):
+        jobs["keys"], _ = _count_jobs(
+            spark, "inflight_keys",
+            keys.write.format("noop").mode("overwrite").save)
+        jobs["mark_running"], _ = _count_jobs(
+            spark, "inflight_mark", lambda: real_mark(self, keys))
+
+    def merge_passes(self, *a, **k):
+        jobs["merge_passes"], _ = _count_jobs(
+            spark, "inflight_merge", lambda: real_merge(self, *a, **k))
+    monkeypatch.setattr(ParquetCheckpointStore, "mark_running", mark_running)
+    monkeypatch.setattr(ParquetCheckpointStore, "merge_passes", merge_passes)
+    res = run_extraction_job(spark, pages, out, max_retries=3,
+                             track_inflight=True)
+    assert (res.passes, res.extracted_rows) == (2, 4 * 2)
+    assert jobs == {"keys": 2, "mark_running": 2, "merge_passes": 0}
+
+
+def test_read_extracted_pins_the_layout_schema(spark, tmp_path):
+    """``read_extracted`` returns the rows the schema-inferring read gave,
+    and planning it runs no Spark job: a warm ``.count()`` of a fresh
+    ``read_extracted`` runs the jobs of counting a planned one, no more
+    (no parquet schema-inference job)."""
+    from gemini_ocr_batch_spark.job import read_extracted
+    from gemini_ocr_batch_spark.schemas import EXTRACTED_USER_COLUMNS
+
+    out = str(tmp_path / "out")
+    run_extraction_job(spark, _datagen_mix(spark), out, max_retries=2)
+    inferred = (spark.read.parquet(os.path.join(out, "extracted_all"))
+                .filter(F.col("is_ok") == "true")
+                .select(*EXTRACTED_USER_COLUMNS))
+    assert sorted(read_extracted(spark, out).collect()) == sorted(
+        inferred.collect())
+    assert read_extracted(spark, out).count() == len(_OK)  # warm
+    planned = read_extracted(spark, out)
+    assert _count_jobs(spark, "read_extracted_plan",
+                       lambda: read_extracted(spark, out))[0] == 0
+    n_planned, _ = _count_jobs(spark, "read_extracted_planned",
+                               planned.count)
+    assert _count_jobs(spark, "read_extracted_count",
+                       lambda: read_extracted(spark, out).count()
+                       ) == (n_planned, len(_OK))
+
+
 def test_commit_tail_duckdb_spills_into_its_dir_and_is_capped(tmp_path):
     """The commit tail's DuckDB spills into the dir it is given (the call's
     _staging/), not .tmp under the working directory, and may hold a

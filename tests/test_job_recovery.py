@@ -127,7 +127,7 @@ def test_half_written_staging_is_discarded(spark, tmp_path):
     assert read_extracted(spark, out).count() == 20
 
 
-def test_checkpoint_cas_rejects_stale_writer(spark, tmp_path):
+def test_checkpoint_cas_rejects_stale_writer(spark, tmp_path, merge_rows):
     """Two writers from the same base: the second flip must raise, not
     silently discard the first's delta (ADVICE low / VERDICT #4)."""
     root = str(tmp_path / "ck")
@@ -139,10 +139,10 @@ def test_checkpoint_cas_rejects_stale_writer(spark, tmp_path):
             rows, "url string, warc_ts timestamp, error_type string"
         )
 
-    store.merge_results(results(["https://a/1"]))
+    merge_rows(store, results(["https://a/1"]))
     base = store._manifest()
     # writer 1 lands a merge (advances the pointer past `base`)
-    store.merge_results(results(["https://a/2"]))
+    merge_rows(store, results(["https://a/2"]))
     # writer 2 derived its snapshot from `base` — its CAS must fail
     stale = store.read(spark)
     with pytest.raises(CheckpointConflict):
@@ -154,7 +154,8 @@ def test_checkpoint_cas_rejects_stale_writer(spark, tmp_path):
     store.overwrite(store.read(spark))
 
 
-def test_bucket_pruned_merge_touches_only_delta_buckets(spark, tmp_path):
+def test_bucket_pruned_merge_touches_only_delta_buckets(spark, tmp_path,
+                                                        merge_rows):
     """VERDICT #5: an incremental merge must rewrite ONLY the buckets
     containing delta keys — O(touched), never O(|checkpoint|)."""
     import json
@@ -169,7 +170,7 @@ def test_bucket_pruned_merge_touches_only_delta_buckets(spark, tmp_path):
         )
 
     # seed: 200 keys spread across (almost surely) all 8 buckets
-    store.merge_results(results([f"https://seed/{i}" for i in range(200)]))
+    merge_rows(store, results([f"https://seed/{i}" for i in range(200)]))
     m1 = store._manifest()
     assert m1["n_buckets"] == 8
     assert len(m1["buckets"]) == 8
@@ -177,7 +178,7 @@ def test_bucket_pruned_merge_touches_only_delta_buckets(spark, tmp_path):
     assert len(v1) == 1  # fresh write: one version holds everything
 
     # incremental: ONE key → exactly one bucket may move to a new version
-    store.merge_results(results(["https://delta/only-one"]))
+    merge_rows(store, results(["https://delta/only-one"]))
     m2 = store._manifest()
     moved = {b for b in m2["buckets"] if m2["buckets"][b] not in v1}
     assert len(moved) == 1
@@ -196,57 +197,42 @@ def test_bucket_pruned_merge_touches_only_delta_buckets(spark, tmp_path):
     with open(os.path.join(root, "_CURRENT"), encoding="utf-8") as f:
         assert json.load(f) == m2
     # vacuum keeps every referenced version even when old
-    store.merge_results(results(["https://delta/two"]))
+    merge_rows(store, results(["https://delta/two"]))
     store.vacuum(keep=1)
     for v in set(store._manifest()["buckets"].values()):
         assert os.path.isdir(os.path.join(root, v))
     assert store.read(spark).count() == 202
 
 
-def test_local_and_spark_merge_paths_agree(spark, tmp_path):
-    """merge_results_local (driver-side pyarrow) must produce exactly the
-    same checkpoint state as merge_results (Spark) for the same passes —
-    including retry/dead-letter transitions across multiple merges."""
+def test_local_and_spark_merge_paths_agree(spark, tmp_path,
+                                           iceberg_merge_passes):
+    """The Parquet store's DuckDB merge and the Iceberg store's Spark path
+    (its ``merge_passes`` read of each pass dir, and its MERGE's fold and
+    transition text in Spark SQL) must leave the same checkpoint for the
+    same job-shaped pass dirs — including retry/dead-letter transitions,
+    merged one pass at a time and folded in one merge."""
     from gemini_ocr_batch_spark.schemas import EXTRACTED_SCHEMA
-    from pyspark.sql import types as T
-
-    staged_schema = T.StructType(
-        list(EXTRACTED_SCHEMA.fields)
-        + [T.StructField("is_ok", T.BooleanType(), True)]
-    )
 
     def write_pass(path, rows):
-        """rows: [(url, error_type)] — minimal staged pass parquet."""
-        df = spark.createDataFrame(
-            [
-                (u, _TS, None, None, None, "v", err, None, None, 0, 0, 0,
-                 err is None)
-                for u, err in rows
-            ],
-            schema="url string, warc_ts timestamp, extracted_text string, "
-            "spans array<struct<start:long,end:long,kind:string>>, "
-            "content_kind string, extractor_version string, "
-            "error_type string, error_message string, input_sample string, "
-            "partition_id int, bytes_in long, kernel_ns long, is_ok boolean",
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-        return df
+        """rows: [(url, error_type)] — a pass dir laid out as the job
+        promotes it (EXTRACTED_SCHEMA under is_ok=… hive dirs)."""
+        spark.createDataFrame(
+            [(u, _TS, None, None, None, "v", err, None, None, 0, 0, 0)
+             for u, err in rows],
+            EXTRACTED_SCHEMA,
+        ).withColumn("is_ok", F.col("error_type").isNull()).write \
+            .partitionBy("is_ok").parquet(path)
 
+    # a success, a retry to success and a retry to dead
     passes = [
         [("https://a/ok1", None), ("https://a/bad1", "KernelError"),
          ("https://b/bad2", "DecodeError")],
         [("https://a/bad1", "KernelError"), ("https://b/bad2", None)],
         [("https://a/bad1", "KernelError")],
     ]
-    local_store = ParquetCheckpointStore(str(tmp_path / "ck_local"),
-                                         max_retries=3, n_buckets=4)
-    spark_store = ParquetCheckpointStore(str(tmp_path / "ck_spark"),
-                                         max_retries=3, n_buckets=4)
-    for i, rows in enumerate(passes):
-        p = str(tmp_path / f"pass{i}")
-        df = write_pass(p, rows)
-        assert local_store.merge_results_local(p) is True
-        spark_store.merge_results(df.select("url", "warc_ts", "error_type"))
+    paths = [str(tmp_path / f"pass_num={i}") for i in range(len(passes))]
+    for p, rows in zip(paths, passes):
+        write_pass(p, rows)
 
     def state(store):
         return {
@@ -254,23 +240,27 @@ def test_local_and_spark_merge_paths_agree(spark, tmp_path):
             for r in store.read(spark).collect()
         }
 
-    sl, ss = state(local_store), state(spark_store)
-    assert sl == ss
-    assert sl["https://a/ok1"] == ("success", 1, None)
-    assert sl["https://b/bad2"] == ("success", 2, "DecodeError")
-    assert sl["https://a/bad1"] == ("dead", 3, "KernelError")
-    # and the two stores interoperate: a Spark merge on top of a
-    # pyarrow-written snapshot (mixed-writer files must read identically)
-    extra = spark.createDataFrame(
-        [("https://c/new", _TS, None)],
-        "url string, warc_ts timestamp, error_type string",
-    )
-    local_store.merge_results(extra)
-    assert state(local_store)["https://c/new"] == ("success", 1, None)
+    one_by_one = ParquetCheckpointStore(str(tmp_path / "ck_each"),
+                                        max_retries=3, n_buckets=4)
+    spark_each: dict = {}
+    for p in paths:
+        one_by_one.merge_passes([p])
+        spark_each = iceberg_merge_passes(spark_each, [p], 3)
+    folded = ParquetCheckpointStore(str(tmp_path / "ck_folded"),
+                                    max_retries=3, n_buckets=4)
+    folded.merge_passes(paths)
+
+    got = state(one_by_one)
+    assert got["https://a/ok1"] == ("success", 1, None)
+    assert got["https://b/bad2"] == ("success", 2, "DecodeError")
+    assert got["https://a/bad1"] == ("dead", 3, "KernelError")
+    assert state(folded) == got
+    assert spark_each == got
+    assert iceberg_merge_passes({}, paths, 3) == got
 
 
-def test_concurrent_merges_never_lose_updates(spark, tmp_path):
-    """Lost-update stress: concurrent writers racing merge_results must
+def test_concurrent_merges_never_lose_updates(spark, tmp_path, merge_rows):
+    """Lost-update stress: concurrent writers racing merge_passes must
     either serialize or raise CheckpointConflict — after conflict-retry,
     every writer's keys are present exactly once with correct status."""
     import threading
@@ -293,7 +283,7 @@ def test_concurrent_merges_never_lose_updates(spark, tmp_path):
         )
         for _attempt in range(30):
             try:
-                store.merge_results(df)
+                merge_rows(store, df)
                 return
             except CheckpointConflict:
                 conflicts[0] += 1
@@ -322,7 +312,8 @@ def test_concurrent_merges_never_lose_updates(spark, tmp_path):
             assert state[f"https://w{w}/k{i}"] == expected, (w, i)
 
 
-def test_dead_writer_lock_never_bricks_the_store(spark, tmp_path):
+def test_dead_writer_lock_never_bricks_the_store(spark, tmp_path,
+                                                 merge_rows):
     """flock semantics: a lock file left behind by a killed writer is
     already released by the kernel — the next merge just acquires it.
     A lock held by a LIVE process is honored (clear timeout, no breaking)."""
@@ -351,7 +342,7 @@ def test_dead_writer_lock_never_bricks_the_store(spark, tmp_path):
         [("https://a/1", _TS, None)],
         "url string, warc_ts timestamp, error_type string",
     )
-    store.merge_results(rows)  # kernel released the dead child's flock
+    merge_rows(store, rows)  # kernel released the dead child's flock
     assert store.read(spark).count() == 1
     assert os.path.exists(lock)  # the lock FILE persists by design
     # live holder: this process takes the flock on a separate descriptor
@@ -367,20 +358,20 @@ def test_dead_writer_lock_never_bricks_the_store(spark, tmp_path):
 
 
 def test_empty_promoted_pass_dir_reconciles_cleanly(spark, tmp_path):
-    """merge_results_local on a dir with no data files is a clean no-op
-    (True), never an exception or a phantom 'merged'."""
+    """merge_passes of a dir with no data files is a clean no-op, never
+    an exception or a phantom 'merged'."""
     root = str(tmp_path / "ck")
     store = ParquetCheckpointStore(root, max_retries=3)
     empty = tmp_path / "pass_empty"
     empty.mkdir()
     (empty / "_SUCCESS").write_text("")
-    assert store.merge_results_local(str(empty)) is True
+    store.merge_passes([str(empty)])
     assert store._manifest() is None  # nothing flipped
 
 
-def test_mark_running_visibility(spark, tmp_path):
+def test_mark_running_visibility(spark, tmp_path, merge_rows):
     """mark_running stamps inflight keys without lease semantics: pending
-    still returns them, and merge_results transitions them off running."""
+    still returns them, and merge_passes transitions them off running."""
     root = str(tmp_path / "ck")
     store = ParquetCheckpointStore(root, max_retries=3)
     pages = _good_pages(spark, n=6)
@@ -392,7 +383,7 @@ def test_mark_running_visibility(spark, tmp_path):
     done = pages.select(
         "url", "warc_ts", F.lit(None).cast("string").alias("error_type")
     )
-    store.merge_results(done)
+    merge_rows(store, done)
     snap = store.read(spark)
     assert snap.filter(F.col("status") == "running").count() == 0
     assert snap.filter(F.col("status") == "success").count() == 6
@@ -628,8 +619,7 @@ def test_crash_between_attempts_resumes_to_uninterrupted_state(
     if crash_at == "merge_attempt_0":
         def crash(self, path, *a, **k):
             raise _Crash(path)
-        monkeypatch.setattr(ParquetCheckpointStore, "merge_results_local",
-                            crash)
+        monkeypatch.setattr(ParquetCheckpointStore, "merge_passes", crash)
     else:
         real = os.rename
 
@@ -728,42 +718,23 @@ def test_one_manifest_flip_per_call(spark, tmp_path, monkeypatch):
     assert flips[0]["commit"] == [f"run_id=b/pass_num={k}" for k in range(3)]
 
 
-def test_spark_merge_path_agrees_for_a_call(spark, tmp_path, monkeypatch):
-    """A store without a driver-side merge (the Iceberg path:
-    merge_results_local returns False) gets the Spark MERGE; the call must
-    leave the same checkpoint, pass dirs, failure rows and lineage sums as
-    the default DuckDB merge."""
-    pages = _mixed_pages(spark)
-
-    def run(out):
-        res = run_extraction_job(spark, pages, out, max_retries=3,
-                                 run_id="r")
-        failures = sorted(
-            (r["url"], r["error_type"], r["attempts"]) for r in
-            spark.read.parquet(os.path.join(out, "failures")).collect())
-        lineage = sorted(
-            (r["pass_num"], r["row_count"], r["failure_count"]) for r in
-            spark.read.parquet(os.path.join(out, "lineage")).groupBy(
-                "pass_num").agg(F.sum("row_count").alias("row_count"),
-                                F.sum("failure_count").alias("failure_count")
-                                ).collect())
-        return ((res.passes, res.extracted_rows, res.failed_rows),
-                _state(spark, out), _passes_of(out), failures, lineage)
-
-    local = run(str(tmp_path / "local"))
-    merged = []
-    real_merge = ParquetCheckpointStore.merge_results
-
-    def spark_merge(self, *a, **k):
-        merged.append(1)
-        return real_merge(self, *a, **k)
-    monkeypatch.setattr(ParquetCheckpointStore, "merge_results_local",
-                        lambda *a, **k: False)
-    monkeypatch.setattr(ParquetCheckpointStore, "merge_results", spark_merge)
-    assert run(str(tmp_path / "spark")) == local
-    assert merged == [1]
-    assert local[0] == (3, 12 + 4 * 3, 4 * 3)
-    assert local[4] == [(0, 16, 4), (1, 4, 4), (2, 4, 4)]
+def test_spark_merge_path_agrees_for_a_call(spark, tmp_path,
+                                            iceberg_merge_passes):
+    """The Iceberg store's Spark merge path, given one call's promoted
+    pass dirs in pass order, must fold them to the checkpoint that the
+    call's own DuckDB merge left."""
+    out = str(tmp_path / "out")
+    res = run_extraction_job(spark, _mixed_pages(spark), out,
+                             max_retries=3, run_id="r")
+    assert (res.passes, res.extracted_rows, res.failed_rows) == (
+        3, 12 + 4 * 3, 4 * 3)
+    run_dir = os.path.join(out, "extracted_all", "run_id=r")
+    paths = [os.path.join(run_dir, f"pass_num={k}") for k in range(3)]
+    assert sorted(os.listdir(run_dir)) == sorted(
+        os.path.basename(p) for p in paths)
+    want = _state(spark, out)
+    assert len(want) == 16
+    assert iceberg_merge_passes({}, paths, 3) == want
 
 
 def test_lineage_and_failure_files_keep_their_parquet_types(spark, tmp_path):
@@ -862,8 +833,7 @@ def test_crash_then_rerun_logs_each_promoted_pass_once(
     elif crash_at == "merge_attempt_0":
         def merge(self, *a, **k):
             raise _Crash("merge")
-        monkeypatch.setattr(ParquetCheckpointStore, "merge_results_local",
-                            merge)
+        monkeypatch.setattr(ParquetCheckpointStore, "merge_passes", merge)
     else:
         real_touch = job._touch
         stamped = []

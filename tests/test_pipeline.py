@@ -196,7 +196,7 @@ def test_salting_spreads_partitions(spark, pages_df):
         assert giants["partition_id"].nunique() > 1
 
 
-def test_checkpoint_merge_transitions(spark, tmp_path):
+def test_checkpoint_merge_transitions(spark, tmp_path, merge_rows):
     """Unit-level MERGE semantics (reference: src/prefect_state.py:111-199)."""
     import datetime as dt
 
@@ -213,10 +213,10 @@ def test_checkpoint_merge_transitions(spark, tmp_path):
         F.lit("v").alias("extractor_version"), "error_type",
         "partition_id", "bytes_in", "kernel_ns",
     )
-    store.merge_results(mk([("a", "html", None), ("b", "html", "KernelError")]))
+    merge_rows(store, mk([("a", "html", None), ("b", "html", "KernelError")]))
     state = {r["url"]: (r["status"], r["attempts"]) for r in store.read(spark).collect()}
     assert state == {"a": ("success", 1), "b": ("failed", 1)}
-    store.merge_results(mk([("b", "html", "KernelError"), ("c", "html", None)]))
+    merge_rows(store, mk([("b", "html", "KernelError"), ("c", "html", None)]))
     state = {r["url"]: (r["status"], r["attempts"]) for r in store.read(spark).collect()}
     assert state["b"] == ("dead", 2)  # max_retries=2 reached
     assert state["a"] == ("success", 1)
